@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every posted event, so the
+  * benchmark's counters are complete before they are read. The bus is
+  * package-private to Spark, hence this package. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
