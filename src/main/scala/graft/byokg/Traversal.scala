@@ -1,6 +1,8 @@
 package graft.byokg
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import graft.ops.Joins
 import graft.ops.Joins.gatedBroadcast
@@ -796,37 +798,65 @@ object Traversal {
     * (measured ~2.5x slower). Storage material: memoize per graph (the
     * Tables layer does) and reuse across runs. */
   /** Partition count for cached store layouts: max(cores-derived floor,
-    * size-derived count). The floor (parallelism/4, min 4) keeps the
-    * few-MB test-scale frames in few substantial partitions instead of
-    * scattering slivers across every core — at 32 shuffle partitions each
-    * HITS/PageRank ROUND paid ~32 near-empty edge-side tasks plus a
-    * matching reduce fan-out (ENSURE_REQUIREMENTS matches the cached
-    * side's count), pure scheduling overhead on an iterative path. The
-    * size-derived term (optimizer size estimate / 128 MB target) takes
-    * over at real scale so large edge layouts can never collapse into
-    * cores/4 multi-GB cached partitions (round-11 ADVICE): it is the same
-    * size/target-partition-bytes rule a 100 TB run derives bucket counts
-    * from, now actually computed instead of asserted. */
+    * size-derived count, input-derived count), the last two capped at 2^15.
+    * The floor (parallelism/4, min 4) keeps the few-MB test-scale frames in
+    * few substantial partitions instead of scattering slivers across every
+    * core — at 32 shuffle partitions each HITS/PageRank ROUND paid ~32
+    * near-empty edge-side tasks plus a matching reduce fan-out
+    * (ENSURE_REQUIREMENTS matches the cached side's count), pure scheduling
+    * overhead on an iterative path. The size-derived term (optimizer size
+    * estimate / 128 MB target) takes over at real scale so large edge
+    * layouts can never collapse into cores/4 multi-GB cached partitions: it
+    * is the same size/target-partition-bytes rule a 100 TB run derives
+    * bucket counts from.
+    *
+    * Only an estimate that MEASURES data feeds the size term: scan sizes
+    * and materialized caches (whose stats are the bytes actually cached).
+    * Without CBO a join's estimate is the PRODUCT of its children's sizes —
+    * a bound, not a size — and it overshoots most at small scale, where the
+    * floor is meant to decide. At sf0.001 under local[4] the triangle
+    * layout's input (degree-joined pairs) estimated 1.53 GB (12 partitions)
+    * and the weighted adjacency's eW — a not-yet-materialized cache over
+    * und.join(sw), whose stats are still its plan's — 2.15 GB (16
+    * partitions) for a layout that caches 292 KB. So a plan holding a Join,
+    * also under a cache that is not materialized yet, drops the size term
+    * and the input term decides. At real scale the 1 TB guard already
+    * rejects most join products (the LPA input estimates 5.9e42 bytes); a
+    * checkpoint keeps its origin's estimate with no plan to inspect, so
+    * that guard is its only check. */
   private def storeParts(df: DataFrame): Int = {
     val floor = math.max(4, df.sparkSession.sparkContext.defaultParallelism / 4)
+    val cap = 1 << 15
     val targetBytes = BigInt(128L << 20)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val est = plan.stats.sizeInBytes
     // stats are ESTIMATES and default to the Long.MaxValue sentinel on
     // RDD-backed plans (localCheckpoint/cache lineage) — trusting that
     // verbatim planned 2^20-partition layouts whose million 1.7 MB task
-    // closures took the warmup from seconds to stuck (measured this
-    // round). Only a plausible estimate (< 1 TB here: layouts above that
-    // should come from a real catalog with real stats) contributes; the
-    // sentinel/garbage case falls back to the cores floor.
+    // closures took the warmup from seconds to stuck. Only a plausible
+    // data estimate (< 1 TB here: layouts above that should come from a
+    // real catalog with real stats) contributes; the sentinel/garbage and
+    // join-bound cases fall back to the other terms.
     val bySize =
-      if (est <= 0 || est > BigInt(1L << 40)) 0
-      else ((est + targetBytes - 1) / targetBytes).min(BigInt(1 << 15)).toInt
+      if (est <= 0 || est > BigInt(1L << 40) || joinBound(plan)) 0
+      else ((est + targetBytes - 1) / targetBytes).min(BigInt(cap)).toInt
     // input-partition term: when stats are the sentinel (every RDD-backed
     // lineage) the upstream partition count still tracks data size — a
     // 100k-split edge scan keeps ≥ 25k layout partitions instead of
     // collapsing to cores/4 multi-GB cached partitions
     val byInput = df.queryExecution.toRdd.getNumPartitions / 4
-    math.max(floor, math.max(bySize, byInput))
+    math.max(floor, math.min(cap, math.max(bySize, byInput)))
+  }
+
+  /** Whether `plan`'s size estimate is a join's product bound: a Join in
+    * it, or in the plan of a cache that is not materialized yet (a
+    * materialized cache reports the bytes it holds). */
+  private def joinBound(plan: LogicalPlan): Boolean = plan.exists {
+    case _: Join => true
+    case r: InMemoryRelation =>
+      !r.cacheBuilder.isCachedColumnBuffersLoaded &&
+        joinBound(r.cacheBuilder.logicalPlan)
+    case _ => false
   }
 
   def hitsLayout(eDeg: DataFrame): (DataFrame, DataFrame) = {

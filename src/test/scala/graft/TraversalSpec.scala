@@ -1,6 +1,8 @@
 package graft
 
 import graft.byokg.Traversal
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 
 class TraversalSpec extends SparkSpec {
@@ -399,5 +401,35 @@ class TraversalSpec extends SparkSpec {
     assert(hintCount(capped) == 0, "capped peel must not hint a broadcast")
     assert(capped.as[(String, Long)].collect().toMap ==
       Map("x" -> 2L, "y" -> 2L, "z" -> 2L))
+  }
+
+  test("store layouts are sized off measured data, not a join's product " +
+    "bound, also under a cache that is not materialized yet") {
+    // two 4000-row ranges: without CBO the join estimates the PRODUCT of
+    // their sizes (~1 GB), which the 128 MB size term would turn into 9
+    // partitions of a layout that holds under 100 KB
+    val floor = math.max(4, spark.sparkContext.defaultParallelism / 4)
+    val joined = spark.range(4000).toDF("src")
+      .join(spark.range(4000).select(col("id").as("src"),
+        (col("id") % 7).as("dst")), "src")
+    assert(joined.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(floor.toLong * (128L << 20)), "precondition: product bound")
+    def layoutParts(eDeg: org.apache.spark.sql.DataFrame): Int = {
+      val layout = Traversal.pageRankAdjacencyByDst(eDeg)
+      try layout.rdd.getNumPartitions finally layout.unpersist(false)
+    }
+    assert(layoutParts(joined) == floor, "plain join")
+    // a plan built after cache() reads an InMemoryRelation in place of the
+    // join, and its stats stay the join's until the cache is materialized
+    joined.cache()
+    try {
+      val overCache = joined.select("src", "dst")
+      val plan = overCache.queryExecution.optimizedPlan
+      assert(!plan.exists(_.isInstanceOf[Join]) &&
+        plan.exists(_.isInstanceOf[InMemoryRelation]) &&
+        plan.stats.sizeInBytes > BigInt(floor.toLong * (128L << 20)),
+        "precondition: an unmaterialized cache hides the join")
+      assert(layoutParts(overCache) == floor, "unmaterialized cache")
+    } finally joined.unpersist(false)
   }
 }
