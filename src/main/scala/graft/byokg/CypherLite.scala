@@ -1652,11 +1652,15 @@ object CypherLite {
             col("id").cast("string") === col("__k"), "left_semi")
           .localCheckpoint(false)
       }
+      // the lookup compares string-cast ids, as the prune above does: a
+      // prune can then never drop a row this join would match, and a
+      // double binding never meets a long id through double coercion
       sortedNeeded.foreach { case (v, ps) =>
         val src = prefiltered.getOrElse(props)
         val pf = src.select(col("id").as(s"__${v}__id") +:
           ps.toSeq.sorted.map(p => col(p).as(s"__${v}__$p")): _*)
-        df = df.join(pf, df(v) === pf(s"__${v}__id"), "left")
+        df = df.join(pf,
+          df(v).cast("string") === pf(s"__${v}__id").cast("string"), "left")
           .drop(s"__${v}__id")
       }
     }

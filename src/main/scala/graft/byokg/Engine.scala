@@ -1,8 +1,9 @@
 package graft.byokg
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.functions.CosineSimilarity
 import graft.llm.{LLM, QueryOps}
 
@@ -53,88 +54,116 @@ object EntityLinker {
  * relation-selection turn behind the [[LLM]] trait (StubLLM keeps it
  * deterministic: relations are chosen by token overlap with the question).
  *
- * The loop is driver-side, but each iteration issues ONE bounded Spark job
- * over the frontier; only the (tiny) distinct relation list is collected to
- * build the selection prompt — exactly the data the reference puts in its
- * prompt.
+ * The frontier lives on the driver, as the reference's does: each hop is a
+ * [[Traversal.HopProbe]] lookup, one Spark job for the frontier nodes the
+ * probe has not fetched yet, and the relation choice and the top-degree
+ * frontier run on the collected rows. The relation labels of a hop are
+ * exactly the data the reference puts in its selection prompt. The seeds
+ * and every hop's rows come to the driver, so seeds should be a bounded
+ * set such as linked mentions.
  */
 object AgenticRetriever {
 
   def retrieve(edges: DataFrame, seeds: DataFrame, question: String, llm: LLM,
-               iterations: Int = 2, topEntities: Int = 8): DataFrame =
-   graft.ops.Joins.boundedLoop(edges.sparkSession) {
+               iterations: Int = 2, topEntities: Int = 8): DataFrame = {
+    val probe = new Traversal.HopProbe(edges)
+    val nodes = seeds.select(col("node")).distinct().collect().map(_.get(0))
+    probe.frame(expand(probe, nodes.toSeq, question, llm, iterations,
+      topEntities).distinct)
+  }
+
+  /** The agentic loop over a driver-side frontier: the kept triplets of
+    * every iteration, duplicates included. */
+  private[byokg] def expand(probe: Traversal.HopProbe, seeds: Seq[Any],
+                            question: String, llm: LLM, iterations: Int,
+                            topEntities: Int): Seq[Row] = {
     val qTokens = QueryOps.keywords(llm, question, maxKeywords = 8).toSet
-    // lazy checkpoints: each frame's first action (the labels collect of
-    // the following hop, or the final distinct) materializes the persist as
-    // part of that job — same rows and caching as the eager form, one job
-    // per turn instead of two
-    var frontier = seeds.select(col("node")).distinct().localCheckpoint(false)
-    var acc: DataFrame = null
+    val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var frontier = seeds
     for (_ <- 1 to iterations) {
-      val hop = Traversal.oneHop(edges, frontier)
+      val hop = probe.hop(frontier)
       // Relation-selection turn: candidate labels -> prompt -> chosen subset.
-      val labels = hop.select(col("label")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      val chosen = labels.filter(l =>
-        l.toLowerCase.split("[^a-z0-9]+").exists(qTokens.contains)) match {
-        case Nil => labels // nothing matches: keep all (reference fallback)
-        case cs => cs
-      }
-      val filtered = hop.filter(col("label").isin(chosen: _*))
-        .localCheckpoint(false)
-      acc = if (acc == null) filtered else acc.union(filtered)
-      // Next entities: strongest by in-frontier degree, capped. `filtered`
-      // is already checkpointed, so this projection stays flat lazily.
-      frontier = filtered.groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-        .orderBy(desc("deg"), col("dst"))
-        .limit(topEntities)
-        .select(col("dst").as("node"))
+      // A null label never survives, as `label IN (...)` drops it.
+      val labels = hop.map(_.getString(probe.labelAt)).filter(_ != null).toSet
+      val matched = labels.filter(l =>
+        l.toLowerCase.split("[^a-z0-9]+").exists(qTokens.contains))
+      // nothing matches: keep all (reference fallback)
+      val chosen = if (matched.isEmpty) labels else matched
+      val kept = hop.filter(r => chosen.contains(r.getString(probe.labelAt)))
+      acc ++= kept
+      // Next entities: strongest by in-frontier degree (duplicate edges
+      // count), ties on the node in Spark's order, capped.
+      frontier = kept.groupBy(_.get(probe.dstAt)).toSeq
+        .map { case (d, rs) => (d, rs.size) }
+        .sortWith { case ((d1, n1), (d2, n2)) =>
+          n1 > n2 || n1 == n2 && Traversal.sparkOrder.lt(d1, d2) }
+        .take(topEntities).map(_._1)
     }
-    acc.distinct()
-   }
+    acc.toSeq
+  }
 }
 
 /**
  * KGQA driver (reference byokg_query_engine.py:119-260): link the question's
  * mentions into the graph, run agentic triplet retrieval + bounded k-hop
  * path retrieval, verbalize, and assemble an order-preserving-deduped
- * context. LLM turns (linking prompts, answer generation) stay on the
- * driver; every expansion is a Spark job.
+ * context. The engine holds the distinct node vocabulary of `edges` as a
+ * cached frame: construction runs no Spark job, and the first link job
+ * fills the cache. A question then costs one link job, which collects at
+ * most one node per mention, plus one probe job per hop frontier with
+ * nodes not fetched yet. The k-hop and agentic retrievers share one
+ * [[Traversal.HopProbe]] per call, and the context is assembled on the
+ * driver from the collected rows, as the reference assembles its list.
  */
 final class ByoKGQueryEngine(edges: DataFrame, llm: LLM,
                              iterations: Int = 2) {
 
+  /** Distinct `src ∪ dst` nodes, cached lazily. A lazy val: registering
+    * the cache plans the query (60-90 ms on the benchmark's 449k edges),
+    * which the first question pays instead of the set-up. */
+  private[graft] lazy val vocabulary: DataFrame =
+    edges.select(col("src").as("node")).union(edges.select(col("dst")))
+      .distinct().cache()
+
   /** Returns (text, first_seen) in true first-seen order: the agentic
     * retriever's context arrives before the k-hop context (the order
     * _add_to_context appends in, byokg_query_engine.py:101-116 + 173-178),
-    * and a line seen by both keeps its earliest position. Each source frame
-    * carries an arrival-order column; dedup takes min(order) per text and
-    * ranks by it — the q_orderpreserve_dedup pattern, NOT an alphabetical
-    * window. The global windows are safe: this is the final LLM context,
-    * bounded by the retrieval caps to O(100) lines. */
+    * and a line seen by both keeps its earliest position. Within a
+    * retriever, lines rank by text in Spark's binary string order (the
+    * reference's store-iteration order isn't reproducible on a distributed
+    * frame). The result is a driver-local frame; calls on one engine may
+    * run concurrently. */
   def retrieveContext(question: String, mentions: Seq[String]): DataFrame = {
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst")))
-      .distinct()
-    val linked = EntityLinker.fuzzyLink(nodes, "node", mentions, k = 1)
-      .select(col("node"))
-    val agentic = AgenticRetriever.retrieve(edges, linked, question, llm,
-      iterations)
-    val khop = Traversal.kHopTriplets(edges, linked, iterations)
-    // arrival order: retriever priority, then a stable within-retriever rank
-    // (the reference's store-iteration order isn't reproducible on a
-    // distributed frame, so each retriever's lines rank deterministically)
-    def ordered(df: DataFrame, priority: Int): DataFrame =
-      Traversal.verbalizeTriplets(df).withColumn("ord",
-        lit(priority.toLong * 1000000L) +
-          row_number().over(Window.orderBy(col("text"))))
-    val context = ordered(agentic, 0).union(ordered(khop.distinct(), 1))
-    context.groupBy(col("text"))
-      .agg(min(col("ord")).as("min_ord"))
-      .withColumn("first_seen",
-        row_number().over(Window.orderBy(col("min_ord"))))
-      .drop("min_ord")
+    val linked: Seq[Any] =
+      if (mentions.isEmpty) Nil
+      else EntityLinker.fuzzyLink(vocabulary, "node", mentions, k = 1)
+        .select(col("node")).collect().map(_.get(0)).toSeq.distinct
+    val probe = new Traversal.HopProbe(edges)
+    // k-hop first: its hop-h frontier holds the agentic hop-h frontier, so
+    // the agentic expansion finds every hop in the probe's memo
+    val (khopRows, rest) =
+      Traversal.kHopFrom(probe, linked, iterations, graft.ops.Joins.BroadcastRowCap)
+    val khop = khopRows ++ rest.fold(Seq.empty[Row])(_.collect().toSeq)
+    val agentic = AgenticRetriever.expand(probe, linked, question, llm,
+      iterations, topEntities = 8)
+    def lines(rows: Seq[Row]): Seq[String] =
+      rows.distinct.map(verbalize(probe, _)).sorted(Traversal.sparkOrder)
+    val context = (lines(agentic) ++ lines(khop)).distinct
+      .zipWithIndex.map { case (text, i) => Row(text, i + 1) }
+    edges.sparkSession.createDataFrame(context.asJava, ByoKGQueryEngine.ContextSchema)
   }
+
+  /** [[Traversal.verbalizeTriplets]] on one row: `concat_ws` skips a null
+    * part, and a null label nulls its bracketed part. */
+  private def verbalize(probe: Traversal.HopProbe, r: Row): String =
+    Seq(r.get(0), Option(r.get(probe.labelAt)).map(l => s"[$l]").orNull,
+      r.get(probe.dstAt)).filter(_ != null).mkString(" ")
+}
+
+object ByoKGQueryEngine {
+  private val ContextSchema: StructType = StructType(Seq(
+    StructField("text", StringType, nullable = false),
+    StructField("first_seen", IntegerType, nullable = false)))
 }
 
 /**

@@ -1,9 +1,13 @@
 package graft.byokg
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.Joins
 import graft.ops.Joins.gatedBroadcast
 
@@ -17,6 +21,9 @@ import graft.ops.Joins.gatedBroadcast
  * broadcasts it only while the counted size stays under
  * [[graft.ops.Joins.BroadcastRowCap]] — a dense graph's layer-2 frontier is
  * not broadcastable, and an unconditional hint would OOM the driver at scale.
+ * The KGQA retrievers (k-hop, agentic) instead probe the edge frame for a
+ * frontier that is on the driver ([[Traversal.HopProbe]]) and keep the
+ * expansion there while the frontier stays under the same cap.
  * Depths are bounded (k, metapath length), so the driver loop issues
  * O(depth) jobs, never O(nodes).
  */
@@ -61,23 +68,126 @@ object Traversal {
     e.join(broadcast(frontier.select(col("node").as("src")).distinct()), Seq("src"))
   }
 
+  /** Spark's ascending order on a column value, nulls first: strings
+    * compare as UTF-8 bytes (`UTF8String.compareTo`), which differs from
+    * `String.compareTo` past the BMP. Driver-side ranking of collected
+    * rows uses it so ties break exactly as an `orderBy` would. */
+  private[byokg] val sparkOrder: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  /**
+   * Driver-side memo of one-hop expansions, the reference's adjacency-map
+   * lookup (graph_traversal.py:14-79) over a Spark edge frame: for the
+   * frontier nodes it has not seen yet, one Spark job collects
+   * `edges.filter(src IN <literal frontier>)`, and the rows stay on the
+   * driver for every later hop that reaches the same nodes. Rows keep the
+   * column order of `edges.join(frontier, Seq("src"))` and the edge
+   * multiplicity. One probe serves one call: it is not thread-safe, and it
+   * holds every row it fetched, so callers probe only bounded frontiers.
+   */
+  final class HopProbe(edgeFrame: DataFrame) {
+    val edges: DataFrame = edgeFrame.select(
+      col("src") +: edgeFrame.columns.filter(_ != "src").map(col).toIndexedSeq: _*)
+    val schema: StructType = edges.schema
+    val dstAt: Int = schema.fieldIndex("dst")
+    val labelAt: Int = schema.fieldIndex("label")
+    private val memo = mutable.HashMap.empty[Any, Vector[Row]]
+
+    /** The out-edges of `frontier`'s distinct non-null nodes, duplicates
+      * kept; a null node, like a null join key, matches nothing. */
+    def hop(frontier: Seq[Any]): Seq[Row] = {
+      val nodes = frontier.filter(_ != null).distinct
+      val fresh = nodes.filterNot(memo.contains)
+      if (fresh.nonEmpty) {
+        val got = edges.filter(col("src").isin(fresh: _*)).collect()
+          .groupBy(_.get(0))
+        fresh.foreach(n => memo(n) = got.get(n).fold(Vector.empty[Row])(_.toVector))
+      }
+      nodes.flatMap(memo)
+    }
+
+    /** `rows` as a driver-local frame of the probe's schema. */
+    def frame(rows: Seq[Row]): DataFrame =
+      edges.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
   /** k-hop triplet expansion: union of triplets reached within k hops
-    * (reference graph_traversal.py:94-113). Each hop's frontier is
-    * checkpointed and counted; the count both gates the broadcast and
-    * early-exits the loop when the frontier drains. k <= 0 yields an empty
-    * triplet frame. */
+    * (reference graph_traversal.py:94-113). The distinct seeds come to the
+    * driver. While a hop's frontier holds at most [[Joins.BroadcastRowCap]]
+    * nodes, the hop is a [[HopProbe]] job whose rows stay on the driver;
+    * from the first frontier past the cap, each hop joins the edge frame
+    * against the counted frontier (`gatedBroadcast`), as the whole
+    * expansion does when the seeds pass it. A fully probed expansion is a
+    * driver-local frame. The loop exits early when the frontier drains.
+    * k <= 0 yields an empty triplet frame. */
   def kHopTriplets(edges: DataFrame, seeds: DataFrame, k: Int,
-                   undirected: Boolean = false): DataFrame = {
+                   undirected: Boolean = false): DataFrame =
+    kHopTriplets(edges, seeds, k, undirected, Joins.BroadcastRowCap)
+
+  private[graft] def kHopTriplets(edges: DataFrame, seeds: DataFrame, k: Int,
+                                  undirected: Boolean, cap: Long): DataFrame = {
     val e = loopEdges(edges, undirected)
     if (k <= 0) return e.limit(0)
-    var (frontier, n) =
-      Joins.checkpointCount(seeds.select(col("node")).distinct())
+    val frontier = seeds.select(col("node")).distinct()
+    // at most cap + 1 seeds come to the driver; one past the cap sends the
+    // whole expansion down the join path
+    val nodes = frontier.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
+      .collect().map(_.get(0)).toSeq
+    if (nodes.size > cap) {
+      val (f, n) = Joins.checkpointCount(frontier)
+      return joinHops(e, f, n, k, cap)
+    }
+    val probe = new HopProbe(e)
+    val (rows, rest) = kHopFrom(probe, nodes, k, cap)
+    val local = probe.frame(rows.distinct)
+    rest.fold(local)(r => local.union(r).distinct())
+  }
+
+  /** The driver-side k-hop loop behind [[kHopTriplets]], over a frontier
+    * already on the driver: the rows of the probed hops, plus the
+    * distributed expansion of the remaining hops once a frontier passes
+    * `cap` nodes. */
+  private[byokg] def kHopFrom(probe: HopProbe, seeds: Seq[Any], k: Int,
+                              cap: Long): (Seq[Row], Option[DataFrame]) = {
+    val acc = mutable.ArrayBuffer.empty[Row]
+    var frontier = seeds.distinct
+    var hops = 0
+    while (hops < k && frontier.nonEmpty) {
+      if (frontier.size > cap) {
+        val s = probe.edges.sparkSession
+        val nodes = s.createDataFrame(frontier.map(Row(_)).asJava,
+          StructType(Seq(StructField("node", probe.schema(probe.dstAt).dataType))))
+        return (acc.toSeq, Some(joinHops(probe.edges, nodes, frontier.size, k - hops, cap)))
+      }
+      hops += 1
+      val hop = probe.hop(frontier)
+      acc ++= hop
+      if (hops < k) frontier = hop.map(_.get(probe.dstAt)).distinct
+    }
+    (acc.toSeq, None)
+  }
+
+  /** Up to k hops, each a join of the edge frame against the counted
+    * frontier, broadcast while it holds at most `cap` rows; each frontier
+    * after the first is checkpointed and counted. */
+  private def joinHops(e: DataFrame, seedFrontier: DataFrame, seedRows: Long,
+                       k: Int, cap: Long): DataFrame = {
+    var frontier = seedFrontier
+    var n = seedRows
     var acc: DataFrame = null
     var hops = 0
     while (hops < k && n > 0) {
       hops += 1
       val hop = e.join(
-        gatedBroadcast(frontier.select(col("node").as("src")), n), Seq("src"))
+        gatedBroadcast(frontier.select(col("node").as("src")), n, cap), Seq("src"))
       acc = if (acc == null) hop else acc.union(hop)
       if (hops < k) {
         val (f, c) =

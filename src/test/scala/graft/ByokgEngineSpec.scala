@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.byokg.{AgenticRetriever, ByoKGIterativeEngine, ByoKGQueryEngine,
   EntityLinker, GraphQueryRetriever, GraphQuerySafety, KGLinker,
   TokenOverlapReranker, Traversal}
-import graft.llm.{LLM, StubLLM}
+import graft.llm.{LLM, QueryOps, StubLLM}
 
 /** Replays canned responses in order — the deterministic stand-in for the
   * multi-turn KGLinker protocol. */
@@ -82,6 +86,177 @@ class ByokgEngineSpec extends SparkSpec {
     val agenticLine = ctx.indexOf("acme [founded_by] alice")
     val khopOnly = ctx.indexOf("acme [located_in] berlin")
     assert(agenticLine >= 0 && khopOnly >= 0 && agenticLine < khopOnly)
+  }
+
+  // ----- retrieveContext against a plain distributed composition -----
+
+  /** The KGQA context as a plain distributed composition: linking against
+    * the node set, the agentic loop and the k-hop expansion as joins over
+    * frames, and first-seen ranking with windows. */
+  private def plainContext(e: DataFrame, question: String,
+                           mentions: Seq[String],
+                           iterations: Int): Seq[(String, Int)] = {
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst"))).distinct()
+    val linked = EntityLinker.fuzzyLink(nodes, "node", mentions, k = 1)
+      .select(col("node")).distinct()
+    def hop(f: DataFrame) = e.join(f.select(col("node").as("src")), Seq("src"))
+    val qTokens = QueryOps.keywords(new StubLLM, question, maxKeywords = 8).toSet
+    var agentic = e.limit(0)
+    var frontier = linked
+    for (_ <- 1 to iterations) {
+      val h = hop(frontier)
+      val labels = h.select("label").distinct().as[String].collect().toSeq
+      val matched = labels.filter(
+        _.toLowerCase.split("[^a-z0-9]+").exists(qTokens.contains))
+      val kept = h.filter(
+        col("label").isin((if (matched.isEmpty) labels else matched): _*))
+      agentic = agentic.union(kept)
+      frontier = kept.groupBy("dst").agg(count(lit(1)).as("deg"))
+        .orderBy(desc("deg"), col("dst")).limit(8).select(col("dst").as("node"))
+    }
+    var khop = e.limit(0)
+    frontier = linked
+    for (_ <- 1 to iterations) {
+      val h = hop(frontier)
+      khop = khop.union(h)
+      frontier = h.select(col("dst").as("node")).distinct()
+    }
+    def ordered(df: DataFrame, priority: Long) =
+      Traversal.verbalizeTriplets(df.distinct()).withColumn("ord",
+        lit(priority * 1000000L) + row_number().over(Window.orderBy("text")))
+    ordered(agentic, 0).union(ordered(khop, 1))
+      .groupBy("text").agg(min("ord").as("min_ord"))
+      .withColumn("first_seen", row_number().over(Window.orderBy("min_ord")))
+      .select("text", "first_seen").as[(String, Int)].collect()
+      .sortBy(_._2).toSeq
+  }
+
+  private def context(engine: ByoKGQueryEngine, question: String,
+                      mentions: Seq[String]): Seq[(String, Int)] =
+    engine.retrieveContext(question, mentions)
+      .select("text", "first_seen").as[(String, Int)].collect()
+      .sortBy(_._2).toSeq
+
+  test("retrieveContext matches the plain composition: no mentions, two " +
+    "mentions of one node, and a frontier that drains after hop 1") {
+    val engine = new ByoKGQueryEngine(edges, new StubLLM, iterations = 2)
+    assert(context(engine, "who founded acme", Nil).isEmpty)
+    assert(plainContext(edges, "who founded acme", Nil, 2).isEmpty)
+    // "acmee" and "acme" both link acme
+    val twice = context(engine, "who founded acme", Seq("acmee", "acme"))
+    assert(twice == plainContext(edges, "who founded acme",
+      Seq("acmee", "acme"), 2))
+    assert(twice == context(engine, "who founded acme", Seq("acmee")))
+    // x -> y, and y has no out-edge: hop 2 finds nothing
+    val chain = Seq(("x", "y", "r"), ("p", "q", "r")).toDF("src", "dst", "label")
+    val drained = context(new ByoKGQueryEngine(chain, new StubLLM, 3),
+      "zzz", Seq("x"))
+    assert(drained == Seq(("x [r] y", 1)))
+    assert(drained == plainContext(chain, "zzz", Seq("x"), 3))
+  }
+
+  test("retrieveContext counts duplicate edges toward the agentic degree") {
+    // hub -> n0..n8 once each, hub -> n8 twice: the top-8 frontier by
+    // degree is n8 and n0..n6, so n7's out-edge is k-hop-only and ranks
+    // after the agentic n8 line
+    val out = (0 to 8).map(i => ("hub", s"n$i", "rel")) ++
+      Seq(("hub", "n8", "rel")) ++ (0 to 8).map(i => (s"n$i", s"leaf$i", "rel"))
+    val e = out.toDF("src", "dst", "label")
+    val got = context(new ByoKGQueryEngine(e, new StubLLM, 2), "zzz", Seq("hub"))
+    assert(got == plainContext(e, "zzz", Seq("hub"), 2))
+    val texts = got.map(_._1)
+    assert(texts.indexOf("n8 [rel] leaf8") < texts.indexOf("n7 [rel] leaf7"))
+    assert(texts.indexOf("n6 [rel] leaf6") < texts.indexOf("n7 [rel] leaf7"))
+    assert(texts.distinct == texts)
+  }
+
+  test("kHopTriplets above the frontier cap takes the join path, also " +
+    "from a later hop, with the probe path's rows") {
+    def rows(df: DataFrame) = df.select("src", "dst", "label")
+      .as[(String, String, String)].collect().toSet
+    def joins(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case j: Join => j }.size
+    val probed = Traversal.kHopTriplets(edges, Seq("acme").toDF("node"), 2)
+    assert(joins(probed) == 0)
+    val want = Set(("acme", "alice", "founded_by"),
+      ("acme", "berlin", "located_in"), ("alice", "acme", "works_at"),
+      ("berlin", "germany", "capital_of"))
+    assert(rows(probed) == want)
+    // two seeds over a cap of 1: every hop joins
+    val seeds2 = Seq("acme", "alice").toDF("node")
+    val joined = Traversal.kHopTriplets(edges, seeds2, 2, undirected = false,
+      cap = 1)
+    assert(joins(joined) > 0)
+    assert(rows(joined) == rows(Traversal.kHopTriplets(edges, seeds2, 2)))
+    // one seed, two hop-1 nodes over a cap of 1: hop 1 probes, hop 2 joins
+    val spilled = Traversal.kHopTriplets(edges, Seq("acme").toDF("node"), 2,
+      undirected = false, cap = 1)
+    assert(joins(spilled) > 0)
+    assert(rows(spilled) == want)
+  }
+
+  test("two threads on one engine get the sequential rows; the vocabulary " +
+    "is built once") {
+    val questions = Seq(("who founded acme", Seq("acmee")),
+      ("where is berlin", Seq("berln")), ("zzz", Seq("alice", "germany")),
+      ("capital of germany", Seq("germny")))
+    val sequential = {
+      val engine = new ByoKGQueryEngine(edges, new StubLLM, iterations = 2)
+      questions.map { case (q, m) => context(engine, q, m) }
+    }
+    val engine = new ByoKGQueryEngine(edges.select("src", "label", "dst"),
+      new StubLLM, iterations = 2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = (0 until 2).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Seq[(String, Int)]]] {
+          def call() = {
+            val order = if (t == 0) questions else questions.reverse
+            val got = order.map { case (q, m) => (q, context(engine, q, m)) }.toMap
+            questions.map { case (q, _) => got(q) }
+          }
+        })
+      }
+      futures.foreach(f => assert(f.get() == sequential))
+    } finally pool.shutdown()
+    val cached = engine.vocabulary.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r }.get
+    // every cached partition was computed once: the rows the cache built
+    // are the distinct nodes, not a multiple of them
+    val distinctNodes = edges.select(col("src")).union(edges.select(col("dst")))
+      .distinct().count()
+    assert(cached.cacheBuilder.rowCountStats.value == distinctNodes)
+  }
+
+  test("engine construction runs no Spark job; a warm retrieveContext " +
+    "runs at most 6") {
+    val sc = spark.sparkContext
+    // Spark jobs started by `body`, counted once the listener bus drained
+    // (the way PlanCensus counts)
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    // a frame no earlier test cached, so the vocabulary is a new cache
+    val e = edges.union(Seq(("germany", "europe", "part_of"))
+      .toDF("src", "dst", "label"))
+    var engine: ByoKGQueryEngine = null
+    assert(jobsOf { engine = new ByoKGQueryEngine(e, new StubLLM, 2) } == 0)
+    context(engine, "who founded acme", Seq("acmee"))
+    val warm = jobsOf(context(engine, "where is berlin", Seq("berln", "acme")))
+    assert(warm <= 6, s"$warm jobs")
   }
 
   // ----- KGLinker artifact protocol (kg_linker.py:15-140) -----

@@ -524,6 +524,28 @@ class CypherLiteSpec extends SparkSpec {
     assert(cls == Set(("o:12", "blue bolt")))
   }
 
+  test("node properties: the lookup compares string-cast ids, so a double " +
+    "binding never meets a long id through double coercion, with or " +
+    "without the id prune") {
+    // 2^53 as a double binding; as doubles, the long ids 2^53 and 2^53 + 1
+    // both equal it
+    val big = 9007199254740992L
+    val dEdges = Seq((big.toDouble, 1.0, "r")).toDF("src", "dst", "label")
+    val lProps = Seq((big, "near"), (big + 1, "far"), (1L, "one"))
+      .toDF("id", "name")
+    def names(q: String) = CypherLite.run(dEdges, Some(lProps), q)
+      .fold(e => fail(e), identity).collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1)))).toSeq
+    val plain = names("MATCH (a)-[:r]->(b) RETURN a.name, b.name")
+    assert(plain == Seq((None, None)))
+    // >= LargeInThreshold ids on a: the prune path over two variables
+    val ids = (big.toDouble.toString +: (1 until CypherLite.LargeInThreshold)
+      .map(i => s"${i + 2}.0")).map(v => s"'$v'").mkString("[", ", ", "]")
+    val pruned = names(s"MATCH (a)-[:r]->(b) WHERE a.id IN $ids " +
+      "RETURN a.name, b.name")
+    assert(pruned == plain)
+  }
+
   test("node properties: OPTIONAL nulls and dangling ids surface the " +
     "property as null; IS NULL on a property is allowed") {
     // s:3 has no property row in a REDUCED frame → null value survives
