@@ -2,10 +2,13 @@ package graft.byokg
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.functions.CosineSimilarity
 import graft.llm.{LLM, QueryOps}
+import graft.ops.Joins
+import graft.ops.Joins.gatedBroadcast
 
 /**
  * Entity linking into a user-supplied KG (SURVEY.md §2.13; reference:
@@ -58,37 +61,54 @@ object EntityLinker {
  * [[Traversal.HopProbe]] lookup, one Spark job for the frontier nodes the
  * probe has not fetched yet, and the relation choice and the top-degree
  * frontier run on the collected rows. The relation labels of a hop are
- * exactly the data the reference puts in its selection prompt. The seeds
- * and every hop's rows come to the driver, so seeds should be a bounded
- * set such as linked mentions.
+ * exactly the data the reference puts in its selection prompt. When the
+ * seeds or the fetched rows pass [[Traversal.ProbeRowCap]], the call runs
+ * as joins over the edge frame instead, with the same result.
  */
 object AgenticRetriever {
 
   def retrieve(edges: DataFrame, seeds: DataFrame, question: String, llm: LLM,
-               iterations: Int = 2, topEntities: Int = 8): DataFrame = {
-    val probe = new Traversal.HopProbe(edges)
-    val nodes = seeds.select(col("node")).distinct().collect().map(_.get(0))
-    probe.frame(expand(probe, nodes.toSeq, question, llm, iterations,
-      topEntities).distinct)
+               iterations: Int = 2, topEntities: Int = 8): DataFrame =
+    retrieve(edges, seeds, question, llm, iterations, topEntities,
+      Traversal.ProbeRowCap)
+
+  private[graft] def retrieve(edges: DataFrame, seeds: DataFrame,
+                              question: String, llm: LLM, iterations: Int,
+                              topEntities: Int, rowCap: Int): DataFrame = {
+    val probe = new Traversal.HopProbe(edges, rowCap)
+    Traversal.collectAtMost(seeds.select(col("node")).distinct(), rowCap)
+      .flatMap(nodes => expand(probe, nodes.map(_.get(0)), question, llm,
+        iterations, topEntities))
+      .fold(joined(edges, seeds, question, llm, iterations, topEntities))(
+        rows => probe.frame(rows.distinct))
+  }
+
+  /** The relation-selection turn: the hop's labels whose tokens meet the
+    * question's, or all of them when none do (the reference's fallback).
+    * A null label never survives, as `label IN (...)` drops it. */
+  private def selectRelations(labels: Seq[String],
+                              qTokens: Set[String]): Set[String] = {
+    val candidates = labels.filter(_ != null).toSet
+    val matched = candidates.filter(l =>
+      l.toLowerCase.split("[^a-z0-9]+").exists(qTokens.contains))
+    if (matched.isEmpty) candidates else matched
   }
 
   /** The agentic loop over a driver-side frontier: the kept triplets of
-    * every iteration, duplicates included. */
+    * every iteration, duplicates included; None when the probe passes its
+    * cap. */
   private[byokg] def expand(probe: Traversal.HopProbe, seeds: Seq[Any],
                             question: String, llm: LLM, iterations: Int,
-                            topEntities: Int): Seq[Row] = {
+                            topEntities: Int): Option[Seq[Row]] = {
     val qTokens = QueryOps.keywords(llm, question, maxKeywords = 8).toSet
     val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
     var frontier = seeds
     for (_ <- 1 to iterations) {
-      val hop = probe.hop(frontier)
-      // Relation-selection turn: candidate labels -> prompt -> chosen subset.
-      // A null label never survives, as `label IN (...)` drops it.
-      val labels = hop.map(_.getString(probe.labelAt)).filter(_ != null).toSet
-      val matched = labels.filter(l =>
-        l.toLowerCase.split("[^a-z0-9]+").exists(qTokens.contains))
-      // nothing matches: keep all (reference fallback)
-      val chosen = if (matched.isEmpty) labels else matched
+      val hop = probe.hop(frontier) match {
+        case Some(rows) => rows
+        case None => return None
+      }
+      val chosen = selectRelations(hop.map(_.getString(probe.labelAt)), qTokens)
       val kept = hop.filter(r => chosen.contains(r.getString(probe.labelAt)))
       acc ++= kept
       // Next entities: strongest by in-frontier degree (duplicate edges
@@ -99,7 +119,37 @@ object AgenticRetriever {
           n1 > n2 || n1 == n2 && Traversal.sparkOrder.lt(d1, d2) }
         .take(topEntities).map(_._1)
     }
-    acc.toSeq
+    Some(acc.toSeq)
+  }
+
+  /** [[retrieve]] as joins over the edge frame, for seeds or hops past the
+    * probe's cap: the seed frontier is counted and broadcast under
+    * [[graft.ops.Joins.BroadcastRowCap]], every later frontier holds at
+    * most `topEntities` nodes, and only each hop's distinct labels come to
+    * the driver. */
+  private[byokg] def joined(edges: DataFrame, seeds: DataFrame,
+                            question: String, llm: LLM, iterations: Int,
+                            topEntities: Int): DataFrame = {
+    val qTokens = QueryOps.keywords(llm, question, maxKeywords = 8).toSet
+    var (frontier, n) =
+      Joins.checkpointCount(seeds.select(col("node")).distinct())
+    var acc: DataFrame = null
+    for (_ <- 1 to iterations) {
+      val hop = edges.join(
+        gatedBroadcast(frontier.select(col("node").as("src")), n), Seq("src"))
+      val chosen = selectRelations(
+        hop.select(col("label")).distinct().collect().map(_.getString(0)).toSeq,
+        qTokens)
+      val kept = hop.filter(col("label").isin(chosen.toSeq: _*))
+        .localCheckpoint(false)
+      acc = if (acc == null) kept else acc.union(kept)
+      frontier = kept.groupBy(col("dst")).agg(count(lit(1)).as("deg"))
+        .orderBy(desc("deg"), col("dst"))
+        .limit(topEntities)
+        .select(col("dst").as("node"))
+      n = math.min(n, topEntities.toLong)
+    }
+    acc.distinct()
   }
 }
 
@@ -108,12 +158,14 @@ object AgenticRetriever {
  * mentions into the graph, run agentic triplet retrieval + bounded k-hop
  * path retrieval, verbalize, and assemble an order-preserving-deduped
  * context. The engine holds the distinct node vocabulary of `edges` as a
- * cached frame: construction runs no Spark job, and the first link job
- * fills the cache. A question then costs one link job, which collects at
- * most one node per mention, plus one probe job per hop frontier with
- * nodes not fetched yet. The k-hop and agentic retrievers share one
- * [[Traversal.HopProbe]] per call, and the context is assembled on the
- * driver from the collected rows, as the reference assembles its list.
+ * cached frame: construction runs no Spark job, the first link job fills
+ * the cache, and the cache lives as long as the session. A question then
+ * costs one link job, which collects at most one node per mention, plus
+ * one probe job per hop frontier with nodes not fetched yet. The k-hop and
+ * agentic retrievers share one [[Traversal.HopProbe]] per call, and the
+ * context is assembled on the driver from the collected rows, as the
+ * reference assembles its list. A question whose hops pass
+ * [[Traversal.ProbeRowCap]] rows runs as joins over the edge frame.
  */
 final class ByoKGQueryEngine(edges: DataFrame, llm: LLM,
                              iterations: Int = 2) {
@@ -131,26 +183,51 @@ final class ByoKGQueryEngine(edges: DataFrame, llm: LLM,
     * and a line seen by both keeps its earliest position. Within a
     * retriever, lines rank by text in Spark's binary string order (the
     * reference's store-iteration order isn't reproducible on a distributed
-    * frame). The result is a driver-local frame; calls on one engine may
-    * run concurrently. */
-  def retrieveContext(question: String, mentions: Seq[String]): DataFrame = {
+    * frame). Calls on one engine may run concurrently. */
+  def retrieveContext(question: String, mentions: Seq[String]): DataFrame =
+    retrieveContext(question, mentions, Traversal.ProbeRowCap)
+
+  private[graft] def retrieveContext(question: String, mentions: Seq[String],
+                                     rowCap: Int): DataFrame = {
     val linked: Seq[Any] =
       if (mentions.isEmpty) Nil
       else EntityLinker.fuzzyLink(vocabulary, "node", mentions, k = 1)
         .select(col("node")).collect().map(_.get(0)).toSeq.distinct
-    val probe = new Traversal.HopProbe(edges)
+    val probe = new Traversal.HopProbe(edges, rowCap)
     // k-hop first: its hop-h frontier holds the agentic hop-h frontier, so
     // the agentic expansion finds every hop in the probe's memo
-    val (khopRows, rest) =
-      Traversal.kHopFrom(probe, linked, iterations, graft.ops.Joins.BroadcastRowCap)
-    val khop = khopRows ++ rest.fold(Seq.empty[Row])(_.collect().toSeq)
-    val agentic = AgenticRetriever.expand(probe, linked, question, llm,
+    val probed = for {
+      khop <- Traversal.kHopRows(probe, linked, iterations)
+      agentic <- AgenticRetriever.expand(probe, linked, question, llm,
+        iterations, topEntities = 8)
+    } yield (agentic, khop)
+    probed.fold(joinedContext(question, linked)) { case (agentic, khop) =>
+      def lines(rows: Seq[Row]): Seq[String] =
+        rows.distinct.map(verbalize(probe, _)).sorted(Traversal.sparkOrder)
+      val context = (lines(agentic) ++ lines(khop)).distinct
+        .zipWithIndex.map { case (text, i) => Row(text, i + 1) }
+      edges.sparkSession.createDataFrame(context.asJava,
+        ByoKGQueryEngine.ContextSchema)
+    }
+  }
+
+  /** [[retrieveContext]] as joins over the edge frame: each retriever's
+    * lines carry an arrival order, and dedup keeps the least per text. */
+  private def joinedContext(question: String, linked: Seq[Any]): DataFrame = {
+    val seeds = edges.sparkSession.createDataFrame(
+      linked.map(Row(_)).asJava, vocabulary.schema)
+    val agentic = AgenticRetriever.joined(edges, seeds, question, llm,
       iterations, topEntities = 8)
-    def lines(rows: Seq[Row]): Seq[String] =
-      rows.distinct.map(verbalize(probe, _)).sorted(Traversal.sparkOrder)
-    val context = (lines(agentic) ++ lines(khop)).distinct
-      .zipWithIndex.map { case (text, i) => Row(text, i + 1) }
-    edges.sparkSession.createDataFrame(context.asJava, ByoKGQueryEngine.ContextSchema)
+    val khop = Traversal.joinHops(edges, seeds, iterations)
+    def ordered(df: DataFrame, priority: Int): DataFrame =
+      Traversal.verbalizeTriplets(df).withColumn("ord",
+        lit(priority.toLong * 1000000L) +
+          row_number().over(Window.orderBy(col("text"))))
+    ordered(agentic, 0).union(ordered(khop, 1))
+      .groupBy(col("text")).agg(min(col("ord")).as("min_ord"))
+      .withColumn("first_seen",
+        row_number().over(Window.orderBy(col("min_ord"))))
+      .drop("min_ord")
   }
 
   /** [[Traversal.verbalizeTriplets]] on one row: `concat_ws` skips a null

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
  * Every stage is a DataFrame op: the relation vocabulary and the merged
  * line set are the only rerank inputs, and both are bounded (vocabulary ≤
  * label count, lines capped by the pruning stages), so the rerank top-k
- * stays a TakeOrderedAndProject — the driver never holds the triplet set.
+ * stays a TakeOrderedAndProject. The k-hop expansion holds the triplet set
+ * on the driver only while it fits in [[Traversal.ProbeRowCap]] rows.
  */
 object GraphScoringRetriever {
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LocalRelation}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -163,37 +163,77 @@ class ByokgEngineSpec extends SparkSpec {
     val out = (0 to 8).map(i => ("hub", s"n$i", "rel")) ++
       Seq(("hub", "n8", "rel")) ++ (0 to 8).map(i => (s"n$i", s"leaf$i", "rel"))
     val e = out.toDF("src", "dst", "label")
-    val got = context(new ByoKGQueryEngine(e, new StubLLM, 2), "zzz", Seq("hub"))
+    val engine = new ByoKGQueryEngine(e, new StubLLM, 2)
+    val got = context(engine, "zzz", Seq("hub"))
     assert(got == plainContext(e, "zzz", Seq("hub"), 2))
+    // the join path past the probe's row cap counts them too
+    assert(got == engine.retrieveContext("zzz", Seq("hub"), rowCap = 1)
+      .select("text", "first_seen").as[(String, Int)].collect()
+      .sortBy(_._2).toSeq)
     val texts = got.map(_._1)
     assert(texts.indexOf("n8 [rel] leaf8") < texts.indexOf("n7 [rel] leaf7"))
     assert(texts.indexOf("n6 [rel] leaf6") < texts.indexOf("n7 [rel] leaf7"))
     assert(texts.distinct == texts)
   }
 
-  test("kHopTriplets above the frontier cap takes the join path, also " +
-    "from a later hop, with the probe path's rows") {
-    def rows(df: DataFrame) = df.select("src", "dst", "label")
-      .as[(String, String, String)].collect().toSet
-    def joins(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case j: Join => j }.size
-    val probed = Traversal.kHopTriplets(edges, Seq("acme").toDF("node"), 2)
+  private def rows(df: DataFrame): Set[(String, String, String)] =
+    df.select("src", "dst", "label").as[(String, String, String)].collect().toSet
+
+  /** Joins in `df`'s plan whose frontier side is hinted to broadcast. */
+  private def joins(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case j: Join if j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) => j
+    }.size
+
+  /** Whether `df` is a driver-local frame, as the probe paths return. */
+  private def local(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  test("kHopTriplets past the probe's row cap reruns as joins from the " +
+    "seeds, with the probe path's rows") {
+    val acme = Seq("acme").toDF("node")
+    val probed = Traversal.kHopTriplets(edges, acme, 2)
     assert(joins(probed) == 0)
     val want = Set(("acme", "alice", "founded_by"),
       ("acme", "berlin", "located_in"), ("alice", "acme", "works_at"),
       ("berlin", "germany", "capital_of"))
     assert(rows(probed) == want)
-    // two seeds over a cap of 1: every hop joins
+    // two seeds over a cap of 1
     val seeds2 = Seq("acme", "alice").toDF("node")
     val joined = Traversal.kHopTriplets(edges, seeds2, 2, undirected = false,
-      cap = 1)
+      rowCap = 1)
     assert(joins(joined) > 0)
     assert(rows(joined) == rows(Traversal.kHopTriplets(edges, seeds2, 2)))
-    // one seed, two hop-1 nodes over a cap of 1: hop 1 probes, hop 2 joins
-    val spilled = Traversal.kHopTriplets(edges, Seq("acme").toDF("node"), 2,
-      undirected = false, cap = 1)
-    assert(joins(spilled) > 0)
-    assert(rows(spilled) == want)
+    // hop 1 holds 2 rows, hop 2 would hold 4 over a cap of 3
+    assert(joins(Traversal.kHopTriplets(edges, acme, 1, undirected = false,
+      rowCap = 3)) == 0)
+    val late = Traversal.kHopTriplets(edges, acme, 2, undirected = false,
+      rowCap = 3)
+    assert(joins(late) > 0)
+    assert(rows(late) == want)
+  }
+
+  test("the agentic retriever and retrieveContext past the probe's row " +
+    "cap match the probe path") {
+    val llm = new StubLLM
+    val acme = Seq("acme").toDF("node")
+    for (q <- Seq("who founded acme", "zzz")) {
+      val joined = AgenticRetriever.retrieve(edges, acme, q, llm, 2, 8, rowCap = 1)
+      val probed = AgenticRetriever.retrieve(edges, acme, q, llm)
+      assert(!local(joined) && local(probed))
+      assert(rows(joined) == rows(probed))
+    }
+    val engine = new ByoKGQueryEngine(edges, llm, iterations = 2)
+    for ((q, m) <- Seq(("who founded acme", Seq("acmee")),
+        ("zzz", Seq("alice", "germany")))) {
+      val frame = engine.retrieveContext(q, m, rowCap = 1)
+      assert(!local(frame) && local(engine.retrieveContext(q, m)))
+      val joined = frame.select("text", "first_seen").as[(String, Int)]
+        .collect().sortBy(_._2).toSeq
+      assert(joined.nonEmpty)
+      assert(joined == context(engine, q, m))
+      assert(joined == plainContext(edges, q, m, 2))
+    }
   }
 
   test("two threads on one engine get the sequential rows; the vocabulary " +
