@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * THE session configuration for every graft main (Bench, Verify, PlanDump,
- * PhaseProbe, Smoke): one builder so the configuration that is CORRECTNESS-
- * verified is byte-for-byte the configuration that is benchmarked and
- * plan-dumped (round-11 verdict: Verify ran default configs while Bench ran
- * the tuned ones — nothing diverged, but the verified mode must BE the
- * benchmarked mode).
+ * THE session configuration of `graft.Verify` and of perfbench: one
+ * builder, so the configuration that is CORRECTNESS-verified is
+ * byte-for-byte the configuration that is benchmarked.
  *
- * Core count comes from $SPARK_GRAFT_CPUS (driver contract: the driver
- * re-runs the bench at a lower core count to measure scaling, so the master
- * is never hard-coded); callers pass their own default.
+ * Core count comes from $SPARK_GRAFT_CPUS (a run at a lower core count
+ * measures scaling, so the master is never hard-coded); callers pass their
+ * own default.
  */
 object GraftSession {
 
@@ -44,11 +41,9 @@ object GraftSession {
       // (q_topk_per_key 2.54 s hash-capped vs 3.11 s at 1M). Memory is the
       // easy part (16k × ~100 B ≈ 2 MB/task); the cap exists because the
       // fallback WINS at very high group counts, not because hash mode
-      // would not fit. Env-tunable for deployments whose group-count
-      // profile differs.
+      // would not fit.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK",
-          (1 << 14).toString))
+        (1 << 14).toString)
       // Partition sizing for the TEST scale factors (the 100 TB rule "size
       // maxPartitionBytes so partitions fit memory and cores stay busy",
       // applied downward): the sf0.1 tables are 0.5-11 MB files, so the

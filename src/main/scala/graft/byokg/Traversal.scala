@@ -4,7 +4,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -966,9 +968,24 @@ object Traversal {
     // lineage) the upstream partition count still tracks data size — a
     // 100k-split edge scan keeps ≥ 25k layout partitions instead of
     // collapsing to cores/4 multi-GB cached partitions
-    val byInput = df.queryExecution.toRdd.getNumPartitions / 4
+    val byInput = inputPartitions(df.queryExecution.sparkPlan) / 4
     math.max(floor, math.min(cap, math.max(bySize, byInput)))
   }
+
+  /** The partition count of the widest input of `plan`, a physical plan
+    * that is not adaptive, read without running a job. Reading the
+    * partitions of the plan's own RDD would not do: under AQE that
+    * executes the input's query stages. A cache that is not materialized
+    * yet counts the inputs of its own plan. */
+  private def inputPartitions(plan: SparkPlan): Int =
+    plan.collectLeaves().map {
+      case a: AdaptiveSparkPlanExec => inputPartitions(a.inputPlan)
+      case s: InMemoryTableScanExec =>
+        val b = s.relation.cacheBuilder
+        if (b.isCachedColumnBuffersLoaded) b.cachedColumnBuffers.getNumPartitions
+        else inputPartitions(b.cachedPlan)
+      case leaf => leaf.execute().getNumPartitions
+    }.maxOption.getOrElse(1)
 
   /** Whether `plan`'s size estimate is a join's product bound: a Join in
     * it, or in the plan of a cache that is not materialized yet (a

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions.{col, explode, posexplode, struct}
  * limit, and a reduce-side sort under the final Window): candidates heap
  * in O(n log k) with no sort at all. The trade: the aggregation buffer
  * carries the sort-key struct alongside the payload, so shuffled bytes
- * run wider than the window's plain rows (measured in
- * `tools.Profile shufflebytes`). Use it where rows-per-key is large and
+ * run wider than the window's plain rows (measured by the since-removed
+ * `shufflebytes` probe). Use it where rows-per-key is large and
  * the sort is the cost (kNN candidates, fuzzy-link scoring, per-key
  * truncation over wide retrieval rows); for k = 1 prefer a codegen'd
  * `min_by`/`max_by` winner (half the window's bytes, no object

@@ -31,7 +31,8 @@ object Dedup {
     * full payloads instead of every duplicate row: the window-rank
     * formulation also pre-reduces on Spark 4 (WindowGroupLimit), but sorts
     * its full input on BOTH sides of the shuffle and moves ~2× the bytes
-    * (tools.Profile shufflebytes: 0.86 vs 1.84 MB on sf0.1 lineitem).
+    * (0.86 vs 1.84 MB on sf0.1 lineitem, measured by the since-removed
+    * `shufflebytes` probe).
     * Where the winner can be expressed with scalar buffers only, prefer
     * the pure hash-aggregate shape [[windowedChunkDedup]] uses. */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
@@ -351,7 +352,7 @@ object Dedup {
     // runs several driver actions per invocation (the docCount/vocabSize
     // regime gates, the dense-matrix checkpoint, the final action), and
     // WITHOUT a cut each one re-executed the whole tokenize+tf lineage —
-    // the dominant per-action cost in PhaseProbe. The first action
+    // the dominant per-action cost in a per-phase profile. The first action
     // materializes it; everything after reads the persisted rows.
     val tf = terms.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
@@ -1174,7 +1175,7 @@ object Dedup {
    * partitions by document. Returns (id, start_pos, span_tokens,
    * span_text), start_pos 0-based in tokens.
    *
-   * Scale probe (Profile `suffixscale`, sf0.1, token-namespaced 8×
+   * Scale probe (the since-removed `suffixscale`, sf0.1, token-namespaced 8×
    * replication): per-row cost 566 µs at 1× → 110 µs at 8× — sub-linear
    * (fixed overhead amortizes; no super-linear stage anywhere).
    */
@@ -1316,7 +1317,7 @@ object Dedup {
     * pairs — the quantity the AllPairs papers warn explodes under Zipfian
     * element distributions. Returns distinct (id_a, id_b), id_a < id_b.
     *
-    * Measured Zipf-skew behavior (Profile `setsimskew`, df(k) = N/k
+    * Measured Zipf-skew behavior (since-removed probe `setsimskew`, df(k) = N/k
     * harmonic corpus, τ = 0.6, V = 256 element vocabulary, N = 4k/8k/16k):
     * on the DUP-HEAVY variant (the raw harmonic sets, where the true
     * result is itself quadratic — every prime-indexed doc shares one

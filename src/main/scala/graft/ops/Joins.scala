@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.locks.ReentrantLock
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /**
@@ -105,6 +107,21 @@ object Joins {
     definiteKeep.union(candidates)
   }
 
+  /** Execution confs of [[boundedLoop]]: plain planning over 4 shuffle
+    * partitions. Stats degrade through union/distinct chains: without AQE
+    * a bounded candidate frame can over-estimate past the 10MB default
+    * broadcast threshold and fall into a sort-merge join; inside the loop
+    * a larger cap is always safe. */
+  private val LoopConfs = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.autoBroadcastJoinThreshold" -> (64 << 20).toString)
+
+  /** One re-entrant lock per session; weak keys, so a stopped session is
+    * not kept alive by this map. */
+  private val loopLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ReentrantLock]())
+
   /** Runs a bounded-frontier driver loop under loop-sized execution confs.
     *
     * Beam/context loops plan dozens of tiny exchanges per depth over
@@ -114,24 +131,22 @@ object Joins {
     * than the data itself. Scoping the loop to a few plain partitions cut
     * the beam queries ~40% at sf0.1. Session confs are restored on exit, so
     * plans built afterwards (including the caller's final action on the
-    * returned frame) execute under the normal adaptive config. */
-  def boundedLoop[T](spark: org.apache.spark.sql.SparkSession,
-                     partitions: Int = 4)(body: => T): T = {
-    val p = sys.props.get("graft.loop.partitions")
-      .map(_.toInt).getOrElse(partitions)
-    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-    val parts = spark.conf.getOption("spark.sql.shuffle.partitions")
-    val thresh = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    // stats degrade through union/distinct chains: without AQE a bounded
-    // candidate frame can over-estimate past the 10MB default and fall into
-    // a sort-merge join; inside the loop a larger cap is always safe
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-    try body finally {
-      aqe.foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
-      parts.foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
-      thresh.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
+    * returned frame) execute under the normal adaptive config.
+    *
+    * The confs are the shared session's, so loop bodies on one session run
+    * one at a time (a re-entrant lock: a nested loop runs inline), and each
+    * restores what it saved. Other queries on the session still plan under
+    * the loop confs while a loop runs; their results are unaffected, only
+    * their plan shape. */
+  def boundedLoop[T](spark: SparkSession)(body: => T): T = {
+    val lock = loopLocks.computeIfAbsent(spark, _ => new ReentrantLock())
+    lock.lock()
+    try {
+      val saved = LoopConfs.map { case (k, _) => k -> spark.conf.get(k) }
+      try {
+        LoopConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+        body
+      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    } finally lock.unlock()
   }
 }

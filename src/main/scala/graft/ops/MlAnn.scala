@@ -117,8 +117,9 @@ object MlAnn {
     * happens driver-side over the tiny centroid array), cosine top-k inside.
     * Recall contract: EXACT (the brute-force cosine ranking, same tie
     * resolution) at nprobe = nlist — AnnRecallSpec pins it; measured
-    * recall@10 at partial probes is committed in ANN_RECALL.md (Profile
-    * `annrecall`), the table to size nprobe from at scale. */
+    * recall@10 at partial probes is committed in ANN_RECALL.md (measured
+    * by the since-removed `Profile annrecall` at `2d80cd5`; AnnRecallSpec
+    * pins the contracts), the table to size nprobe from at scale. */
   def ivfTopK(assigned: DataFrame, centers: Array[Array[Double]],
               query: Seq[Double], k: Int, nprobe: Int): DataFrame = {
     CosineSimilarity.register(assigned.sparkSession)
@@ -307,7 +308,8 @@ object MlAnn {
    *
    * Recall is capped by m × codes (quantization loses precision, not just
    * candidates — no probing knob recovers it): measured recall@10 per
-   * config is committed in ANN_RECALL.md (Profile `annrecall`); size
+   * config is committed in ANN_RECALL.md (measured by the since-removed
+   * `Profile annrecall` at `2d80cd5`; AnnRecallSpec pins the contracts); size
    * m/codes from that table against the actual corpus, not the defaults.
    */
   def pqTopK(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],

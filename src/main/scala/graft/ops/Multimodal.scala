@@ -288,7 +288,7 @@ object Multimodal {
     * keeps the narrow SQL-replayable defaults, while scale probes use the
     * wide family so organic parameter collisions (true near-dup mass that
     * grows quadratically in a bounded family) don't drown the planted
-    * twins (tools.Profile phashscale). */
+    * twins (measured by the since-removed `phashscale` probe). */
   def synthGradientPngMedia(df: DataFrame, idCol: String, seedCol: String,
                             variantEvery: Int = 0,
                             wideParams: Boolean = false): DataFrame = {
@@ -431,7 +431,7 @@ object Multimodal {
    * band collisions contribute an expected N²·bands/2^(56/bands) pair
    * floor, so 4×14-bit banding turns quadratic once N ≫ 2^14 while
    * 2×28-bit (hamming ≤ 1) stays at the true-output floor to N ≈ 2^28 —
-   * measured in `tools.Profile phashscale` (at N=20k: 349k candidate
+   * measured by the since-removed `phashscale` probe (at N=20k: 349k candidate
    * pairs for 437 true dups at 4 bands vs 1.9k for 252 at 2).
    *
    * Input: [[dHash56]] output (undecoded rows dropped). Returns

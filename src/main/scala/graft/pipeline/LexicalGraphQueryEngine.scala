@@ -50,25 +50,12 @@ final class LexicalGraphQueryEngine(
     val raw = ChunkBasedRetriever.search(graph, emb).localCheckpoint(true)
     raw.count()
     val endRetrieve = System.nanoTime()
-    val results = Seq[DataFrame => DataFrame](
-      Processors.dedupResults,
-      Processors.rescoreResults,
-      df => Processors.truncateStatements(
-        df, graft.model.Defaults.MaxStatementsPerTopic),
-      df => Processors.truncateResults(df, maxResults)
-    ).foldLeft(raw)((df, p) => p(df)).localCheckpoint(true)
+    val results = ChunkBasedRetriever.defaultChain(raw, maxResults = maxResults)
+      .localCheckpoint(true)
     val numSourceNodes = results.count()
     val endPost = System.nanoTime()
-    val rendered = (contextFormat match {
-      case "json" => Processors.formatContext(results)
-      case "text" => Processors.formatContextText(results)
-      case "xml" => Processors.formatContextXml(results)
-      case "yaml" => Processors.formatContextYaml(results)
-      case "bedrock_xml" =>
-        Processors.formatContextBedrock(results, graph.sources)
-      case other => throw new IllegalArgumentException(
-        s"unknown context format '$other'")
-    }).collect().map(_.mkString(" ")).mkString("\n")
+    val rendered = render(results, contextFormat)
+      .collect().map(_.mkString(" ")).mkString("\n")
     val response = llm.complete(
       s"Answer from the context only.\n\nContext:\n$rendered\n\n" +
         s"Question: $question\nAnswer:")
@@ -108,8 +95,11 @@ final class LexicalGraphQueryEngine(
 
   /** Render the lighter default-chain context for one question in any of
     * the reference's five formats (lexical_graph_query_engine.py:410-446). */
-  def context(question: String, format: String = "json"): DataFrame = {
-    val results = ChunkBasedRetriever.processedResults(graph, embed(question))
+  def context(question: String, format: String = "json"): DataFrame =
+    render(ChunkBasedRetriever.processedResults(graph, embed(question)), format)
+
+  /** `results` rendered in one of the reference's five context formats. */
+  private def render(results: DataFrame, format: String): DataFrame =
     format match {
       case "json" => Processors.formatContext(results)
       case "text" => Processors.formatContextText(results)
@@ -121,7 +111,6 @@ final class LexicalGraphQueryEngine(
         s"unknown context format '$other' " +
           "(expected json|text|xml|yaml|bedrock_xml)")
     }
-  }
 
   /** Semantic mode: beam-expanded chunk seeds → topic statements, through
     * the full chain (reference chunk_based_semantic_search.py). */
@@ -130,9 +119,7 @@ final class LexicalGraphQueryEngine(
                     maxResults: Int = graft.model.Defaults.MaxSearchResults): DataFrame = {
     val raw = ChunkBasedRetriever.semanticSearch(graph, embed(question),
       scoringMode = scoringMode)
-    Processors.truncateResults(
-      Processors.truncateStatements(
-        Processors.rescoreResults(Processors.dedupResults(raw))), maxResults)
+    ChunkBasedRetriever.defaultChain(raw, maxResults = maxResults)
   }
 
   /** Entity-context mode: expand the question's entities into context

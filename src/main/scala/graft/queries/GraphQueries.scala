@@ -17,8 +17,8 @@ object GraphQueries {
       .select(concat(lit("c:"), col("c_custkey")).as("node"))
 
   /** The reference's flagship statements_cypher text (store naming
-    * adapted; traversal_based_base_retriever.py:153-190) — shared by
-    * the q_cypher_statements gate and the Profile cypherscale probe. */
+    * adapted; traversal_based_base_retriever.py:153-190), run by the
+    * q_cypher_statements gate. */
   val statementsCypherText: String =
     """// get statements grouped by topic and source
           |MATCH (t)<-[:belongs_to]-(l:L)

@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /**
  * Materializes every memoized store layout ([[Tables]]) — the index-build /
  * graph-load work that precedes retrieval, kept out of every timed or
- * censused query. Shared by [[graft.Bench]] (before its timed loop) and
- * [[graft.tools.PlanCensus]] (so the census' between-query eviction can
- * treat any persistent RDD OUTSIDE this set as query-local garbage).
+ * censused query. [[graft.tools.PlanCensus]] and `PlanCensusSpec` run it
+ * first, so the census' between-query eviction can treat any persistent
+ * RDD OUTSIDE this set as query-local garbage.
  * Idempotent: every layout is memoized per (session, dir).
  */
 object Warmup {

@@ -118,15 +118,22 @@ object ChunkBasedRetriever {
       queryEmbedding: Seq[Double],
       vssTopK: Int = graft.model.Defaults.VssTopK,
       maxStatementsPerTopic: Int = graft.model.Defaults.MaxStatementsPerTopic,
-      maxResults: Int = graft.model.Defaults.MaxSearchResults): DataFrame = {
-    val raw = search(g, queryEmbedding, vssTopK)
+      maxResults: Int = graft.model.Defaults.MaxSearchResults): DataFrame =
+    defaultChain(search(g, queryEmbedding, vssTopK),
+      maxStatementsPerTopic, maxResults)
+
+  /** The default chain over a search frame: Dedup → Rescore →
+    * TruncateStatements → TruncateResults. */
+  def defaultChain(
+      raw: DataFrame,
+      maxStatementsPerTopic: Int = graft.model.Defaults.MaxStatementsPerTopic,
+      maxResults: Int = graft.model.Defaults.MaxSearchResults): DataFrame =
     Seq[DataFrame => DataFrame](
       Processors.dedupResults,
       Processors.rescoreResults,
       df => Processors.truncateStatements(df, maxStatementsPerTopic),
       df => Processors.truncateResults(df, maxResults)
     ).foldLeft(raw)((df, p) => p(df))
-  }
 
   /** The reference's complete DEFAULT_PROCESSORS + DEFAULT_FORMATTING_PROCESSORS
     * chain (traversal_based_base_retriever.py:24-46), end-to-end over the flat

@@ -124,8 +124,7 @@ object PlanCensus {
         .mkString(",") + "}}"
 
   /** Parse a census JSON (the committed snapshot) without a JSON library
-    * (none on the unmanaged classpath) — same discipline as
-    * BenchSnapshotSpec. */
+    * (none on the unmanaged classpath). */
   def parseJson(txt: String): Map[String, Census] =
     ("\"([^\"]+)\"\\s*:\\s*\\{\"jobs\":(\\d+),\"stages\":(\\d+)," +
       "\"tasks\":(\\d+),\"shuffles\":(\\d+)" +

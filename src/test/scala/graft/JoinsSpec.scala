@@ -37,4 +37,35 @@ class JoinsSpec extends SparkSpec {
       Joins.bloomAntiJoin(big, "key", excl, "k", 10))
     assert(e.getMessage.contains("STRING/LONG/INT"))
   }
+
+  test("boundedLoop runs one body per session at a time, nests, and " +
+    "restores the session confs also when its body throws") {
+    val aqe = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(aqe) == "true", "precondition: AQE on")
+    val inFirst = new java.util.concurrent.CountDownLatch(1)
+    val releaseFirst = new java.util.concurrent.CountDownLatch(1)
+    val secondEntered = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val first = new Thread(() =>
+      Joins.boundedLoop(spark) { inFirst.countDown(); releaseFirst.await() })
+    first.start()
+    inFirst.await()
+    assert(spark.conf.get(aqe) == "false", "loop confs in effect")
+    val second = new Thread(() =>
+      Joins.boundedLoop(spark) { secondEntered.set(true) })
+    second.start()
+    Thread.sleep(300)
+    assert(!secondEntered.get(), "the second body waits for the first")
+    releaseFirst.countDown()
+    first.join(); second.join()
+    assert(secondEntered.get())
+    assert(spark.conf.get(aqe) == "true")
+    // re-entrant: a nested loop runs inline, the outer restore wins
+    assert(Joins.boundedLoop(spark)(Joins.boundedLoop(spark)(
+      spark.conf.get(aqe))) == "false")
+    assert(spark.conf.get(aqe) == "true")
+    intercept[IllegalStateException](
+      Joins.boundedLoop(spark)(throw new IllegalStateException("boom")))
+    assert(spark.conf.get(aqe) == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
 }

@@ -60,6 +60,33 @@ class RetrieversSpec extends SparkSpec {
     intercept[IllegalArgumentException](eng.answer("q", contextFormat = "toml"))
   }
 
+  test("concurrent querySemantic callers on one engine get the sequential " +
+    "rows and leave AQE on") {
+    import graft.pipeline.LexicalGraphQueryEngine
+    val eng = LexicalGraphQueryEngine.fromDocuments(
+      spark, docs, "text", Seq("doc_id", "source"))
+    val questions = Seq("spark joins tables", "query engines scan parquet")
+    def rows(q: String): Seq[String] =
+      eng.querySemantic(q).collect().map(_.toString).toSeq.sorted
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "precondition: AQE on")
+    val sequential = questions.map(rows)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      // the threads alternate between the two questions
+      val futures = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call() = rows(questions(t % 2))
+        })
+      }
+      futures.zipWithIndex.foreach { case (f, t) =>
+        assert(f.get() == sequential(t % 2)) }
+    } finally pool.shutdown()
+    // every beam restored the session's adaptive conf
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
   test("chunk-based search returns scored flat statements") {
     val out = ChunkBasedRetriever.search(g, queryEmb, vssTopK = 5)
     assert(out.count() > 0)

@@ -432,4 +432,31 @@ class TraversalSpec extends SparkSpec {
       assert(layoutParts(overCache) == floor, "unmaterialized cache")
     } finally joined.unpersist(false)
   }
+
+  test("sizing a store layout runs no Spark job before its first action") {
+    val sc = spark.sparkContext
+    // a shuffled input: under AQE, the partition count of its own RDD is
+    // known only after its query stage has run
+    val input = edges.select("src", "dst").distinct()
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "precondition: AQE on")
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val (bySrc, byDst) =
+      try {
+        val layout = Traversal.hitsLayout(input)
+        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+        layout
+      } finally sc.removeSparkListener(listener)
+    try {
+      assert(jobs.get() == 0, s"${jobs.get()} jobs")
+      assert(bySrc.count() == 5 && byDst.count() == 5)
+    } finally { bySrc.unpersist(false); byDst.unpersist(false) }
+  }
 }
