@@ -478,8 +478,9 @@ object Traversal {
   /** Metapath following that keeps the FULL paths, not just the reached
     * frontier: each hop appends its triplet to an array column, so the result
     * is one row per complete path with `path: array<struct<src,label,dst>>`
-    * plus the terminal node. `maxPaths` caps the per-hop fan-out (top paths
-    * by endpoint order) — the combinatorial blow-up guard at scale. */
+    * (node ids as strings) plus the terminal node. `maxPaths` caps the
+    * per-hop fan-out (top paths by endpoint order) — the combinatorial
+    * blow-up guard at scale. */
   def metapathPaths(edges: DataFrame, seeds: DataFrame,
                     metapath: Seq[String],
                     undirected: Boolean = false,
@@ -492,8 +493,8 @@ object Traversal {
         .join(gatedBroadcast(
           acc.select(col("node").as("src"), col("path")), n), Seq("src"))
         .select(col("dst").as("node"),
-          concat(col("path"),
-            array(struct(col("src"), col("label"), col("dst")))).as("path"))
+          concat(col("path"), array(struct(col("src").cast("string").as("src"),
+            col("label"), col("dst").cast("string").as("dst")))).as("path"))
         .orderBy(col("node"), col("path").cast("string"))
         .limit(maxPaths))
       acc = a; n = c

@@ -1,10 +1,38 @@
 package graft.queries
 
+import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions._
 
 /** Testdata table loading + the derived graph used by traversal queries. */
 object Tables {
+
+  /** The memoized derived tables of one session. Each memoized frame
+    * refers to its session, so a map from sessions to frames keeps every
+    * session alive, weak keys included: a weak map never clears an entry
+    * whose value refers to its key. The entries live on their session
+    * instead, in a planner strategy that plans nothing, appended to the
+    * session's experimental strategies; they are reachable only from the
+    * session and go with it. */
+  private final class Memo extends SparkStrategy {
+    val entries: TrieMap[Any, Any] = TrieMap.empty
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil
+  }
+
+  /** `build`, once per (session, key). */
+  private[graft] def memo[T](s: SparkSession, key: Any)(build: => T): T = {
+    def own = s.experimental.extraStrategies.collectFirst { case m: Memo => m }
+    val m = own.getOrElse(synchronized {
+      own.getOrElse {
+        val m = new Memo
+        s.experimental.extraStrategies = s.experimental.extraStrategies :+ m
+        m
+      }
+    })
+    m.entries.getOrElseUpdate(key, build).asInstanceOf[T]
+  }
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
@@ -47,7 +75,7 @@ object Tables {
    * becomes a bucketed-by-src parquet table instead of an in-memory cache.
    */
   def edges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((s, dir),
+    memo(s, ("edge", dir))(
       buildEdges(s, dir).coalesce(cachePartitions(s)).cache())
 
   /** Partition count for cached derived frames: at test scale the frames
@@ -58,21 +86,15 @@ object Tables {
   private def cachePartitions(s: SparkSession): Int =
     math.max(4, s.sparkContext.defaultParallelism / 4)
 
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Both-direction view of [[edges]] (src↔dst swapped union), memoized the
     * same way — undirected traversals probe this every hop. */
   def undirectedEdges(s: SparkSession, dir: String): DataFrame =
-    undirectedCache.getOrElseUpdate((s, dir), {
+    memo(s, ("undirected", dir)) {
       val e = edges(s, dir)
       e.select(col("src"), col("dst"), col("label"))
         .union(e.select(col("dst").as("src"), col("src").as("dst"), col("label")))
         .cache()
-    })
-
-  private val undirectedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** Lexical graph built from the documents table by the deterministic
     * indexing pipeline, memoized + cached per (session, dir). Queries over
@@ -80,13 +102,10 @@ object Tables {
     * these tables the way the reference probes its graph store — the index
     * build happens once, before any query is timed. */
   def lexicalGraph(s: SparkSession, dir: String): graft.index.GraphTables =
-    graphCache.getOrElseUpdate((s, dir),
+    memo(s, ("graph", dir))(
       graft.index.LexicalGraphBuilder.fromDocuments(
           t(s, dir, "documents"), "text", Seq("doc_id", "source"))
         .coalesced(cachePartitions(s)).persistAll())
-
-  private val graphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.index.GraphTables]
 
   /** Classification list the classified graph build hash-picks from —
     * stands in for an InferClassifications result. */
@@ -95,29 +114,23 @@ object Tables {
   /** Lexical graph built with the inferred classification list (the
     * InferClassifications → builder wiring), memoized like [[lexicalGraph]]. */
   def lexicalGraphClassified(s: SparkSession, dir: String): graft.index.GraphTables =
-    classifiedCache.getOrElseUpdate((s, dir),
+    memo(s, ("classified", dir))(
       graft.index.LexicalGraphBuilder.fromDocuments(
           t(s, dir, "documents"), "text", Seq("doc_id", "source"),
           classifications = InferredClassifications)
         .coalesced(cachePartitions(s)).persistAll())
-
-  private val classifiedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.index.GraphTables]
 
   /** A second tenant's classified graph — tenant "t1" built over the src0
     * subset of the corpus — for the per-tenant summary listing. Tenant
     * participates in every id hash, so the two builds coexist without id
     * collisions. Memoized like the others. */
   def lexicalGraphClassifiedT1(s: SparkSession, dir: String): graft.index.GraphTables =
-    classifiedT1Cache.getOrElseUpdate((s, dir),
+    memo(s, ("classifiedT1", dir))(
       graft.index.LexicalGraphBuilder.fromDocuments(
           t(s, dir, "documents").filter(col("source") === "src0"),
           "text", Seq("doc_id", "source"), tenant = "t1",
           classifications = InferredClassifications)
         .coalesced(cachePartitions(s)).persistAll())
-
-  private val classifiedT1Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.index.GraphTables]
 
   /** KMeans-IVF index over the embeddings table (vec_id != 0), trained ONCE
     * per (session, dir) and cached — index training belongs with index
@@ -126,30 +139,24 @@ object Tables {
     * Mirrors how [[lexicalGraph]] pre-builds the graph store. */
   def kmeansIvfIndex(s: SparkSession, dir: String,
                      nlist: Int = 8): (DataFrame, Array[Array[Double]]) =
-    ivfCache.getOrElseUpdate((s, dir, nlist), {
+    memo(s, ("ivf", dir, nlist)) {
       val emb = t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
       val (assigned, centers) =
         graft.ops.MlAnn.kmeansIvf(emb, "embedding", "vec_id", nlist)
       (assigned.coalesce(cachePartitions(s)).cache(), centers)
-    })
-
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, Array[Array[Double]])]
+    }
 
   /** Deterministic-KMeans IVF index (MlAnn.detKmeansIvf): same warm-layer
     * contract as [[kmeansIvfIndex]], but the centroids are engine-replayable
     * so the probing query carries a full hash oracle. */
   def detKmeansIvfIndex(s: SparkSession, dir: String, nlist: Int = 8,
                         iters: Int = 2): (DataFrame, Array[Array[Double]]) =
-    detIvfCache.getOrElseUpdate((s, dir, nlist, iters), {
+    memo(s, ("detIvf", dir, nlist, iters)) {
       val emb = t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
       val (assigned, centers) =
         graft.ops.MlAnn.detKmeansIvf(emb, "embedding", "vec_id", nlist, iters)
       (assigned.coalesce(cachePartitions(s)).cache(), centers)
-    })
-
-  private val detIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), (DataFrame, Array[Array[Double]])]
+    }
 
   /** Product-quantization index (codes frame + per-subspace codebooks),
     * trained + encoded ONCE per (session, dir) like [[detKmeansIvfIndex]] —
@@ -157,17 +164,13 @@ object Tables {
     * the tiny codes table against a driver-built distance table. */
   def pqIndex(s: SparkSession, dir: String, m: Int = 2, codes: Int = 4,
               iters: Int = 1): (DataFrame, Array[Array[Array[Double]]]) =
-    pqCache.getOrElseUpdate((s, dir, m, codes, iters), {
+    memo(s, ("pq", dir, m, codes, iters)) {
       val emb = t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
       val cbs = graft.ops.MlAnn.pqTrain(emb, "embedding", "vec_id",
         dim = 64, m = m, codes = codes, iters = iters)
       (graft.ops.MlAnn.pqEncode(emb, "embedding", "vec_id", cbs)
         .coalesce(cachePartitions(s)).cache(), cbs)
-    })
-
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int),
-           (DataFrame, Array[Array[Array[Double]]])]
+    }
 
   /** RESIDUAL product-quantization index over the det-KMeans coarse
     * assignment (codes trained/encoded on vector − coarse centroid — the
@@ -178,17 +181,13 @@ object Tables {
   def pqResidualIndex(s: SparkSession, dir: String, m: Int = 2,
                       codes: Int = 4, iters: Int = 1)
   : (DataFrame, Array[Array[Array[Double]]]) =
-    pqResidualCache.getOrElseUpdate((s, dir, m, codes, iters), {
+    memo(s, ("pqResidual", dir, m, codes, iters)) {
       val (assigned, centers) = detKmeansIvfIndex(s, dir)
       val cbs = graft.ops.MlAnn.pqTrainResidual(assigned, centers,
         dim = 64, m = m, codes = codes, iters = iters)
       (graft.ops.MlAnn.pqEncodeResidual(assigned, centers, cbs)
         .coalesce(cachePartitions(s)).cache(), cbs)
-    })
-
-  private val pqResidualCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int),
-           (DataFrame, Array[Array[Array[Double]]])]
+    }
 
   /** Memoized PageRank adjacency layout (deduped src-partitioned edges +
     * degree, node-partitioned vertex set) over [[edges]] — graph-storage
@@ -197,52 +196,37 @@ object Tables {
     * query. The frames are lazy local checkpoints; the bench warmup
     * materializes them alongside the other store tables. */
   def pageRankAdjacency(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    prAdjCache.getOrElseUpdate((s, dir),
+    memo(s, ("prAdj", dir))(
       graft.byokg.Traversal.pageRankAdjacency(edges(s, dir)))
-
-  private val prAdjCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** Memoized dst-partitioned orientation of [[pageRankAdjacency]]'s eDeg —
     * the layout the count-gated broadcast iteration path joins (the
     * hitsLayout two-orientation discipline). Storage material: built once,
     * warmed with the other layouts. */
   def pageRankAdjacencyByDst(s: SparkSession, dir: String): DataFrame =
-    prByDstCache.getOrElseUpdate((s, dir),
+    memo(s, ("prByDst", dir))(
       graft.byokg.Traversal.pageRankAdjacencyByDst(pageRankAdjacency(s, dir)._2))
-
-  private val prByDstCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Memoized dst-partitioned orientation of [[weightedAdjacency]]'s eW —
     * same role as [[pageRankAdjacencyByDst]] for the weighted variant. */
   def weightedAdjacencyByDst(s: SparkSession, dir: String): DataFrame =
-    wByDstCache.getOrElseUpdate((s, dir),
+    memo(s, ("wByDst", dir))(
       graft.byokg.Traversal.pageRankAdjacencyByDst(weightedAdjacency(s, dir)._1))
-
-  private val wByDstCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Memoized LPA layout (dst-partitioned+sorted undirected edges + vertex
     * set) over [[edges]] — graph-storage material like [[pageRankAdjacency]]:
     * built once per (session, dir), probed by every community query. */
   def lpaLayout(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    lpaCache.getOrElseUpdate((s, dir),
+    memo(s, ("lpa", dir))(
       graft.byokg.Traversal.lpaLayout(edges(s, dir)))
-
-  private val lpaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** Memoized HITS per-join-key edge layouts over [[pageRankAdjacency]]'s
     * deduped edges — graph-storage material like the other layouts: built
     * once, probed by every HITS run (reps reuse the caches instead of
     * rebuilding-then-unpersisting per call). */
   def hitsLayout(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    hitsCache.getOrElseUpdate((s, dir),
+    memo(s, ("hits", dir))(
       graft.byokg.Traversal.hitsLayout(pageRankAdjacency(s, dir)._2))
-
-  private val hitsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
 
   /** Memoized rank-indexed walk adjacency over [[edges]] — graph-storage
     * material like [[pageRankAdjacency]]. CACHED (not checkpointed) so the
@@ -250,11 +234,8 @@ object Tables {
     * join — a localCheckpoint would forget the output partitioning and
     * re-shuffle the adjacency on every step. */
   def walkLayout(s: SparkSession, dir: String): DataFrame =
-    walkCache.getOrElseUpdate((s, dir),
+    memo(s, ("walk", dir))(
       graft.byokg.Traversal.rankedAdjacency(edges(s, dir)).cache())
-
-  private val walkCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Memoized degree-oriented triangle layout over the INT-keyed
     * co-purchase projection (parts sharing an order) — projection +
@@ -262,7 +243,7 @@ object Tables {
     * wedge join. Integer part keys: the string-prefixed form measured ~2×
     * slower through the joins. */
   def coPurchaseTriangleLayout(s: SparkSession, dir: String): DataFrame =
-    triCache.getOrElseUpdate((s, dir), {
+    memo(s, ("tri", dir)) {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -270,10 +251,7 @@ object Tables {
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .select(col("a.pk").as("src"), col("b.pk").as("dst"))
       graft.byokg.Traversal.triangleLayout(co)
-    })
-
-  private val triCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    }
 
   /** Memoized per-node triangle counts over [[coPurchaseTriangleLayout]] —
     * the wedge-join pass runs ONCE per (session, dir) and both triangle
@@ -284,13 +262,10 @@ object Tables {
     * degrees); NOT pre-warmed by the bench, so the first consumer pays the
     * honest compute cost. */
   def coPurchaseTriangleCounts(s: SparkSession, dir: String): DataFrame =
-    triCountCache.getOrElseUpdate((s, dir),
+    memo(s, ("triCount", dir))(
       graft.byokg.Traversal
         .triangleCountsFrom(coPurchaseTriangleLayout(s, dir))
         .coalesce(cachePartitions(s)).cache())
-
-  private val triCountCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Memoized hub-capped co-purchase projection (parts sharing a ≤5-item
     * order, weighted) — graph-storage material like
@@ -298,16 +273,13 @@ object Tables {
     * shared by the link-prediction and modularity gates; the timed queries
     * run the wedge/labeling passes over the cached edge frame. */
   def coPurchaseProjection(s: SparkSession, dir: String): DataFrame =
-    coProjCache.getOrElseUpdate((s, dir), {
+    memo(s, ("coProj", dir)) {
       val inc = t(s, dir, "lineitem")
         .select(col("l_partkey").as("pk"), col("l_orderkey").as("ok"))
       graft.ops.LinkPrediction.projectBipartite(inc, "pk", "ok",
           maxRightDegree = 5)
         .coalesce(cachePartitions(s)).cache()
-    })
-
-  private val coProjCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    }
 
   /** Memoized weighted-PageRank adjacency over [[coPurchaseProjection]]:
     * symmetric weighted edges + per-src weight sums, src-partitioned and
@@ -315,7 +287,7 @@ object Tables {
     * frame — the weighted sibling of [[pageRankAdjacency]]. Also returns
     * the node frame. */
   def weightedAdjacency(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    wAdjCache.getOrElseUpdate((s, dir), {
+    memo(s, ("wAdj", dir)) {
       val proj = coPurchaseProjection(s, dir)
       val und = proj.select(col("a").as("src"), col("b").as("dst"),
           col("weight").as("w"))
@@ -327,41 +299,32 @@ object Tables {
       val nodes = und.select(col("src").as("node")).distinct()
         .coalesce(cachePartitions(s)).cache()
       (eW, nodes)
-    })
-
-  private val wAdjCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    }
 
   /** Memoized per-doc distinct 3-shingle sets over documents — corpus
     * storage material (the normalize+shingle pass every similarity op
     * starts from): built once at ingest, probed by the set-similarity
     * gate's rank/verify passes. */
   def docShingles(s: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, dir), {
+    memo(s, ("shingle", dir)) {
       graft.functions.WordShingles.register(s)
       t(s, dir, "documents")
         .select(col("doc_id").as("id"),
           graft.functions.WordShingles.shingles(col("text"), 3).as("toks"))
         .filter(size(col("toks")) >= 1)
         .coalesce(cachePartitions(s)).cache()
-    })
-
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    }
 
   /** 60-bit-hashed view of [[docShingles]] (md5/h60, the minhash element
     * discipline): long set elements shuffle and sort at a fraction of the
     * string cost, and both engines hash identically so set cardinalities
     * replay exactly. This is the set-similarity index material. */
   def docShingleHashes(s: SparkSession, dir: String): DataFrame =
-    shingleHashCache.getOrElseUpdate((s, dir),
+    memo(s, ("shingleHash", dir))(
       docShingles(s, dir)
         .select(col("id"), array_distinct(transform(col("toks"),
           t => graft.functions.HashFunctions.h60(t))).as("toks"))
         .cache())
-
-  private val shingleHashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** The full-chain retrieval statement store: lineitem⋈orders projected to
     * the DERIVED retrieval columns (md5 statement ids, statement text,
@@ -374,7 +337,7 @@ object Tables {
     * invocation ~4s of index-build work (measured: the base checkpoint
     * was 5.5s cold / ~3s warm of the query's 7s isolated cost). */
   def retrievalStatements(s: SparkSession, dir: String): DataFrame =
-    retrievalStmtCache.getOrElseUpdate((s, dir), {
+    memo(s, ("retrievalStmt", dir)) {
       val ord = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
       t(s, dir, "lineitem")
@@ -404,10 +367,7 @@ object Tables {
         // serialized that first stage (the other cached layouts are small
         // lookup frames where fewer, larger partitions win)
         .cache()
-    })
-
-  private val retrievalStmtCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** Node property table for the derived graph — `(id, value, class,
     * search_str)`, the lexical-graph property columns the retrievers read
@@ -417,11 +377,8 @@ object Tables {
     * (the reference stores node properties alongside the adjacency;
     * graph_utils.py:121-157 node_result projects them). */
   def nodeProps(s: SparkSession, dir: String): DataFrame =
-    nodePropsCache.getOrElseUpdate((s, dir),
+    memo(s, ("nodeProps", dir))(
       buildNodeProps(s, dir).coalesce(cachePartitions(s)).cache())
-
-  private val nodePropsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   private def buildNodeProps(s: SparkSession, dir: String): DataFrame = {
     // `price` is the per-class numeric property (customer/supplier account
@@ -484,7 +441,7 @@ object Tables {
     * `priority` (order priority, placed edges); null on other labels.
     * Memoized + cached like [[edges]]. */
   def edgesWithProps(s: SparkSession, dir: String): DataFrame =
-    edgesWithPropsCache.getOrElseUpdate((s, dir), {
+    memo(s, ("edgesWithProps", dir)) {
       val orders = t(s, dir, "orders")
       val lineitem = t(s, dir, "lineitem")
       val placed = orders.select(
@@ -508,10 +465,7 @@ object Tables {
           lit(null).cast("string").as("priority"))
       placed.union(contains).union(suppliedBy)
         .coalesce(cachePartitions(s)).cache()
-    })
-
-  private val edgesWithPropsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** The same property-carrying edge set as DuckDB SQL. */
   val edgesWithPropsSql: String =
@@ -533,7 +487,7 @@ object Tables {
     * `;`-joined id_fields string. Memoized + cached like [[edges]];
     * graph-store material, not query work. */
   def stmtGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    stmtGraphCache.getOrElseUpdate((s, dir), {
+    memo(s, ("stmtGraph", dir)) {
       val li = t(s, dir, "lineitem").select(
         col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
         col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
@@ -618,25 +572,19 @@ object Tables {
         .sortWithinPartitions("label", "src").cache(),
         propsDf.coalesce(cachePartitions(s))
           .sortWithinPartitions("id").cache())
-    })
-
-  private val stmtGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    }
 
   /** The `$statementIds` parameter of the statements_cypher gates: every
     * statement of every 97th order — a bounded driver-side literal list,
     * exactly how the reference binds the parameter (the ids arrive from
     * the preceding VSS round trip). Memoized per (session, dir). */
   def stmtStatementIds(s: SparkSession, dir: String): Seq[String] =
-    stmtIdsCache.getOrElseUpdate((s, dir),
+    memo(s, ("stmtIds", dir))(
       t(s, dir, "lineitem").filter(col("l_orderkey") % 97 === 0)
         .select(concat(lit("L:"), col("l_orderkey"), lit("-"),
           col("l_linenumber"), lit("-"), col("l_partkey"), lit("-"),
           col("l_suppkey")).as("id"))
         .collect().map(_.getString(0)).toSeq.sorted)
-
-  private val stmtIdsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[String]]
 
   /** Entity graph — the reference's entity-based search shape
     * (entity_based_search.py:150-159: entities joined by RELATION,
@@ -648,7 +596,7 @@ object Tables {
     * the previous line number's statements within its order. Memoized +
     * cached like [[stmtGraph]]; graph-store material, not query work. */
   def entGraph(s: SparkSession, dir: String): DataFrame =
-    entGraphCache.getOrElseUpdate((s, dir), {
+    memo(s, ("entGraph", dir)) {
       val li = t(s, dir, "lineitem").select(
         col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
         col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
@@ -674,10 +622,7 @@ object Tables {
         .coalesce(cachePartitions(s))
         // clustered by the hop predicates, like [[stmtGraph]]
         .sortWithinPartitions("label", "src").cache()
-    })
-
-  private val entGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    }
 
   /** The same edge set as DuckDB SQL (for oracle queries). */
   val edgesSql: String =

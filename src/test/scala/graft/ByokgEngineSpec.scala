@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LocalRelation}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
@@ -38,6 +38,83 @@ class ByokgEngineSpec extends SparkSpec {
       .select("mention", "node").as[(String, String)].collect().toMap
     assert(out("acmee") == "acme")
     assert(out("berlln") == "berlin")
+  }
+
+  /** `rows` by mention, then rank. */
+  private def byRank(rows: Seq[Row]): Seq[Row] =
+    rows.sortBy(r => (r.getString(0), r.getInt(3)))
+
+  /** Asserts the index over `nodes` returns the Spark link's rows. */
+  private def sameLinks(nodes: Seq[String], mentions: Seq[String]): Unit = {
+    val frame = nodes.toDF("node")
+    val index = EntityLinker.FuzzyIndex.build(frame, "node").get
+    for (k <- Seq(1, 3)) {
+      val want = byRank(EntityLinker.fuzzyLink(frame, "node", mentions, k)
+        .collect().toSeq)
+      assert(byRank(index.link(mentions, k)) == want, s"k = $k")
+    }
+  }
+
+  /** `body` with ANSI mode set to `on`, restored after. */
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val was = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", on.toString)
+    try body finally spark.conf.set("spark.sql.ansi.enabled", was)
+  }
+
+  test("the fuzzy index returns the Spark link's rows: ties in UTF-8 " +
+    "order, case variants, duplicate nodes and the length gate") {
+    // U+FF21 sorts before U+1D538 in UTF-8 bytes, after it in UTF-16
+    sameLinks(Seq("\uFF21b", "\uD835\uDD38b", "xa", "Acme", "ACME", "acme",
+      "acme corp", "ab", "ab", "abc", "a" * 13, "a" * 14),
+      Seq("xb", "aCmE", "acme", "ab", "a", "abcdefghijklm", "a" * 24, "a" * 25))
+  }
+
+  test("the fuzzy index returns the Spark link's rows: duplicate, null and " +
+    "empty mentions, also against an empty node") {
+    sameLinks(Seq("acme", "alice", "ab"), Seq("acme", "acme", null, "", "al"))
+    // Spark divides 0 by 0 for the empty mention and the empty node: a
+    // null score that ranks first without ANSI mode, an error with it
+    val withEmpty = Seq("", "acme", "ab", "z")
+    withAnsi(on = false)(sameLinks(withEmpty, Seq("", "", "a", "acme")))
+    withAnsi(on = true) {
+      val index = EntityLinker.FuzzyIndex.build(withEmpty.toDF("node"), "node").get
+      intercept[Exception](EntityLinker.fuzzyLink(withEmpty.toDF("node"),
+        "node", Seq(""), 1).collect())
+      intercept[ArithmeticException](index.link(Seq(""), 1))
+      assert(index.link(Seq("a"), 1) == EntityLinker.fuzzyLink(
+        withEmpty.toDF("node"), "node", Seq("a"), 1).collect().toSeq)
+    }
+  }
+
+  test("the fuzzy index returns the Spark link's rows: non-ASCII and " +
+    "supplementary-plane strings, lengths in code points") {
+    // İ lowercases to two code points, ß has no one-letter uppercase, ǅ is
+    // titlecase, and the mathematical A is one code point of two chars
+    sameLinks(Seq("İstanbul", "i\u0307stanbul", "istanbul", "straße",
+      "strasse", "ǅ", "ǆx", "\uD835\uDD38bc", "abc", "\uD835\uDD38" * 11, "é"),
+      Seq("İSTANBUL", "Istanbul", "STRASSE", "Straße", "ǆ", "\uD835\uDD38BC",
+        "aBC", "\uD835\uDD38", "E\u0301", "É", "İ" * 11))
+  }
+
+  test("the fuzzy index returns the Spark link's rows over a seeded " +
+    "random vocabulary with edited mentions") {
+    val r = new scala.util.Random(7)
+    val letters = Seq("a", "b", "c", "A", "B", "0", "1", "é", "\uD835\uDD38")
+    def word(n: Int) = Vector.fill(n)(letters(r.nextInt(letters.size)))
+    val nodes = Seq.fill(400)(word(r.nextInt(13))).distinct
+    // one code-point deletion, insertion or substitution
+    def edit(w: Vector[String]): Vector[String] = {
+      val at = r.nextInt(w.size + 1)
+      r.nextInt(3) match {
+        case 0 if at < w.size => w.patch(at, Nil, 1)
+        case 1 => w.patch(at, word(1), 0)
+        case _ => w.patch(at, word(1), 1)
+      }
+    }
+    val mentions = (Seq.fill(40)(edit(edit(nodes(r.nextInt(nodes.size))))) ++
+      Seq.fill(10)(word(1 + r.nextInt(12)))).map(_.mkString)
+    sameLinks(nodes.map(_.mkString), mentions.filter(_.nonEmpty))
   }
 
   test("denseLink returns cosine top-k") {
@@ -236,8 +313,8 @@ class ByokgEngineSpec extends SparkSpec {
     }
   }
 
-  test("two threads on one engine get the sequential rows; the vocabulary " +
-    "is built once") {
+  test("two threads on one engine get the sequential rows; the fuzzy " +
+    "index is built once") {
     val questions = Seq(("who founded acme", Seq("acmee")),
       ("where is berlin", Seq("berln")), ("zzz", Seq("alice", "germany")),
       ("capital of germany", Seq("germny")))
@@ -260,17 +337,16 @@ class ByokgEngineSpec extends SparkSpec {
       }
       futures.foreach(f => assert(f.get() == sequential))
     } finally pool.shutdown()
-    val cached = engine.vocabulary.queryExecution.withCachedData.collectFirst {
-      case r: InMemoryRelation => r }.get
-    // every cached partition was computed once: the rows the cache built
-    // are the distinct nodes, not a multiple of them
-    val distinctNodes = edges.select(col("src")).union(edges.select(col("dst")))
-      .distinct().count()
-    assert(cached.cacheBuilder.rowCountStats.value == distinctNodes)
+    // both threads' first calls raced for the index; one built it, over
+    // the distinct nodes, and no call cached the node set
+    assert(engine.nodes.builds.get == 1)
+    assert(engine.nodes.index.map(_.size).contains(4))
+    assert(!engine.nodes.frame.queryExecution.withCachedData.exists(
+      _.isInstanceOf[InMemoryRelation]))
   }
 
   test("engine construction runs no Spark job; a warm retrieveContext " +
-    "runs at most 6") {
+    "runs at most 2") {
     val sc = spark.sparkContext
     // Spark jobs started by `body`, counted once the listener bus drained
     // (the way PlanCensus counts)
@@ -295,8 +371,9 @@ class ByokgEngineSpec extends SparkSpec {
     var engine: ByoKGQueryEngine = null
     assert(jobsOf { engine = new ByoKGQueryEngine(e, new StubLLM, 2) } == 0)
     context(engine, "who founded acme", Seq("acmee"))
+    // the link is a driver lookup; one probe job per hop
     val warm = jobsOf(context(engine, "where is berlin", Seq("berln", "acme")))
-    assert(warm <= 6, s"$warm jobs")
+    assert(warm <= 2, s"$warm jobs")
   }
 
   // ----- KGLinker artifact protocol (kg_linker.py:15-140) -----
@@ -438,6 +515,32 @@ class ByokgEngineSpec extends SparkSpec {
       reranker = Some(new TokenOverlapReranker))
     val ctx = engine.query("who founded acme", iterations = 1)
     assert(ctx.nonEmpty)
+  }
+
+  test("integer node ids: both engines link through the Spark link and " +
+    "keep the ids' type") {
+    // 1 -founded_by-> 2 ; 1 -located_in-> 3 ; 3 -capital_of-> 4
+    val ids = Seq((1L, 2L, "founded_by"), (1L, 3L, "located_in"),
+      (3L, 4L, "capital_of")).toDF("src", "dst", "label")
+    val kgqa = new ByoKGQueryEngine(ids, new StubLLM, iterations = 2)
+    val got = context(kgqa, "who founded 1", Seq("1"))
+    assert(got == plainContext(ids, "who founded 1", Seq("1"), 2))
+    assert(got.map(_._1).contains("1 [founded_by] 2"))
+    assert(kgqa.nodes.index.isEmpty)
+    val turn =
+      """<entities>
+        |1
+        |</entities>
+        |<paths>
+        |located_in -> capital_of
+        |</paths>
+        |<answers>3</answers>
+        |<task-completion>FINISH</task-completion>""".stripMargin
+    val ctx = new ByoKGIterativeEngine(ids, new ScriptedLLM(Seq(turn)))
+      .query("who founded 1", iterations = 1)
+    assert(ctx.contains("1 [founded_by] 2"))
+    assert(ctx.contains("3 [capital_of] 4"))
+    assert(ctx.contains("1 -> located_in > 3 > capital_of -> 4"))
   }
 
   test("GraphScoringRetriever composes k-hop, relation pruning, and rerank") {
