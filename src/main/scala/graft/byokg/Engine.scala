@@ -345,12 +345,15 @@ private[byokg] final class KgNodes(edges: DataFrame) {
   /** The node set, cached; only links past the index's cap use it. */
   private lazy val vocabulary: DataFrame = frame.cache()
 
-  /** The (mention, node, score, rk) rows of each non-null mention's best
-    * node. */
-  def link(mentions: Seq[String]): Seq[Row] =
-    if (mentions.isEmpty) Nil
-    else index.fold(EntityLinker.fuzzyLink(vocabulary, "node", mentions, k = 1)
-      .collect().toSeq)(_.link(mentions, k = 1))
+  /** The (mention, node, score, rk) rows of each non-null, non-empty
+    * mention's best node. An empty mention links to nothing: it scores
+    * alike against every short node, and 0 / 0 against an empty node. */
+  def link(mentions: Seq[String]): Seq[Row] = {
+    val ms = mentions.filterNot(_ == "")
+    if (ms.isEmpty) Nil
+    else index.fold(EntityLinker.fuzzyLink(vocabulary, "node", ms, k = 1)
+      .collect().toSeq)(_.link(ms, k = 1))
+  }
 
   /** `nodes` as a frame of one `node` column of the node type. */
   def seeds(nodes: Seq[Any]): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
- * Deterministic hash families for dedup sketches (minhash, simhash).
+ * Deterministic hash families for dedup sketches (minhash).
  *
  * All hashes derive from md5 so the exact same signatures are computable in
  * any engine (the DuckDB oracle recomputes them from the same formula) and
@@ -44,29 +44,5 @@ object HashFunctions {
       array_min(transform(bases,
         b => ((b % MinhashPrime) * (i + 1) + i) % MinhashPrime))
     }: _*)
-  }
-
-  /**
-   * SimHash over 32 bits: sum ±1 votes per bit position across token hashes,
-   * bit set where the vote is positive. 32 bits keeps every intermediate in
-   * positive Long range so the same formula runs unmodified in the SQL oracle.
-   */
-  def simhash32(text: Column): Column = {
-    val toks = array_distinct(split(TextFunctions.searchStr(text), "\\s+"))
-    val bits = (0 until 32).map { b =>
-      // vote_b = sum over tokens of (bit b of h60(tok) == 1 ? 1 : -1)
-      val vote = aggregate(
-        toks,
-        lit(0L),
-        (acc, t) => acc + (shiftright(h60(t), b) % 2) * 2L - 1L)
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Hamming distance between two simhash values (bit-parallel popcount). */
-  def hammingDist32(a: Column, b: Column): Column = {
-    val x = a.bitwiseXOR(b)
-    bit_count(x)
   }
 }

@@ -222,7 +222,7 @@ object WordShingles {
 /**
  * All-occurrence word n-grams as one compiled pass — the counting sibling of
  * [[WordShingles]] (which dedups, set semantics) for frequency passes where
- * every occurrence counts: corpus vocabulary statistics, repetition metrics.
+ * every occurrence counts: corpus vocabulary statistics, heavy hitters.
  * Matches the interpreted `transform`/`slice`/`concat_ws` construction
  * exactly, including yielding NO grams when the document has fewer than `n`
  * tokens (the sketch expression instead emits one short shingle there).

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.{col, explode, posexplode, struct}
  * the sort is the cost (kNN candidates, fuzzy-link scoring, per-key
  * truncation over wide retrieval rows); for k = 1 prefer a codegen'd
  * `min_by`/`max_by` winner (half the window's bytes, no object
- * aggregation — see Dedup.exact, Processors.dedupResults).
+ * aggregation — see Processors.dedupResults).
  *
  * Ordering: rows rank by the BINARY ascending order of a packed sort-key
  * struct; k smallest survive. Descending numeric keys enter negated (the

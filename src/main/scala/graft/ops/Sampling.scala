@@ -1,200 +1,22 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFunctions => H}
 
 /**
- * Deterministic sampling for training-data pipelines.
+ * Deterministic sampling.
  *
  * Random-number sampling (`df.sample`) depends on partition layout and RNG
  * state, so a resumed or re-partitioned 100 TB job samples a different set.
  * Hash sampling decides per ROW from a content hash: the same row is in or
  * out under any partitioning, any executor count, any engine — which also
- * makes it DuckDB-replayable, joinable across tables (sample the same
- * entities everywhere), and monotone in the rate (rate 0.2 ⊇ rate 0.1).
- * The reference's InferClassifications chunk sampling is the same idea's
- * in-memory cousin (indexing/extract/infer_classifications.py).
+ * makes it DuckDB-replayable and joinable across tables (sample the same
+ * entities everywhere). The reference's InferClassifications chunk sampling
+ * is the same idea's in-memory cousin
+ * (indexing/extract/infer_classifications.py).
  */
 object Sampling {
-
-  /** Uniform [0,1) from the row's id: h60 is a 60-bit md5 slice, so the
-    * ratio is an exact dyadic rational both engines compute identically. */
-  def uniform01(c: Column, salt: String = ""): Column =
-    H.h60(concat_ws("#", lit(salt), c.cast("string"))).cast("double") /
-      lit(1.152921504606847e18)
-
-  /** Keep each row with probability `rate`, decided by its id hash. `salt`
-    * derives independent samples from the same corpus. */
-  def hashSample(df: DataFrame, idCol: String, rate: Double,
-                 salt: String = ""): DataFrame = {
-    require(rate >= 0.0 && rate <= 1.0, s"rate $rate outside [0,1]")
-    df.filter(uniform01(col(idCol), salt) < rate)
-  }
-
-  /** Stratified hash sample: a per-stratum rate map with a default for
-    * unlisted strata — the standard source/language rebalancing step when
-    * assembling a training mix. One narrow pass, no shuffle. */
-  def stratified(df: DataFrame, idCol: String, strataCol: String,
-                 rates: Map[String, Double], defaultRate: Double = 0.0,
-                 salt: String = ""): DataFrame = {
-    require((rates.values ++ Seq(defaultRate)).forall(r => r >= 0 && r <= 1),
-      "rates outside [0,1]")
-    val rateCol = rates.toSeq.sortBy(_._1).foldLeft(lit(defaultRate)) {
-      case (acc, (k, v)) => when(col(strataCol) === k, lit(v)).otherwise(acc)
-    }
-    df.filter(uniform01(col(idCol), salt) < rateCol)
-  }
-
-  /** Rebalance a corpus to target mixture proportions: compute the largest
-    * feasible output size given per-stratum availability, derive each
-    * stratum's keep rate from it, and hash-filter — the data-mixture
-    * assembly step ("X% web, Y% code, Z% academic") done without ever
-    * over-drawing a stratum. Strata not in `targets` are dropped.
-    *
-    * The stratum-count aggregate is one map-side-combined pass; the rate
-    * frame has one row per target stratum (bounded by the map you pass), so
-    * its broadcast is safe at any corpus size. Rates are plain IEEE double
-    * arithmetic on exact counts, so DuckDB replays the decision bit-for-bit. */
-  def targetMix(df: DataFrame, idCol: String, strataCol: String,
-                targets: Map[String, Double], salt: String = ""): DataFrame = {
-    require(targets.nonEmpty, "targets must be non-empty")
-    require(targets.values.forall(_ > 0), "target shares must be positive")
-    val shareCol = targets.toSeq.sortBy(_._1).foldLeft(lit(0.0)) {
-      case (acc, (k, v)) => when(col(strataCol) === k, lit(v)).otherwise(acc)
-    }
-    val counts = df.filter(col(strataCol).isin(targets.keys.toSeq: _*))
-      .groupBy(strataCol).agg(count(lit(1)).as("_n"))
-      .withColumn("_share", shareCol)
-    // max feasible total = min over strata of n_s / share_s. A target
-    // stratum with NO rows zeroes the feasible size (its count never enters
-    // the min otherwise, and the output would silently violate the
-    // requested proportions — e.g. a 100% mix labeled 50/50): no mixture
-    // honoring every positive share exists, so the honest sample is empty.
-    val feasible = counts.agg(
-      when(count(lit(1)) === targets.size, min(col("_n") / col("_share")))
-        .otherwise(lit(0.0)).as("_t"))
-    val rates = counts.crossJoin(broadcast(feasible))
-      .withColumn("_rate", least(lit(1.0), col("_share") * col("_t") / col("_n")))
-      .select(col(strataCol), col("_rate"))
-    df.join(broadcast(rates), Seq(strataCol))
-      .filter(uniform01(col(idCol), salt) < col("_rate"))
-      .drop("_rate")
-  }
-
-  /**
-   * [[targetMix]] with a WEIGHT column: mixture proportions and keep
-   * rates are computed over Σweight (token counts, bytes) instead of row
-   * counts — "30% of the TOKENS from web" is the budget a training mix
-   * actually specifies, and doc-count mixing distorts it whenever
-   * document lengths differ across strata. Rows are still kept whole by
-   * content hash, so the realized token share matches the target in
-   * expectation (exact token-level splitting would cut documents).
-   * Same feasibility rule as [[targetMix]]: the largest total where no
-   * stratum over-draws; a target stratum with zero weight empties the
-   * mix. Weights must be non-negative; zero-weight rows ride along at
-   * their stratum's rate (they cost nothing from the budget).
-   */
-  def targetMixWeighted(df: DataFrame, idCol: String, strataCol: String,
-                        weightCol: String, targets: Map[String, Double],
-                        salt: String = ""): DataFrame = {
-    require(targets.nonEmpty, "targets must be non-empty")
-    require(targets.values.forall(_ > 0), "target shares must be positive")
-    val shareCol = targets.toSeq.sortBy(_._1).foldLeft(lit(0.0)) {
-      case (acc, (k, v)) => when(col(strataCol) === k, lit(v)).otherwise(acc)
-    }
-    val sums = df.filter(col(strataCol).isin(targets.keys.toSeq: _*))
-      .groupBy(strataCol)
-      .agg(sum(col(weightCol).cast("double")).as("_w"))
-      .withColumn("_share", shareCol)
-    val feasible = sums.agg(
-      when(count(lit(1)) === targets.size && min(col("_w")) > 0,
-        min(col("_w") / col("_share")))
-        .otherwise(lit(0.0)).as("_t"))
-    // the zero-weight guard matters under ANSI mode: _t is already 0 when
-    // any stratum has no weight, but share·t/w would still divide by zero
-    val rates = sums.crossJoin(broadcast(feasible))
-      .withColumn("_rate",
-        when(col("_w") > 0,
-          least(lit(1.0), col("_share") * col("_t") / col("_w")))
-          .otherwise(lit(0.0)))
-      .select(col(strataCol), col("_rate"))
-    df.join(broadcast(rates), Seq(strataCol))
-      .filter(uniform01(col(idCol), salt) < col("_rate"))
-      .drop("_rate")
-  }
-
-  /**
-   * Weighted sampling WITHOUT replacement, k items (Efraimidis–Spirakis
-   * A-Res): each row draws priority u^(1/w) from its content hash and the
-   * top-k priorities win — the exact distributed analogue of weighted
-   * reservoir sampling (quality-weighted corpus draws, importance-weighted
-   * eval sets). Comparing ln(u)/w (monotone in u^(1/w)) avoids the pow;
-   * one codegen'd scan into TakeOrderedAndProject, no shuffle beyond the
-   * top-k. Deterministic like every op here: same row set under any
-   * partitioning, and DuckDB-replayable (u is an exact dyadic rational;
-   * a priority tie at double resolution is ~2⁻⁶⁰-improbable, and ids break
-   * it). Rows with weight <= 0 are excluded (they'd never win anyway but
-   * ln(u)/0 is undefined).
-   */
-  /**
-   * Temperature (α) sampling over strata — the mT5/XLM-R language-mix
-   * rule: sampling shares q_s ∝ p_s^α, α < 1 upsampling low-resource
-   * strata. The exact feasible mix (largest total where no stratum
-   * over-draws, the [[targetMix]] discipline) reduces to the closed form
-   *
-   *   rate_s = min(1, (n_min / n_s)^(1−α))
-   *
-   * because the q normalizer Σ n_j^α cancels: rate_s = (q_s/n_s)·T with
-   * T = min_j n_j/q_s ⇒ (n_s^α/n_s)·min_j n_j^(1−α). That cancellation
-   * is deliberate — there is NO cross-stratum floating-point SUM, so the
-   * result never depends on aggregation order (a Σ over strata is the
-   * one place an α-mix replay can wobble in the last ulp between
-   * engines). The rarest stratum keeps everything; expected kept counts
-   * are ∝ n_s^α · n_min^(1−α) ∝ q_s, the temperature mix.
-   *
-   * α = 0.5 (the common temperature) computes via `sqrt` — correctly
-   * rounded by IEEE 754 in every engine, so the keep decision replays
-   * bit-exactly; other α use `pow`, which libm implementations may round
-   * differently in the last ulp (documented trade: the gate flips only
-   * for a row whose 60-bit hash lands inside that ulp window).
-   * Rows keep/drop by content hash ([[uniform01]]) — partition-order
-   * independent, rerun-stable, like every sampler here.
-   */
-  def temperatureMix(df: DataFrame, idCol: String, strataCol: String,
-                     alpha: Double = 0.5, salt: String = ""): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    // NULL strata form their OWN stratum (sampled like any other), via a
-    // sentinel key: grouping alone would form the null stratum but the
-    // equi-join below never matches null keys, silently DROPPING every
-    // null-stratum row from the output — the sentinel keeps group and
-    // join semantics aligned. The NUL prefix cannot collide with a real label.
-    val stratum = coalesce(col(strataCol).cast("string"),
-      lit("\u0000graft:null-stratum"))
-    val keyed = df.withColumn("_stratum", stratum)
-    val counts = keyed.groupBy("_stratum").agg(count(lit(1)).as("_n"))
-    def ratio(c: Column): Column = // n^(1-alpha), the n/n^alpha ratio
-      if (alpha == 0.5) sqrt(c) else pow(c, lit(1.0 - alpha))
-    val shares = counts.withColumn("_npa", ratio(col("_n").cast("double")))
-    val minNpa = shares.agg(min(col("_npa")).as("_m"))
-    val rates = shares.crossJoin(broadcast(minNpa))
-      .withColumn("_rate", least(lit(1.0), col("_m") / col("_npa")))
-      .select(col("_stratum"), col("_rate"))
-    keyed.join(broadcast(rates), Seq("_stratum"))
-      .filter(uniform01(col(idCol), salt) < col("_rate"))
-      .drop("_rate", "_stratum")
-  }
-
-  def weightedSample(df: DataFrame, idCol: String, weightCol: String,
-                     k: Int, salt: String = ""): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val key = log(uniform01(col(idCol), salt)) / col(weightCol).cast("double")
-    df.filter(col(weightCol) > 0)
-      .withColumn("_pri", key)
-      .orderBy(desc("_pri"), col(idCol))
-      .limit(k)
-      .drop("_pri")
-  }
 
   /**
    * Cluster-balanced (diversity) sampling: keep up to `perCell` rows per
@@ -205,48 +27,18 @@ object Sampling {
    * `rankCol` in hash order. One heap aggregate
    * ([[graft.functions.TopKAgg]]), map-side combine, O(perCell) state per
    * cell — no window sort over the corpus, so a billion-row cell costs
-   * one pass. Hash-chosen like every sampler here: the draw is stable
-   * under repartitioning and monotone in `perCell`.
+   * one pass. Hash-chosen: the draw is stable under repartitioning and
+   * monotone in `perCell`.
    */
   def clusterBalanced(assigned: DataFrame, idCol: String, cellCol: String,
                       perCell: Int, salt: String = "",
                       rankCol: String = "rn"): DataFrame = {
     require(perCell >= 1, s"perCell must be >= 1, got $perCell")
-    // order by the 60-bit integer hash, not uniform01's double: the
-    // division is monotone but collapses 60 bits onto 53, and the oracle
-    // must tie-break identically
+    // order by the 60-bit integer hash, not a [0,1) double: the division
+    // is monotone but collapses 60 bits onto 53, and the oracle must
+    // tie-break identically
     val h = H.h60(concat_ws("#", lit(salt), col(idCol).cast("string")))
     graft.functions.TopKAgg.topKPerKeyRanked(
       assigned, Seq(cellCol), Seq(h, col(idCol)), perCell, rankCol)
-  }
-
-  /**
-   * Deterministic train/validation/test assignment: each row gets a
-   * `split` label from its id hash against the cumulative fraction
-   * thresholds of `splits` (ordered; the last split absorbs the residual
-   * mass, so fractions summing to < 1 inflate it and > 1 is rejected).
-   * Because the decision is the SAME content hash as [[hashSample]],
-   * splits are stable under repartitioning/resume, consistent across
-   * tables keyed by the same id (an entity lands in `test` everywhere —
-   * the leakage guarantee train/test splits exist for), and disjoint by
-   * construction. One narrow projection: no shuffle, no RNG state.
-   */
-  def hashSplit(df: DataFrame, idCol: String,
-                splits: Seq[(String, Double)], salt: String = ""): DataFrame = {
-    require(splits.size >= 2, s"need >= 2 splits, got ${splits.size}")
-    require(splits.map(_._1).distinct.size == splits.size,
-      s"split names must be distinct, got ${splits.map(_._1)}")
-    require(splits.forall(_._2 > 0), "split fractions must be positive")
-    val cum = splits.map(_._2).scanLeft(0.0)(_ + _).tail
-    require(cum.last <= 1.0 + 1e-9,
-      s"split fractions sum to ${cum.last} > 1")
-    val u = uniform01(col(idCol), salt)
-    // thresholds in declared order; the final branch is the catch-all so
-    // rounding in the cumulative sum can never leave a row unlabeled
-    val label = splits.init.zip(cum.init).reverse
-      .foldLeft(lit(splits.last._1): Column) {
-        case (acc, ((name, _), hi)) => when(u < hi, lit(name)).otherwise(acc)
-      }
-    df.withColumn("split", label)
   }
 }

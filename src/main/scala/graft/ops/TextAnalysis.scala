@@ -100,197 +100,6 @@ object TextAnalysis {
         row_number().over(Window.orderBy(desc("freq"), col("gram"))))
   }
 
-  /** Corpus quality filter: keep docs above a score threshold and within a
-    * token-length band — the standard pre-training corpus gate. */
-  def qualityFilter(docs: DataFrame, textCol: String,
-                    minScore: Double = 0.5,
-                    minTokens: Int = 5,
-                    maxTokens: Int = 1000000): DataFrame = {
-    graft.functions.TextStats.register(docs.sparkSession)
-    val d = derived(graft.functions.TextStats.stats(col(textCol)))
-    docs.filter(
-      d("quality_score") >= minScore &&
-        d("token_count").between(minTokens, maxTokens))
-  }
-
-  /** Per-document n-gram repetition metrics — the Gopher-style repetition
-    * rules (fraction of duplicate n-grams, most-frequent-n-gram share) that
-    * gate machine-generated or boilerplate text out of a pre-training mix.
-    *
-    * Emits one row per document having at least one n-gram:
-    * (id, total_grams, distinct_grams, dup_gram_frac, top_gram_frac,
-    * repetitive). The explode feeds a two-level aggregation whose first
-    * level is map-side combined on (id, gram) — the shuffle carries one row
-    * per distinct gram per document, never the raw token stream. */
-  def repetitionProfile(docs: DataFrame, textCol: String, idCol: String,
-                        n: Int = 2,
-                        maxDupFrac: Double = 0.3,
-                        maxTopFrac: Double = 0.2): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    graft.functions.WordGrams.register(docs.sparkSession)
-    val grams = graft.functions.WordGrams.grams(col(textCol), n)
-    // Thresholds as integer micro-units so the gate is exact integer
-    // arithmetic (no IEEE division in the comparison path) — engine- and
-    // partitioning-independent, and replayable bit-for-bit by any SQL oracle.
-    val dupE6 = math.round(maxDupFrac * 1e6)
-    val topE6 = math.round(maxTopFrac * 1e6)
-    docs.select(col(idCol), explode(grams).as("gram"))
-      .filter(length(col("gram")) > 0)
-      .groupBy(idCol, "gram").agg(count(lit(1)).as("cnt"))
-      .groupBy(idCol).agg(
-        sum("cnt").as("total_grams"),
-        count(lit(1)).as("distinct_grams"),
-        max("cnt").as("_top"))
-      .withColumn("dup_gram_frac",
-        lit(1.0) - col("distinct_grams").cast("double") / col("total_grams"))
-      .withColumn("top_gram_frac",
-        col("_top").cast("double") / col("total_grams"))
-      // Exact BIGINT micro-unit twins of the fractions (floor division) —
-      // the canonical output for hash-compared pipelines, since a rounded
-      // DOUBLE can render differently across engines while the underlying
-      // values are equal.
-      .withColumn("dup_gram_e6",
-        expr("(1000000L * (total_grams - distinct_grams)) div total_grams"))
-      .withColumn("top_gram_e6", expr("(1000000L * _top) div total_grams"))
-      .withColumn("repetitive",
-        (col("total_grams") - col("distinct_grams")) * lit(1000000L) >
-          lit(dupE6) * col("total_grams") ||
-        col("_top") * lit(1000000L) > lit(topE6) * col("total_grams"))
-      .drop("_top")
-  }
-
-  /** Deterministic stand-in for a fasttext-style linear quality classifier:
-    * every token gets an integer pseudo-weight in [-1000, 1000] derived from
-    * its md5 hash, the document score is the mean weight scaled to [-1, 1],
-    * and the label is the sign. The integer sum makes the score exact under
-    * any partitioning (and DuckDB-replayable); a trained model plugs in by
-    * replacing the hash weight with a broadcast vocabulary lookup — the
-    * Spark-side shape (one narrow in-row pass, no shuffle) is identical. */
-  def hashClassifierScore(docs: DataFrame, textCol: String,
-                          salt: String = "clf"): DataFrame = {
-    val toks = filter(split(T.searchStr(col(textCol)), "\\s+"),
-      t => length(t) > 0)
-    val raw = aggregate(toks, lit(0L), (acc, t) =>
-      acc + (graft.functions.HashFunctions.h60(
-        concat_ws("#", lit(salt), t)) % 2001L - 1000L))
-    docs
-      .withColumn("_n", size(toks))
-      .withColumn("clf_score",
-        when(col("_n") === 0, lit(0.0))
-          .otherwise(round(raw / (lit(1000.0) * col("_n")), 6)))
-      .withColumn("clf_keep", when(col("_n") === 0, lit(false))
-        .otherwise(raw > 0))
-      .drop("_n")
-  }
-
-  /**
-   * Corpus-trained unigram language-model surprisal — the CCNet-style
-   * "perplexity bucket" quality signal (Wenzek et al. 2020, CCNet): train a
-   * unigram LM on the corpus itself, score each document by its mean token
-   * surprisal in nats,
-   *
-   *   surprisal(d) = -(1/|d|) * sum over tokens t of ln(count(t) / N)
-   *               =  ln(N) - (1/|d|) * sum over tokens of ln(count(t)),
-   *
-   * so boilerplate-heavy documents (all high-frequency tokens) score LOW and
-   * lexically unusual ones score HIGH — the tails a curation pipeline trims.
-   *
-   * Two hash aggregates (per-doc term counts, corpus term counts — both
-   * map-side combined so the shuffle carries distinct terms, not the token
-   * stream) plus one join on the term key; no driver collect, no UDF. The
-   * per-document sum folds (term, m·ln c) pairs in ascending-term order —
-   * ONE floating-point order under any partitioning, which is what lets
-   * q_unigram_surprisal carry a bit-exact DuckDB hash oracle. Documents with
-   * zero tokens are absent from the output (no LM evidence), matching
-   * [[repetitionProfile]]'s contract.
-   */
-  def unigramSurprisal(docs: DataFrame, textCol: String,
-                       idCol: String): DataFrame = {
-    graft.functions.WordGrams.register(docs.sparkSession)
-    val toks = Spread.perRowHeavy(docs).select(col(idCol).as("id"),
-      explode(graft.functions.WordGrams.grams(col(textCol), 1)).as("tok"))
-      .filter(length(col("tok")) > 0)
-    val dt = toks.groupBy("id", "tok").agg(count(lit(1)).as("m"))
-    val f = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-    val tot = f.agg(sum("c").cast("double").as("n"))
-    val per = dt.join(f, "tok")
-      .groupBy("id").agg(
-        sum("m").as("n_tokens"),
-        aggregate(array_sort(collect_list(struct(col("tok"),
-          (col("m").cast("double") * log(col("c").cast("double"))).as("v")))),
-          lit(0.0), (acc, s) => acc + s.getField("v")).as("_s"))
-    per.crossJoin(broadcast(tot))
-      .select(col("id"), col("n_tokens"),
-        (log(col("n")) - col("_s") / col("n_tokens").cast("double"))
-          .as("surprisal"))
-  }
-
-  /**
-   * Corpus-trained BIGRAM language-model surprisal with unigram
-   * interpolation — the KenLM-shaped conditional-perplexity filter the
-   * CCNet/LLaMA data pipelines run after the unigram pass (Wenzek et al.
-   * 2020 trains a 5-gram KenLM; the bigram form is the smallest model
-   * with CONTEXT, which is what separates fluent text from word salad
-   * that unigram frequency alone scores well):
-   *
-   *   p(b | a) = lambda * c(ab)/ctx(a) + (1 - lambda) * c(b)/N
-   *   surprisal(d) = -(1/(|d|-1)) * sum over bigram positions ln p
-   *
-   * ctx(a) = occurrences of `a` as a bigram CONTEXT (= the proper ML
-   * conditional that sums to 1 — NOT the raw unigram count, which is
-   * deficient on document-final tokens); the unigram back-off term keeps
-   * unseen-in-context pairs finite, so no zero-prob ln(-inf) row exists
-   * by construction. Documents with < 2 tokens carry n_bigrams = 0 and a
-   * NULL surprisal (no conditional evidence) instead of vanishing.
-   *
-   * Scale shape mirrors [[unigramSurprisal]]: every count is a map-side
-   * combined hash aggregate (the shuffle carries distinct bigrams, not
-   * the token stream), the probability join is vocabulary-keyed, N is a
-   * 1-row broadcast, and the per-document sum folds (bigram, m*ln p) in
-   * ascending-bigram order — one floating-point order under any
-   * partitioning, so the DuckDB oracle replays bit-exactly.
-   */
-  def bigramSurprisal(docs: DataFrame, textCol: String, idCol: String,
-                      lambda: Double = 0.7): DataFrame = {
-    require(lambda > 0.0 && lambda < 1.0,
-      s"lambda must be in (0, 1) — 1 would zero unseen pairs, got $lambda")
-    graft.functions.WordGrams.register(docs.sparkSession)
-    val spreadDocs = Spread.perRowHeavy(docs)
-    val uni = spreadDocs.select(col(idCol).as("id"),
-      explode(graft.functions.WordGrams.grams(col(textCol), 1)).as("tok"))
-      .filter(length(col("tok")) > 0)
-    val bi = spreadDocs.select(col(idCol).as("id"),
-      explode(graft.functions.WordGrams.grams(col(textCol), 2)).as("bg"))
-    val dbg = bi.groupBy("id", "bg").agg(count(lit(1)).as("m"))
-    val cab = bi.groupBy("bg").agg(count(lit(1)).as("c_ab"))
-    // context counts derive from the bigram table itself (first token),
-    // so sum_b p_ML(b|a) = 1 exactly
-    val ctx = cab.withColumn("a", split(col("bg"), " ").getItem(0))
-      .groupBy("a").agg(sum(col("c_ab")).as("c_ctx"))
-    val cb = uni.groupBy("tok").agg(count(lit(1)).as("c_b"))
-    val tot = cb.agg(sum("c_b").cast("double").as("n"))
-    val terms = dbg.join(cab, "bg")
-      .withColumn("a", split(col("bg"), " ").getItem(0))
-      .withColumn("b", split(col("bg"), " ").getItem(1))
-      .join(ctx, "a")
-      .join(cb.withColumnRenamed("tok", "b"), "b")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", log(
-        lit(lambda) * (col("c_ab").cast("double") / col("c_ctx").cast("double")) +
-          (lit(1.0) - lit(lambda)) * (col("c_b").cast("double") / col("n"))))
-    val per = terms.groupBy("id").agg(
-      sum("m").as("n_bigrams"),
-      aggregate(array_sort(collect_list(struct(col("bg"),
-        (col("m").cast("double") * col("lp")).as("v")))),
-        lit(0.0), (acc, s) => acc + s.getField("v")).as("_s"))
-      .select(col("id"), col("n_bigrams"),
-        (negate(col("_s")) / col("n_bigrams").cast("double")).as("surprisal"))
-    // keep <2-token documents visible: n_bigrams = 0, surprisal NULL
-    docs.select(col(idCol).as("id")).distinct()
-      .join(per, Seq("id"), "left")
-      .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
-  }
-
   /**
    * Exact per-group quantile profile of a numeric column — the corpus
    * length-distribution report every curation run starts from (which
@@ -656,184 +465,5 @@ object TextAnalysis {
       .select(col("grp").as(groupCol), col("n_docs"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("distinct_tokens"), lit(0L)).as("distinct_tokens"))
-  }
-
-  /**
-   * BPE merge-rule training: `rounds` greedy rounds of the classic
-   * byte-pair-encoding algorithm (Sennrich et al. 2016) over the corpus
-   * word vocabulary — the step that turns "BPE-ish token ESTIMATES"
-   * ([[graft.functions.TextFunctions.bpeTokenEstimate]]) into actually
-   * LEARNED subword merges. Words are lowercase ASCII-alpha runs (so
-   * char-splitting replays identically in SQL); each word becomes a
-   * space-separated symbol string, and each round (a) counts adjacent
-   * symbol pairs weighted by word frequency — one explode + one map-side-
-   * combined hash aggregate over the VOCABULARY (distinct words), never the
-   * corpus, (b) picks the most frequent pair (ties to the lexicographically
-   * smallest — a total order, so the training is deterministic), and (c)
-   * rewrites the vocabulary with one literal `replace` of the space-padded
-   * pair — left-to-right non-overlapping, which matches BPE's greedy-left
-   * merge except on runs of a repeated pair ("y y y y"), where the shared
-   * boundary space makes the padded scan skip every other occurrence until
-   * a later round. That deviation is deterministic and engine-independent:
-   * SQL `replace` scans identically, which is what lets q_bpe_merges carry
-   * a full hash oracle with every round unrolled. Only the single winning pair
-   * crosses to the driver per round; the vocabulary stays distributed and
-   * is lazily checkpointed each round so round r never recomputes rounds
-   * 1..r−1. Returns (round, pair, merged, cnt).
-   */
-  def bpeMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = docs.sparkSession
-    val words = docs
-      .select(explode(split(lower(col(textCol)), "[^a-z]+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-    var vocab = words.select(
-      concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" ")).as("s"),
-      col("wc")).localCheckpoint(false)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (r <- 1 to rounds) {
-      val a = split(trim(col("s")), " ")
-      val winner = vocab
-        .filter(size(a) >= 2) // sequence(0, -1) would run DESCENDING
-        .select(col("wc"), explode(transform(sequence(lit(0), size(a) - 2),
-          i => concat_ws(" ", element_at(a, i + 1), element_at(a, i + 2))))
-          .as("p"))
-        .groupBy("p").agg(sum(col("wc")).as("cnt"))
-        .orderBy(desc("cnt"), col("p")).limit(1)
-        .collect()
-      require(winner.nonEmpty, s"vocabulary exhausted before round $r")
-      val (pair, cnt) = (winner(0).getString(0), winner(0).getLong(1))
-      val merged = pair.replace(" ", "")
-      merges += ((r, pair, merged, cnt))
-      vocab = vocab.select(
-        replace(col("s"), lit(s" $pair "), lit(s" $merged ")).as("s"),
-        col("wc")).localCheckpoint(false)
-    }
-    import spark.implicits._
-    merges.result().toDF("round", "pair", "merged", "cnt")
-  }
-
-  /**
-   * BPE ENCODING under a trained merge-rule list — the apply side of
-   * [[bpeMerges]]: how many tokens does each document cost under the
-   * learned vocabulary (the number a sequence-packing / token-budget stage
-   * actually needs). Each distinct WORD is encoded once — char-split into
-   * the padded " h e l l o " form, then every rule applied in training
-   * order via the same literal `replace` scan the trainer used (identical
-   * left-to-right semantics, so training and encoding can never disagree
-   * on a merge's effect) — and per-document counts come from an integer
-   * m·tokens(w) join-aggregate. The heavy string work runs over the
-   * distinct-word vocabulary, not the token stream; everything is codegen
-   * string/array functions; all outputs are exact integers (no float folds
-   * to align in the oracle).
-   */
-  def bpeEncode(docs: DataFrame, textCol: String, idCol: String,
-                merges: Seq[(String, String)]): DataFrame = {
-    require(merges.nonEmpty, "need at least one merge rule (train bpeMerges)")
-    val wpd = docs
-      .select(col(idCol).as("id"),
-        explode(split(lower(col(textCol)), "[^a-z]+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("id", "w").agg(count(lit(1)).as("m"))
-    var enc = wpd.select("w").distinct()
-      .select(col("w"),
-        concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" ")).as("s"))
-    for ((pair, merged) <- merges)
-      enc = enc.select(col("w"),
-        replace(col("s"), lit(s" $pair "), lit(s" $merged ")).as("s"))
-    val tc = enc.select(col("w"),
-      size(split(trim(col("s")), " ")).cast("long").as("tc"))
-    wpd.join(tc, "w").groupBy("id")
-      .agg(sum(col("m")).as("n_words"),
-        sum(col("m") * col("tc")).as("n_bpe_tokens"))
-  }
-
-  /**
-   * CCNet-style perplexity bucketing (Wenzek et al. 2020): split each
-   * group (language, source) into head / middle / tail thirds by the
-   * corpus-LM surprisal from [[unigramSurprisal]] — the standard "keep the
-   * head, inspect the middle, drop the tail" curation gate. Cutoffs are
-   * the exact per-group terciles (Spark's exact `percentile`, whose
-   * interpolation matches DuckDB quantile_cont — the [[lengthQuantiles]]
-   * parity), computed over the UNROUNDED surprisal so the bucket decision
-   * replays bit-exactly. The cutoff frame is |groups| rows — broadcast;
-   * everything else rides the surprisal aggregates.
-   */
-  def surprisalBuckets(docs: DataFrame, textCol: String, idCol: String,
-                       groupCol: String): DataFrame = {
-    val qs = Seq(1.0 / 3, 2.0 / 3)
-    val s = unigramSurprisal(docs, textCol, idCol)
-      .join(docs.select(col(idCol).as("id"), col(groupCol).as("grp")), "id")
-    val cuts = s.groupBy("grp")
-      .agg(percentile(col("surprisal"), typedlit(qs)).as("_c"))
-      .select(col("grp"), element_at(col("_c"), 1).as("_c1"),
-        element_at(col("_c"), 2).as("_c2"))
-    s.join(broadcast(cuts), "grp")
-      .select(col("id"), col("grp"), col("n_tokens"), col("surprisal"),
-        when(col("surprisal") <= col("_c1"), lit("head"))
-          .when(col("surprisal") <= col("_c2"), lit("middle"))
-          .otherwise(lit("tail")).as("bucket"))
-  }
-
-  /**
-   * DSIR-style hashed n-gram importance weights (Xie et al. 2023, "Data
-   * Selection for Language Models via Importance Resampling"): score every
-   * document by how much more likely its features are under a TARGET
-   * distribution (the quality corpus rows matching `targetPred`) than
-   * under the RAW corpus —
-   *
-   *   w(d) = Σ_b m_db · ( ln p̂_T[b] − ln p̂_R[b] ),
-   *   p̂[b] = (count[b] + 1) / (N + B)          (add-one smoothing),
-   *
-   * with features = uni- and bigrams hashed into B buckets by the md5-based
-   * [[graft.functions.HashFunctions.h60]] (engine-portable, so the oracle
-   * recomputes the same buckets). High-w documents look like the target;
-   * resampling by exp(w) (see [[Sampling.weightedSample]]) is the DSIR
-   * selection step.
-   *
-   * Scale shape: one gram scan feeds three hash aggregates (per-doc bucket
-   * counts; target and raw bucket counts — B rows each); the B-row ratio
-   * table broadcasts into the per-doc join. The per-document sum folds
-   * (bucket, m·lr) pairs in ascending-bucket order — one float order under
-   * any partitioning, the [[unigramSurprisal]] discipline that lets the
-   * oracle hash-match.
-   */
-  def dsirWeights(docs: DataFrame, textCol: String, idCol: String,
-                  targetPred: org.apache.spark.sql.Column,
-                  buckets: Int = 1024): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val spark = docs.sparkSession
-    graft.functions.WordGrams.register(spark)
-    import graft.functions.{HashFunctions => H}
-    val base = Spread.perRowHeavy(docs)
-      .select(col(idCol).as("id"), targetPred.as("is_t"),
-        col(textCol).as("_t"))
-    val feats = base.select(col("id"), col("is_t"),
-      explode(flatten(array(
-        graft.functions.WordGrams.grams(col("_t"), 1),
-        graft.functions.WordGrams.grams(col("_t"), 2)))).as("g"))
-      .filter(length(col("g")) > 0)
-      .select(col("id"), col("is_t"),
-        pmod(H.h60(col("g")), lit(buckets.toLong)).as("b"))
-    val db = feats.groupBy("id", "b").agg(count(lit(1)).as("m"))
-    val perB = feats.groupBy("b").agg(
-      count(lit(1)).as("cr"),
-      sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"))
-    val tot = perB.agg(sum("cr").as("nr"), sum("ct").as("nt"))
-    val ratio = spark.range(buckets).select(col("id").as("b"))
-      .join(perB, Seq("b"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("b"),
-        (log((coalesce(col("ct"), lit(0L)).cast("double") + lit(1.0)) /
-          (col("nt").cast("double") + lit(buckets.toDouble))) -
-          log((coalesce(col("cr"), lit(0L)).cast("double") + lit(1.0)) /
-            (col("nr").cast("double") + lit(buckets.toDouble)))).as("lr"))
-    db.join(broadcast(ratio), "b")
-      .groupBy("id").agg(
-        sum("m").as("n_feats"),
-        aggregate(array_sort(collect_list(struct(col("b"),
-          (col("m").cast("double") * col("lr")).as("v")))),
-          lit(0.0), (acc, s) => acc + s.getField("v")).as("log_weight"))
   }
 }

@@ -301,31 +301,6 @@ object Tables {
       (eW, nodes)
     }
 
-  /** Memoized per-doc distinct 3-shingle sets over documents — corpus
-    * storage material (the normalize+shingle pass every similarity op
-    * starts from): built once at ingest, probed by the set-similarity
-    * gate's rank/verify passes. */
-  def docShingles(s: SparkSession, dir: String): DataFrame =
-    memo(s, ("shingle", dir)) {
-      graft.functions.WordShingles.register(s)
-      t(s, dir, "documents")
-        .select(col("doc_id").as("id"),
-          graft.functions.WordShingles.shingles(col("text"), 3).as("toks"))
-        .filter(size(col("toks")) >= 1)
-        .coalesce(cachePartitions(s)).cache()
-    }
-
-  /** 60-bit-hashed view of [[docShingles]] (md5/h60, the minhash element
-    * discipline): long set elements shuffle and sort at a fraction of the
-    * string cost, and both engines hash identically so set cardinalities
-    * replay exactly. This is the set-similarity index material. */
-  def docShingleHashes(s: SparkSession, dir: String): DataFrame =
-    memo(s, ("shingleHash", dir))(
-      docShingles(s, dir)
-        .select(col("id"), array_distinct(transform(col("toks"),
-          t => graft.functions.HashFunctions.h60(t))).as("toks"))
-        .cache())
-
   /** The full-chain retrieval statement store: lineitem⋈orders projected to
     * the DERIVED retrieval columns (md5 statement ids, statement text,
     * retriever score arrays, fact strings, chunk text). Memoized + cached

@@ -3,16 +3,16 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.functions.{TextFunctions => T}
 import graft.model.Ids
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.TextAnalysis
 
 /**
- * Text analysis + dedup inventory (SURVEY.md §2.9 scalar functions, extended
- * training-data ops) over the documents table.
+ * Text analysis inventory (SURVEY.md §2.9 scalar functions, §2.11 statement
+ * diversity, extended corpus statistics) over the documents table.
  *
- * Every sketch (minhash, simhash, fingerprints) derives from md5, so the
- * DuckDB oracle recomputes identical signatures from first principles — the
+ * Every sketch (minhash, fingerprints) derives from md5, so the DuckDB
+ * oracle recomputes identical signatures from first principles — the
  * strongest possible cross-engine check.
  */
 object TextQueries {
@@ -30,35 +30,6 @@ object TextQueries {
   private[queries] def shinglesSql(toks: String): String =
     s"list_distinct(list_transform(range(greatest(len($toks)-3,0)+1), i -> array_to_string(list_slice($toks, i+1, i+3),' ')))"
 
-  /** The planted 18-token boilerplate tail for the winnowing-pairs gate. */
-  private val WinnowPhrase: String =
-    "by clicking accept you agree to our terms of service and " +
-      "acknowledge our updated privacy policy effective starting today"
-
-  /** Winnowing selection CTE chain (base → grams → window explode → min +
-    * rightmost-tie → `sel(id, j, pos, fp)`) over `docsRel(doc_id, text)` —
-    * shared by the q_winnow and q_winnow_pairs replays. k=3, w=4. */
-  private def winnowSelCtes(docsRel: String): String =
-    s"""base AS (
-       |  SELECT doc_id AS id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-       |  FROM $docsRel),
-       |g AS (
-       |  SELECT id, CAST(len(toks) - 2 AS INT) AS n_grams,
-       |    CAST(u.i AS INT) AS pos,
-       |    ${h60Sql("array_to_string(list_slice(toks, CAST(u.i AS INT)+1, CAST(u.i AS INT)+3), ' ')")} AS h
-       |  FROM base CROSS JOIN UNNEST(range(len(toks)-2)) u(i)
-       |  WHERE len(toks) >= 3),
-       |e AS (
-       |  SELECT id, pos, h, CAST(j.x AS INT) AS j
-       |  FROM g CROSS JOIN UNNEST(range(greatest(pos-3, 0),
-       |    least(pos, greatest(n_grams-4, 0)) + 1)) j(x)),
-       |m AS (SELECT id, j, min(h) AS m FROM e GROUP BY id, j),
-       |sel AS (
-       |  SELECT e.id, e.j, max(e.pos) AS pos, min(m.m) AS fp
-       |  FROM e JOIN m ON e.id = m.id AND e.j = m.j AND e.h = m.m
-       |  GROUP BY e.id, e.j)""".stripMargin
-
   private def inListSql(words: Seq[String]): String =
     words.map(w => s"'$w'").mkString("[", ",", "]")
 
@@ -75,13 +46,6 @@ object TextQueries {
         .orderBy(col("p_partkey"))
     }),
 
-    // extended: exact dedup via normalized-text hash, canonical-winner window.
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("doc_id"), col("dup_key"), col("dup_count"))
-        .orderBy(col("doc_id"))
-    }),
-
     // extended: one-pass text profile (token stats, quality, lang-id, fingerprint).
     "q_text_profile" -> ((s, dir) => {
       TextAnalysis.profile(t(s, dir, "documents"), "text")
@@ -92,71 +56,6 @@ object TextQueries {
           round(col("quality_score"), 6).as("quality_score"),
           col("lang_pred"), col("fingerprint"))
         .orderBy(col("doc_id"))
-    }),
-
-    // extended: minhash + LSH banding near-dup candidates.
-    "q_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id",
-        numHashes = 16, bands = 8, shingleSize = 3)
-        .select(col("id_a"), col("id_b"), col("jaccard_est"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // extended: EXACT all-pairs Jaccard join via prefix filtering — the
-    // deterministic complement to q_minhash_lsh (LSH admits band-boundary
-    // false negatives; the rarity-ordered prefix join is complete). The
-    // oracle is the BRUTE-FORCE all-pairs join, so any lost candidate
-    // hash-fails — the completeness proof runs every round.
-    "q_setsim_join" -> ((s, dir) => {
-      Dedup.setSimilarityJoinFrom(Tables.docShingleHashes(s, dir), tau = 0.5)
-        .select(col("id_a"), col("id_b"),
-          col("inter").cast("long").as("inter"),
-          col("uni").cast("long").as("uni"), col("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // extended: duplicate-cluster canonicalization — connected components
-    // (min reachable id) over the minhash-LSH pair graph.
-    "q_dedup_components" -> ((s, dir) => {
-      val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "text", "doc_id",
-        numHashes = 16, bands = 8, shingleSize = 3)
-      Dedup.connectedComponents(pairs)
-        .orderBy(col("id"))
-    }),
-
-    // extended: decontamination sweep — corpus docs whose minhash bands
-    // collide with a benchmark set (here: the first 10 docs standing in for
-    // an eval set; every true member collides with itself at jaccard 1).
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.crossCorpusNearDup(
-        docs, "text", "doc_id",
-        docs.filter(col("doc_id") < 10), "text", "doc_id",
-        numHashes = 16, bands = 8, shingleSize = 3)
-        .orderBy(col("corpus_id"), col("bench_id"))
-    }),
-
-    // extended: exact n-gram contamination (the GPT-3-style 13-gram eval
-    // filter, here 4-grams so the short synthetic docs produce real cross-doc
-    // overlap): per corpus doc, how many distinct normalized 4-grams also
-    // occur in the benchmark set.
-    "q_ngram_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ngramContamination(docs, "text", "doc_id",
-        docs.filter(col("doc_id") < 10), "text", n = 4)
-        .select(col("corpus_id"), col("shared_grams"))
-        .orderBy(col("corpus_id"))
-    }),
-
-    // extended: exact per-pair containment join — the asymmetric
-    // decontamination metric (|B∩A|/|B|) that catches a small benchmark
-    // item quoted inside a large document where Jaccard collapses. Oracle
-    // is the brute-force corpus × benchmark cross score.
-    "q_containment" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.containmentJoin(docs, "text", "doc_id",
-          docs.filter(col("doc_id") < 10), "text", "doc_id", tau = 0.5)
-        .orderBy(col("corpus_id"), col("bench_id"))
     }),
 
     // extended: PII scrub — emails/phones/long digit runs redacted in one
@@ -251,52 +150,12 @@ object TextQueries {
         .orderBy(col("source"))
     }),
 
-    // extended: BPE merge-rule training — 3 greedy rounds over the word
-    // vocabulary (pair counting on distinct words weighted by frequency,
-    // deterministic tie-break, padded-replace rewrite). The oracle unrolls
-    // every round, so a wrong count weight / tie order / merge application
-    // hash-fails.
-    "q_bpe_merges" -> ((s, dir) => {
-      TextAnalysis.bpeMerges(t(s, dir, "documents"), "text", rounds = 3)
-        .orderBy(col("round"))
-    }),
-
-    // extended: weighted sampling without replacement (A-Res) — token-count
-    // weighted top-k draw with hash priorities; membership replays exactly.
-    "q_weighted_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), T.tokenCount(col("text")).as("w"))
-      graft.ops.Sampling.weightedSample(docs, "doc_id", "w", k = 50,
-        salt = "ws1")
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: deterministic stratified hash sampling — the training-mix
-    // rebalancing step; per-row hash decisions replay in any engine.
-    "q_stratified_sample" -> ((s, dir) => {
-      graft.ops.Sampling.stratified(
-        t(s, dir, "documents"), "doc_id", "source",
-        rates = Map("src0" -> 0.8, "src1" -> 0.4), defaultRate = 0.1,
-        salt = "mix1")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
     // extended: language-ID evaluation — confusion matrix of the
     // stopword-heuristic prediction vs the labeled lang column, with
     // per-label recall shares (TextAnalysis.langidConfusion).
     "q_langid_confusion" -> ((s, dir) => {
       TextAnalysis.langidConfusion(t(s, dir, "documents"), "text", "lang")
         .orderBy(col("lang"), col("lang_pred"))
-    }),
-
-    // extended: dedup yield accounting — per-source survival under exact
-    // dedup; canonical = the min-id holder counted against ITS group
-    // (Dedup.yieldReport).
-    "q_dedup_yield" -> ((s, dir) => {
-      graft.ops.Dedup.yieldReport(t(s, dir, "documents"), "text", "doc_id",
-          "source")
-        .orderBy(col("source"))
     }),
 
     // extended: corpus-health stats — per-source unigram entropy + Zipf
@@ -306,29 +165,6 @@ object TextQueries {
       TextAnalysis.zipfEntropy(t(s, dir, "documents"), "text", "source",
           topN = 100)
         .orderBy(col("source"))
-    }),
-
-    // extended: deterministic train/valid/test split — cumulative hash
-    // thresholds over the same content hash as the samplers, so the
-    // assignment is stable under repartitioning and consistent across
-    // tables keyed by doc_id (the leakage guarantee).
-    "q_hash_split" -> ((s, dir) => {
-      graft.ops.Sampling.hashSplit(
-        t(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1), salt = "split1")
-        .select(col("doc_id"), col("source"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: target-mixture rebalance — per-stratum keep rates derived
-    // from the largest feasible total, decided per row by content hash.
-    "q_target_mix" -> ((s, dir) => {
-      graft.ops.Sampling.targetMix(
-        t(s, dir, "documents"), "doc_id", "source",
-        targets = Map("src0" -> 0.6, "src1" -> 0.3, "src2" -> 0.1),
-        salt = "mix2")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
     }),
 
     // extended: crawl-URL canonicalization + URL-level dedup grouping —
@@ -352,197 +188,6 @@ object TextQueries {
         .withColumn("n_same", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("canon"))))
         .orderBy(col("doc_id"))
-    }),
-
-    // extended: temperature (α = 0.5) language mix — the mT5/XLM-R
-    // low-resource upsampling rule over the skewed `lang` column. The
-    // keep rate is the closed form (n_min/n_s)^(1−α): sqrt-exact, no
-    // cross-stratum float sum (Sampling.temperatureMix).
-    "q_temperature_mix" -> ((s, dir) => {
-      graft.ops.Sampling.temperatureMix(
-          t(s, dir, "documents"), "doc_id", "lang", alpha = 0.5,
-          salt = "temp1")
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: token-budget mixture — targetMix weighted by n_chars, so
-    // the shares govern the CHARACTER budget, not document counts
-    // (Sampling.targetMixWeighted).
-    "q_target_mix_tokens" -> ((s, dir) => {
-      graft.ops.Sampling.targetMixWeighted(
-          t(s, dir, "documents"), "doc_id", "source", "n_chars",
-          targets = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
-          salt = "mixw")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: sequence packing — deterministic (pack_id, offset) slots in
-    // fixed-token-budget training sequences via a two-pass prefix sum.
-    "q_pack_sequences" -> ((s, dir) => {
-      graft.ops.Packing.packSequences(t(s, dir, "documents"), "doc_id",
-        "text", budget = 2048)
-        .select(col("doc_id"), col("tok_len"), col("start_tok"),
-          col("pack_id"), col("pack_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: Gopher-style repetition metrics — duplicate-bigram and
-    // top-bigram fractions per document, with the repetition gate flag.
-    "q_repetition_profile" -> ((s, dir) => {
-      TextAnalysis.repetitionProfile(t(s, dir, "documents"), "text",
-        "doc_id", n = 2)
-        .select(col("doc_id"), col("total_grams"), col("distinct_grams"),
-          col("dup_gram_e6"), col("top_gram_e6"), col("repetitive"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: C4 line-level cleaning (Raffel et al. 2020 §2.2) over
-    // multi-line pages synthesized from lineitem — one page per order,
-    // lines ordered by linenumber, with deterministic rule triggers:
-    // linenumber 3 carries a "javascript" phrase (line-blocked), quantity
-    // ≤ 2 yields a 2-word line (too short), returnflag R drops the
-    // terminal period, and orderkey % 131 == 0 injects a "lorem ipsum"
-    // lead line (page-blocked). Pure in-row cleaning after one groupBy.
-    "q_c4_clean" -> ((s, dir) => {
-      val lines = t(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          when(col("l_linenumber") === 3,
-            concat(lit("please enable javascript to view item "),
-              col("l_partkey"), lit(".")))
-          .when(col("l_quantity") <= 2,
-            concat(lit("part "), col("l_partkey"), lit(".")))
-          .otherwise(concat(lit("qty "), col("l_quantity").cast("long"),
-            lit(" of part "), col("l_partkey"), lit(" shipped on "),
-            col("l_shipdate").cast("string"),
-            when(col("l_returnflag") === "R", lit(""))
-              .otherwise(lit(".")))).as("line"))
-      val pages = lines.groupBy(col("l_orderkey"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("l_linenumber").as("ln"),
-            col("line")))), x => x.getField("line")), "\n").as("body"))
-        .select(col("l_orderkey").as("doc_id"),
-          when(col("l_orderkey") % 131 === 0,
-            concat(lit("lorem ipsum dolor sit amet consectetur.\n"),
-              col("body"))).otherwise(col("body")).as("page"))
-      graft.ops.CorpusCleaning.c4LineClean(pages, "page", "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: the Gopher document-quality rule battery (Rae et al. 2021
-    // Table A1) straight over the documents corpus — per-rule booleans +
-    // exact micro-unit stats, all in-row (no shuffle). Word-count,
-    // mean-word-length, and stopword rules discriminate on this corpus;
-    // the line/symbol rules exercise their exact-integer gates.
-    "q_gopher_rules" -> ((s, dir) => {
-      graft.ops.CorpusCleaning.gopherRules(
-          t(s, dir, "documents"), "text", "doc_id", minWords = 40)
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: fasttext-style quality-classifier seam — deterministic
-    // hash-weight linear scorer, exact integer accumulation.
-    "q_quality_classifier" -> ((s, dir) => {
-      TextAnalysis.hashClassifierScore(t(s, dir, "documents"), "text")
-        .select(col("doc_id"), col("clf_score"), col("clf_keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: corpus-trained unigram-LM mean surprisal (CCNet-style
-    // perplexity-bucket quality signal). The per-doc sum folds in
-    // ascending-term order so the hash oracle replays bit-exactly.
-    "q_unigram_surprisal" -> ((s, dir) => {
-      TextAnalysis.unigramSurprisal(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          round(col("surprisal"), 6).as("surprisal"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: BPE ENCODING under the q_bpe_merges-trained rules — the
-    // apply side of training: per-document word and BPE-token counts, the
-    // number a token-budget / packing stage actually needs. Distinct words
-    // encode once through the same padded-replace scan the trainer used;
-    // outputs are exact integers.
-    "q_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rules = TextAnalysis.bpeMerges(docs, "text", rounds = 3)
-        .orderBy("round").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextAnalysis.bpeEncode(docs, "text", "doc_id", rules)
-        .select(col("id").as("doc_id"), col("n_words"), col("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: CCNet perplexity buckets — per-language surprisal terciles
-    // (head / middle / tail) over the unrounded q_unigram_surprisal signal;
-    // exact-percentile cutoffs replay via quantile_cont.
-    "q_surprisal_buckets" -> ((s, dir) => {
-      TextAnalysis.surprisalBuckets(t(s, dir, "documents"), "text",
-        "doc_id", "lang")
-        .select(col("id").as("doc_id"), col("grp").as("lang"),
-          col("n_tokens"), round(col("surprisal"), 6).as("surprisal"),
-          col("bucket"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: bigram-LM surprisal with unigram interpolation — the
-    // KenLM-shaped conditional-perplexity filter (context-aware twin of
-    // q_unigram_surprisal); <2-token docs keep a row (n_bigrams 0, NULL
-    // surprisal) instead of vanishing.
-    "q_bigram_surprisal" -> ((s, dir) => {
-      TextAnalysis.bigramSurprisal(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("id").as("doc_id"), col("n_bigrams"),
-          round(col("surprisal"), 6).as("surprisal"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: DSIR hashed-n-gram importance weights (target = the src0
-    // slice): per-document target-vs-raw log-likelihood ratio over md5-
-    // hashed uni+bigram buckets, ascending-bucket fold for the exact replay.
-    "q_dsir_weights" -> ((s, dir) => {
-      TextAnalysis.dsirWeights(t(s, dir, "documents"), "text", "doc_id",
-        col("source") === "src0", buckets = 256)
-        .select(col("id").as("doc_id"), col("n_feats"),
-          round(col("log_weight"), 6).as("log_weight"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: the composed curation pipeline — quality/length gate →
-    // exact dedup (canonical min-id winner + group size) → minhash-LSH
-    // near-dup components → keep only cluster representatives. The whole
-    // chain is one lazy plan except the component loop.
-    "q_curation_pipeline" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val filtered = TextAnalysis.qualityFilter(docs, "text",
-        minScore = 0.3, minTokens = 10, maxTokens = 10000)
-      val canon = Dedup.exact(filtered, "text", "doc_id")
-      val pairs = Dedup.minhashLsh(canon, "text", "doc_id",
-        numHashes = 16, bands = 8, shingleSize = 3)
-      val losers = Dedup.connectedComponents(pairs)
-        .filter(col("id") =!= col("comp"))
-        .select(col("id").as("doc_id"))
-      canon.join(losers, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("dup_count"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: 32-bit simhash signatures.
-    "q_simhash" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), H.simhash32(col("text")).as("simhash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: exact n-gram jaccard over a bounded pair set.
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 20)
-      val pairs = docs.select(col("doc_id").as("id_a"))
-        .crossJoin(docs.select(col("doc_id").as("id_b")))
-        .filter(col("id_a") < col("id_b"))
-      Dedup.ngramJaccard(t(s, dir, "documents"), pairs, "text", "doc_id", 3)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // §2.5 TF-IDF scoring (RerankStatements) against a fixed query. The
@@ -585,87 +230,6 @@ object TextQueries {
       graft.ops.Dedup.diversityFilterTfidf(
         t(s, dir, "documents"), "text", "doc_id", threshold = 0.975)
         .orderBy(col("doc_id"))
-    }),
-
-    // extended: C4-style sub-document span dedup — fixed 8-token windows,
-    // one winner (smallest doc_id, chunk_idx) per chunk hash plus its
-    // corpus-wide occurrence count. One narrow explode + one min-struct
-    // hash aggregate; the chunk text never crosses the shuffle.
-    "q_window_dedup" -> ((s, dir) => {
-      Dedup.windowedChunkDedup(t(s, dir, "documents"), "text", "doc_id", 8)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // extended: C4-style boilerplate-span removal + document reassembly —
-    // drop every 8-token span occurring more than once corpus-wide,
-    // rebuild each document from its surviving spans in order. The
-    // boilerplate hash set broadcasts (cap-enforced), so chunk text never
-    // crosses a shuffle for the filter.
-    "q_boilerplate" -> ((s, dir) => {
-      Dedup.dropBoilerplateSpans(t(s, dir, "documents"), "text", "doc_id",
-        windowTokens = 8, maxOccurrences = 1)
-        .orderBy(col("doc_id"))
-    }),
-
-    // extended: exact duplicate-SPAN removal (Lee et al. 2021) — rolling
-    // 8-token spans at EVERY offset (unlike q_window_dedup's fixed
-    // windows); all occurrences after the corpus-wide first are deleted
-    // and the text rewritten. Boilerplate planted on every 7th doc makes
-    // the any-offset detection observable; the word-soup corpus also
-    // carries a few organic cross-doc duplicate spans, caught identically.
-    "q_span_dedup" -> ((s, dir) => {
-      val boiler =
-        "subscribe to our newsletter and follow our channel for updates"
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(boiler), lit(" "), col("text")))
-          .otherwise(col("text")).as("text"))
-      Dedup.duplicateSpanRemoval(docs, "text", "doc_id", spanTokens = 8)
-        .orderBy(col("id"))
-    }),
-
-    // extended: suffix-bucket exact substring dedup (Lee et al. 2022) —
-    // MAXIMAL cross-document duplicated spans of >= 6 tokens, the
-    // suffix-array reduction bucketed by first-L-token windows (never a
-    // global suffix array). An 18-token press-release planted on every
-    // 9th doc surfaces as ONE merged span per planted doc (not 13
-    // overlapping 6-grams); organic cross-doc 6-gram repeats in the
-    // word-soup corpus surface identically.
-    "q_suffix_dedup" -> ((s, dir) => {
-      val plant = "breaking news the quick brown fox jumps over the " +
-        "lazy dog as markets rally across the eastern exchanges"
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 9 === 0,
-          concat(lit(plant), lit(" "), col("text")))
-          .otherwise(col("text")).as("text"))
-      Dedup.suffixSpanDedup(docs, "text", "doc_id", minTokens = 6)
-        .orderBy(col("id"), col("start_pos"))
-    }),
-
-    // extended: winnowing fingerprints (Schleimer et al. 2003, the MOSS
-    // scheme) — guaranteed-density local fingerprints: any shared
-    // >= k+w-1-token substring between documents surfaces as an identical
-    // selected hash. 3-gram hashes, window 4, rightmost-min selection
-    // (Dedup.winnowingFingerprints).
-    "q_winnow" -> ((s, dir) => {
-      Dedup.winnowingFingerprints(t(s, dir, "documents"), "text", "doc_id",
-          k = 3, w = 4)
-        .orderBy(col("id"), col("pos"))
-    }),
-
-    // extended: fingerprint-overlap contamination pairs (the MOSS overlap
-    // join) — every 13th doc carries a planted 18-token boilerplate tail,
-    // so those docs pair up on its interior fingerprints; df-capped
-    // against hub-fingerprint pair blowup (Dedup.winnowOverlapPairs).
-    "q_winnow_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 13 === 0,
-          concat(col("text"), lit(" "), lit(WinnowPhrase)))
-          .otherwise(col("text")).as("text"))
-      val fps = Dedup.winnowingFingerprints(docs, "text", "doc_id",
-        k = 3, w = 4)
-      Dedup.winnowOverlapPairs(fps, minShared = 2, maxDf = 50)
-        .orderBy(col("id_a"), col("id_b"))
     }),
 
     // extended: Unicode NFC normalization (codegen'd Catalyst expression,
@@ -755,144 +319,6 @@ object TextQueries {
        |  $winner AS lang_pred,
        |  fingerprint
        |FROM lang ORDER BY doc_id""".stripMargin
-  }
-
-  private val simhashOracle: String = {
-    val bits = (0 until 32).map { b =>
-      s"(CASE WHEN list_sum(list_transform(toks, t -> ((${h60Sql("t")} >> $b) % 2)*2 - 1)) > 0 THEN (CAST(1 AS BIGINT) << $b) ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, list_distinct(string_split_regex(${normSql("text")},'\\s+')) AS toks
-       |  FROM documents)
-       |SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM tok ORDER BY doc_id""".stripMargin
-  }
-
-  /** The minhash→banding→bucket-join pipeline up to the candidate `pairs`
-    * CTE — shared by the pair gate, the components gate, and the curation
-    * pipeline (which runs it over a filtered doc set). */
-  private def minhashCteFor(table: String): String = {
-    s"""tok AS (
-       |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks FROM $table),
-       |sh AS (
-       |  SELECT doc_id, ${shinglesSql("toks")} AS sh FROM tok),
-       |bases AS (
-       |  SELECT doc_id, list_transform(sh, s -> ${h60Sql("s")}) AS bases FROM sh),
-       |sig AS (
-       |  SELECT doc_id, list_transform(range(16), h ->
-       |    list_min(list_transform(bases, b -> ((b % 2147483647) * (h+1) + h) % 2147483647))) AS sig
-       |  FROM bases),
-       |banded AS (
-       |  SELECT doc_id, sig, unnest(range(8)) AS band FROM sig),
-       |buck AS (
-       |  SELECT doc_id, md5(band::VARCHAR||','||array_to_string(list_slice(sig, band*2+1, band*2+2),',')) AS bucket
-       |  FROM banded),
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM buck a JOIN buck b USING (bucket) WHERE a.doc_id < b.doc_id)""".stripMargin
-  }
-
-  private val minhashOracle: String =
-    s"""WITH ${minhashCteFor("documents")}
-       |SELECT id_a, id_b,
-       |  CAST(len(list_filter(range(16), i -> sa.sig[i+1] = sb.sig[i+1])) AS DOUBLE)/16.0 AS jaccard_est
-       |FROM pairs JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** Components = min reachable id; the recursive closure is exact and
-    * bounded by cluster sizes (tiny at high similarity thresholds). */
-  private val componentsOracle: String =
-    s"""WITH RECURSIVE ${minhashCteFor("documents")},
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(id, m) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.id, e.dst FROM reach r JOIN edges e ON e.src = r.m)
-       |SELECT id, least(id, min(m)) AS comp
-       |FROM reach GROUP BY id
-       |ORDER BY id""".stripMargin
-
-  /**
-   * Unrolled BPE-training oracle: replays [[graft.ops.TextAnalysis
-   * .bpeMerges]] round by round — the frequency-weighted pair counts over
-   * the vocabulary, the (cnt DESC, pair ASC) winner, and the padded
-   * literal `replace` rewrite (both engines scan left-to-right,
-   * non-overlapping, so the merge application is bit-identical).
-   */
-  private def bpeOracle(rounds: Int): String = {
-    def roundCtes(r: Int): String =
-      s"""p$r AS (
-         |  SELECT p, CAST(sum(wc) AS BIGINT) AS cnt FROM (
-         |    SELECT wc, unnest(list_transform(range(1, len(a)),
-         |      i -> a[i] || ' ' || a[i+1])) AS p
-         |    FROM (SELECT wc, string_split(trim(s), ' ') AS a FROM v${r - 1}))
-         |  GROUP BY p),
-         |w$r AS (SELECT p, cnt FROM p$r ORDER BY cnt DESC, p LIMIT 1),
-         |v$r AS (
-         |  SELECT replace(s, ' '||p||' ', ' '||replace(p, ' ', '')||' ') AS s,
-         |    wc
-         |  FROM v${r - 1} CROSS JOIN w$r)""".stripMargin
-    val rs = (1 to rounds).map(roundCtes).mkString(",\n")
-    val sel = (1 to rounds).map(r =>
-      s"SELECT CAST($r AS INT) AS round, p AS pair, " +
-        s"replace(p, ' ', '') AS merged, cnt FROM w$r")
-      .mkString("\nUNION ALL ")
-    s"""WITH words AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS wc FROM (
-       |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-       |    FROM documents)
-       |  WHERE w <> '' GROUP BY w),
-       |v0 AS (
-       |  SELECT ' ' || array_to_string(
-       |      list_transform(range(1, len(w)+1), i -> w[i]), ' ') || ' ' AS s,
-       |    wc
-       |  FROM words),
-       |$rs
-       |$sel
-       |ORDER BY round""".stripMargin
-  }
-
-  /** Encode replay: [[bpeOracle]]'s training rounds re-derived with the
-    * word key carried through every rewrite CTE, so the final vocabulary
-    * row IS each word's encoding; per-doc counts are integer join-sums. */
-  private def bpeEncodeOracle(rounds: Int): String = {
-    def roundCtes(r: Int): String =
-      s"""p$r AS (
-         |  SELECT p, CAST(sum(wc) AS BIGINT) AS cnt FROM (
-         |    SELECT wc, unnest(list_transform(range(1, len(a)),
-         |      i -> a[i] || ' ' || a[i+1])) AS p
-         |    FROM (SELECT wc, string_split(trim(s), ' ') AS a FROM v${r - 1}))
-         |  GROUP BY p),
-         |w$r AS (SELECT p, cnt FROM p$r ORDER BY cnt DESC, p LIMIT 1),
-         |v$r AS (
-         |  SELECT w, replace(s, ' '||p||' ', ' '||replace(p, ' ', '')||' ') AS s,
-         |    wc
-         |  FROM v${r - 1} CROSS JOIN w$r)""".stripMargin
-    val rs = (1 to rounds).map(roundCtes).mkString(",\n")
-    s"""WITH words AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS wc FROM (
-       |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-       |    FROM documents)
-       |  WHERE w <> '' GROUP BY w),
-       |v0 AS (
-       |  SELECT w, ' ' || array_to_string(
-       |      list_transform(range(1, len(w)+1), i -> w[i]), ' ') || ' ' AS s,
-       |    wc
-       |  FROM words),
-       |$rs,
-       |enc AS (
-       |  SELECT w, CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS tc
-       |  FROM v$rounds),
-       |wpd AS (
-       |  SELECT doc_id, w, count(*) AS m FROM (
-       |    SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-       |    FROM documents)
-       |  WHERE w <> '' GROUP BY doc_id, w)
-       |SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_words,
-       |  CAST(sum(m * tc) AS BIGINT) AS n_bpe_tokens
-       |FROM wpd JOIN enc USING (w)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
   /** ROLLUP replay sharing [[profileOracle]]'s per-doc derivations: the
@@ -986,26 +412,9 @@ object TextQueries {
        |WHERE bm25 > 0.0 ORDER BY bm25 DESC, doc_id LIMIT $k""".stripMargin
 
   val oracles: Map[String, String] = Map(
-    "q_bpe_merges" -> bpeOracle(3),
 
     "q_bm25" -> bm25Oracle(Seq("filter", "vector", "merge"), k = 20,
       k1 = 1.2, b = 0.75),
-
-    // A-Res replay: same dyadic-rational uniform, same ln(u)/w priority,
-    // same (priority DESC, id) top-k; membership re-sorted by id.
-    "q_weighted_sample" ->
-      s"""WITH base AS (
-         |  SELECT doc_id,
-         |    CAST(len(string_split_regex(${normSql("text")},'\\s+')) AS INT)
-         |      AS w
-         |  FROM documents),
-         |pri AS (
-         |  SELECT doc_id, w,
-         |    ln(CAST(${h60Sql("'ws1'||'#'||doc_id")} AS DOUBLE)
-         |       / 1.152921504606847e18) / CAST(w AS DOUBLE) AS p
-         |  FROM base WHERE w > 0),
-         |sel AS (SELECT doc_id, w FROM pri ORDER BY p DESC, doc_id LIMIT 50)
-         |SELECT doc_id, w FROM sel ORDER BY doc_id""".stripMargin,
 
     "q_corpus_rollup" -> corpusRollupOracle,
 
@@ -1034,11 +443,6 @@ object TextQueries {
          |  'e:'||substr(md5($norm||'|'||p_type||'|'||'t0'),1,8) AS entity_id
          |FROM part ORDER BY p_partkey""".stripMargin
     },
-
-    "q_dedup_exact" ->
-      s"""SELECT min(doc_id) AS doc_id, md5(${normSql("text")}) AS dup_key,
-         |  count(*) AS dup_count
-         |FROM documents GROUP BY 2 ORDER BY doc_id""".stripMargin,
 
     // confusion replay: the SAME stopword-count winner CASE the profile
     // oracle uses (first match in sorted code order breaks ties), then
@@ -1069,85 +473,7 @@ object TextQueries {
          |ORDER BY lang, lang_pred""".stripMargin
     },
 
-    // yield replay: min-id per content hash, survivors counted in their
-    // own group, one rounded double ratio from exact counts.
-    "q_dedup_yield" ->
-      s"""WITH k AS (
-         |  SELECT source, doc_id, md5(${normSql("text")}) AS h
-         |  FROM documents),
-         |c AS (SELECT h, min(doc_id) AS keep FROM k GROUP BY h)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN doc_id = keep THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_canonical,
-         |  CAST(round(CAST(1000000.0 AS DOUBLE)
-         |    * (count(*) - sum(CASE WHEN doc_id = keep THEN 1 ELSE 0 END))
-         |    / count(*), 0) AS BIGINT) AS dup_e6
-         |FROM k JOIN c USING (h)
-         |GROUP BY source ORDER BY source""".stripMargin,
-
     "q_text_profile" -> profileOracle,
-    "q_minhash_lsh" -> minhashOracle,
-
-    // brute-force all-pairs ground truth: every (a < b) pair's exact
-    // shingle-set Jaccard (same normalize+3-shingle CTE as the minhash
-    // oracle) — if the engine's prefix filter dropped ANY qualifying
-    // candidate, the row sets diverge. Threshold compares in multiplied
-    // form (inter >= tau * uni) to avoid a division at the boundary,
-    // exactly like the engine.
-    "q_setsim_join" ->
-      s"""WITH tok AS (
-        |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(${shinglesSql("toks")},
-        |    s -> ${h60Sql("s")})) AS sh FROM tok),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter,
-        |    CAST(len(list_distinct(list_concat(a.sh, b.sh)))
-        |      AS BIGINT) AS uni
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, inter, uni,
-        |  round(CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE), 6) AS jaccard
-        |FROM pairs
-        |WHERE CAST(inter AS DOUBLE) >= 0.5 * CAST(uni AS DOUBLE)
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q_dedup_components" -> componentsOracle,
-    "q_simhash" -> simhashOracle,
-
-    // bench side = corpus subset, so the banded-bucket CTEs are shared and
-    // the cross join restricts one side.
-    "q_decontaminate" ->
-      s"""WITH ${minhashCteFor("documents")},
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS corpus_id, b.doc_id AS bench_id
-         |  FROM buck a JOIN buck b USING (bucket)
-         |  WHERE b.doc_id < 10)
-         |SELECT corpus_id, bench_id,
-         |  CAST(len(list_filter(range(16), i -> sa.sig[i+1] = sb.sig[i+1])) AS DOUBLE)/16.0
-         |    AS jaccard_est
-         |FROM cand
-         |JOIN sig sa ON sa.doc_id = corpus_id
-         |JOIN sig sb ON sb.doc_id = bench_id
-         |ORDER BY corpus_id, bench_id""".stripMargin,
-
-    // exact-overlap replay: same normalized tokens, same all-position
-    // n-gram construction as WordGrams (n=4), distinct per doc, counted
-    // against the distinct benchmark gram set. sum-free, so no HUGEINT.
-    "q_ngram_decontaminate" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks
-         |  FROM documents),
-         |grams AS (
-         |  SELECT doc_id, unnest(list_distinct(
-         |    list_transform(range(0, greatest(len(toks)-4, -1)+1),
-         |      i -> array_to_string(list_slice(toks, i+1, i+4),' ')))) AS gram
-         |  FROM toks),
-         |g AS (SELECT * FROM grams WHERE length(gram) > 0),
-         |bg AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10)
-         |SELECT g.doc_id AS corpus_id, count(*) AS shared_grams
-         |FROM g JOIN bg USING (gram)
-         |GROUP BY g.doc_id ORDER BY corpus_id""".stripMargin,
 
     // co-occurrence replay: distinct (doc, token) presence, top-20 vocab by
     // (df desc, tok), per-doc pair join, same multiply-then-divide-then-ln
@@ -1174,28 +500,6 @@ object TextQueries {
         |FROM p JOIN v va ON p.tok_a = va.tok
         |       JOIN v vb ON p.tok_b = vb.tok, n
         |ORDER BY tok_a, tok_b""".stripMargin,
-
-    // containment replay: brute-force corpus × benchmark shingle-set
-    // intersection (same normalize+3-shingle CTE), multiplied threshold.
-    "q_containment" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id, ${shinglesSql("toks")} AS sh FROM tok),
-         |b AS (SELECT doc_id AS bench_id, sh AS bsh FROM sh
-         |      WHERE doc_id < 10),
-         |pairs AS (
-         |  SELECT s.doc_id AS corpus_id, b.bench_id,
-         |    CAST(len(list_intersect(s.sh, b.bsh)) AS BIGINT) AS inter,
-         |    CAST(len(b.bsh) AS BIGINT) AS bench_n
-         |  FROM sh s CROSS JOIN b)
-         |SELECT corpus_id, bench_id, inter, bench_n,
-         |  round(CAST(inter AS DOUBLE) / CAST(bench_n AS DOUBLE), 6)
-         |    AS containment
-         |FROM pairs
-         |WHERE CAST(inter AS DOUBLE) >= 0.5 * CAST(bench_n AS DOUBLE)
-         |ORDER BY corpus_id, bench_id""".stripMargin,
 
     "q_redact_pii" ->
       s"""SELECT doc_id,
@@ -1279,14 +583,6 @@ object TextQueries {
          |  CAST(row_number() OVER (ORDER BY freq DESC, gram) AS INT) AS rank
          |FROM freq ORDER BY rank""".stripMargin,
 
-    "q_stratified_sample" ->
-      s"""SELECT doc_id, source FROM documents
-         |WHERE CAST(${h60Sql("'mix1'||'#'||doc_id")} AS DOUBLE)
-         |    / 1.152921504606847e18
-         |  < (CASE WHEN source = 'src0' THEN 0.8
-         |          WHEN source = 'src1' THEN 0.4 ELSE 0.1 END)
-         |ORDER BY doc_id""".stripMargin,
-
     // zipf/entropy replay: per-token counts, micro-unit entropy terms
     // (integer sums commute), rank terms over the same (freq DESC, tok)
     // total order, then the two fixed-order IEEE expressions.
@@ -1330,36 +626,6 @@ object TextQueries {
          |      / CAST(n*sxx - sx*sx AS DOUBLE), 0) AS BIGINT)
          |  END AS zipf_slope_micro
          |FROM ent JOIN z USING (source) ORDER BY source""".stripMargin,
-
-    // the split thresholds are IEEE doubles in both engines: the cumulative
-    // sum is forced through CAST(.. AS DOUBLE) additions so 0.8 + 0.1
-    // produces the same 0.9000000000000001 bits DuckDB compares against
-    "q_hash_split" ->
-      s"""SELECT doc_id, source,
-         |  CASE WHEN CAST(${h60Sql("'split1'||'#'||doc_id")} AS DOUBLE)
-         |         / 1.152921504606847e18 < CAST(0.8 AS DOUBLE) THEN 'train'
-         |       WHEN CAST(${h60Sql("'split1'||'#'||doc_id")} AS DOUBLE)
-         |         / 1.152921504606847e18
-         |         < CAST(0.8 AS DOUBLE) + CAST(0.1 AS DOUBLE) THEN 'valid'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_target_mix" ->
-      s"""WITH c AS (
-         |  SELECT source, COUNT(*) AS n,
-         |    CAST(CASE source WHEN 'src0' THEN 0.6 WHEN 'src1' THEN 0.3
-         |         WHEN 'src2' THEN 0.1 END AS DOUBLE) AS share
-         |  FROM documents WHERE source IN ('src0','src1','src2')
-         |  GROUP BY source),
-         |f AS (SELECT CASE WHEN COUNT(*) = 3 THEN MIN(n/share)
-         |             ELSE CAST(0.0 AS DOUBLE) END AS t FROM c),
-         |r AS (SELECT source,
-         |        LEAST(CAST(1.0 AS DOUBLE), share * f.t / n) AS rate
-         |      FROM c, f)
-         |SELECT d.doc_id, d.source FROM documents d JOIN r USING (source)
-         |WHERE CAST(${h60Sql("'mix2'||'#'||doc_id")} AS DOUBLE)
-         |    / 1.152921504606847e18 < rate
-         |ORDER BY doc_id""".stripMargin,
 
     // URL-canonicalization replay: the same regex pipeline (RE2-compatible
     // patterns; DuckDB regexp_replace needs the explicit 'g' flag where
@@ -1408,377 +674,6 @@ object TextQueries {
         |SELECT doc_id, canon,
         |  count(*) OVER (PARTITION BY canon) AS n_same
         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // temperature-mix replay: per-lang counts, the sqrt closed-form rate
-    // (n_min/n_s)^(1/2) — sqrt is correctly rounded per IEEE 754 in both
-    // engines — and the same hash gate.
-    "q_temperature_mix" ->
-      s"""WITH c AS (
-         |  SELECT lang, sqrt(CAST(COUNT(*) AS DOUBLE)) AS npa
-         |  FROM documents GROUP BY lang),
-         |m AS (SELECT MIN(npa) AS mn FROM c),
-         |r AS (SELECT lang,
-         |        LEAST(CAST(1.0 AS DOUBLE), m.mn / npa) AS rate
-         |      FROM c, m)
-         |SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-         |WHERE CAST(${h60Sql("'temp1'||'#'||doc_id")} AS DOUBLE)
-         |    / 1.152921504606847e18 < rate
-         |ORDER BY doc_id""".stripMargin,
-
-    // weighted-mix replay: per-stratum Σweight (exact while integer
-    // weights sum below 2^53), the same feasibility min and hash gate.
-    "q_target_mix_tokens" ->
-      s"""WITH c AS (
-         |  SELECT source, sum(CAST(n_chars AS DOUBLE)) AS w,
-         |    CAST(CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.3
-         |         WHEN 'src2' THEN 0.2 END AS DOUBLE) AS share
-         |  FROM documents WHERE source IN ('src0','src1','src2')
-         |  GROUP BY source),
-         |f AS (SELECT CASE WHEN count(*) = 3 AND min(w) > 0
-         |             THEN min(w/share)
-         |             ELSE CAST(0.0 AS DOUBLE) END AS t FROM c),
-         |r AS (SELECT source,
-         |        LEAST(CAST(1.0 AS DOUBLE), share * f.t / w) AS rate
-         |      FROM c, f)
-         |SELECT d.doc_id, d.source, d.n_chars
-         |FROM documents d JOIN r USING (source)
-         |WHERE CAST(${h60Sql("'mixw'||'#'||doc_id")} AS DOUBLE)
-         |    / 1.152921504606847e18 < rate
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_pack_sequences" ->
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-         |         ELSE len(string_split_regex(trim(text),'\\s+')) END
-         |      AS BIGINT) AS tok_len
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, tok_len,
-         |    COALESCE(SUM(tok_len) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS start_tok
-         |  FROM t)
-         |SELECT doc_id, tok_len,
-         |  CAST(start_tok AS BIGINT) AS start_tok,
-         |  CAST(start_tok // 2048 AS BIGINT) AS pack_id,
-         |  CAST(start_tok % 2048 AS BIGINT) AS pack_offset
-         |FROM p ORDER BY doc_id""".stripMargin,
-
-    "q_repetition_profile" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id, UNNEST(list_transform(range(len(toks)-1),
-         |    i -> toks[i+1] || ' ' || toks[i+2])) AS gram
-         |  FROM toks WHERE len(toks) >= 2),
-         |c AS (
-         |  SELECT doc_id, gram, COUNT(*) AS cnt FROM g
-         |  WHERE length(gram) > 0 GROUP BY doc_id, gram)
-         |SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS total_grams,
-         |  COUNT(*) AS distinct_grams,
-         |  CAST((1000000*(SUM(cnt)-COUNT(*))) // SUM(cnt) AS BIGINT)
-         |    AS dup_gram_e6,
-         |  CAST((1000000*MAX(cnt)) // SUM(cnt) AS BIGINT) AS top_gram_e6,
-         |  ((SUM(cnt)-COUNT(*))*1000000 > 300000*SUM(cnt)
-         |    OR MAX(cnt)*1000000 > 200000*SUM(cnt)) AS repetitive
-         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_c4_clean" ->
-      """WITH lines AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CASE WHEN l_linenumber = 3
-        |      THEN 'please enable javascript to view item '||l_partkey||'.'
-        |    WHEN l_quantity <= 2 THEN 'part '||l_partkey||'.'
-        |    ELSE 'qty '||CAST(trunc(l_quantity) AS BIGINT)||' of part '||
-        |      l_partkey||' shipped on '||CAST(l_shipdate AS VARCHAR)||
-        |      (CASE WHEN l_returnflag = 'R' THEN '' ELSE '.' END)
-        |    END AS line
-        |  FROM lineitem WHERE l_orderkey < 2000),
-        |pages0 AS (
-        |  SELECT l_orderkey AS doc_id,
-        |    string_agg(line, chr(10) ORDER BY l_linenumber, line) AS body
-        |  FROM lines GROUP BY 1),
-        |pages AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 131 = 0
-        |    THEN 'lorem ipsum dolor sit amet consectetur.'||chr(10)||body
-        |    ELSE body END AS page FROM pages0),
-        |cleaned AS (
-        |  SELECT doc_id,
-        |    len(string_split(page, chr(10))) AS n_lines,
-        |    list_filter(string_split(page, chr(10)), l ->
-        |      len(list_filter(string_split_regex(l, '\s+'), w -> w <> '')) >= 5
-        |      AND substr(l, length(l), 1) IN ('.', '!', '?', '"')
-        |      AND NOT contains(lower(l), 'javascript')) AS kl,
-        |    NOT contains(lower(page), 'lorem ipsum')
-        |      AND NOT contains(lower(page), '{') AS page_ok
-        |  FROM pages)
-        |SELECT doc_id, CAST(n_lines AS INT) AS n_lines,
-        |  CAST(len(kl) AS INT) AS n_lines_kept,
-        |  coalesce(array_to_string(kl, chr(10)), '') AS text_clean,
-        |  (page_ok AND len(kl) >= 3) AS kept
-        |FROM cleaned ORDER BY doc_id""".stripMargin,
-
-    "q_gopher_rules" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks,
-        |    string_split(text, chr(10)) AS lines
-        |  FROM documents),
-        |stats AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS wc,
-        |    CAST(len(lines) AS BIGINT) AS n_lines,
-        |    CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS BIGINT) AS total_chars,
-        |    CAST(len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(list_intersect(list_distinct(list_transform(toks, x -> lower(x))),
-        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits,
-        |    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
-        |      + CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS sym,
-        |    CAST(len(list_filter(lines, l -> starts_with(ltrim(l), '- ')
-        |      OR starts_with(ltrim(l), '* ') OR starts_with(ltrim(l), '• '))) AS BIGINT) AS bullet_lines,
-        |    CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS BIGINT) AS ellipsis_lines,
-        |    CAST(len(list_filter(lines, l -> length(l) > 0)) AS BIGINT) AS nel,
-        |    CAST(len(list_distinct(list_filter(lines, l -> length(l) > 0))) AS BIGINT) AS dl,
-        |    CAST(coalesce(list_sum(list_transform(list_filter(lines, l -> length(l) > 0),
-        |      x -> length(x))), 0) AS BIGINT) AS line_chars,
-        |    CAST(coalesce(list_sum(list_transform(list_distinct(list_filter(lines,
-        |      l -> length(l) > 0)), x -> length(x))), 0) AS BIGINT) AS distinct_chars
-        |  FROM base)
-        |SELECT doc_id, wc AS word_count, n_lines,
-        |  CASE WHEN wc > 0 THEN CAST((1000000*total_chars) // wc AS BIGINT) END AS mean_word_len_e6,
-        |  CASE WHEN wc > 0 THEN CAST((1000000*sym) // wc AS BIGINT) END AS symbol_ratio_e6,
-        |  CASE WHEN n_lines > 0 THEN CAST((1000000*bullet_lines) // n_lines AS BIGINT) END AS bullet_line_e6,
-        |  CASE WHEN n_lines > 0 THEN CAST((1000000*ellipsis_lines) // n_lines AS BIGINT) END AS ellipsis_line_e6,
-        |  CASE WHEN wc > 0 THEN CAST((1000000*alpha_words) // wc AS BIGINT) END AS alpha_word_e6,
-        |  stop_hits,
-        |  CASE WHEN nel > 0 THEN CAST((1000000*(nel - dl)) // nel AS BIGINT) END AS dup_line_e6,
-        |  CASE WHEN line_chars > 0 THEN CAST((1000000*(line_chars - distinct_chars)) // line_chars AS BIGINT) END AS dup_line_char_e6,
-        |  (wc BETWEEN 40 AND 100000) AS r_word_count,
-        |  (total_chars >= 3*wc AND total_chars <= 10*wc) AS r_mean_word_len,
-        |  (10*sym <= wc) AS r_symbol_ratio,
-        |  (10*bullet_lines <= n_lines) AS r_bullet_lines,
-        |  (10*ellipsis_lines < 3*n_lines) AS r_ellipsis_lines,
-        |  (10*alpha_words >= 8*wc) AS r_alpha_words,
-        |  (stop_hits >= 2) AS r_stopwords,
-        |  (10*(nel - dl) <= 3*nel) AS r_dup_lines,
-        |  (5*(line_chars - distinct_chars) <= line_chars) AS r_dup_line_chars,
-        |  ((wc BETWEEN 40 AND 100000) AND (total_chars >= 3*wc AND total_chars <= 10*wc)
-        |   AND (10*sym <= wc) AND (10*bullet_lines <= n_lines)
-        |   AND (10*ellipsis_lines < 3*n_lines) AND (10*alpha_words >= 8*wc)
-        |   AND (stop_hits >= 2) AND (10*(nel - dl) <= 3*nel)
-        |   AND (5*(line_chars - distinct_chars) <= line_chars)) AS pass
-        |FROM stats ORDER BY doc_id""".stripMargin,
-
-    "q_quality_classifier" ->
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(${normSql("text")},'\\s+'),
-         |      x -> length(x) > 0) AS toks
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id, len(toks) AS n,
-         |    list_sum(list_transform(toks,
-         |      x -> (${h60Sql("'clf'||'#'||x")} % 2001) - 1000)) AS raw
-         |  FROM t)
-         |SELECT doc_id,
-         |  CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-         |       ELSE ROUND(raw / (CAST(1000.0 AS DOUBLE) * n), 6) END AS clf_score,
-         |  CASE WHEN n = 0 THEN FALSE ELSE raw > 0 END AS clf_keep
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Unigram surprisal replay: same ln-based arithmetic, same
-    // ascending-term fold order as the Spark aggregate (a plain SUM would
-    // be partition-order-dependent in both engines). sum() outputs are
-    // CAST to BIGINT — DuckDB SUM(BIGINT) is HUGEINT, the hasher-visible
-    // type divergence the parity gate exists for.
-    "q_unigram_surprisal" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(
-         |    string_split_regex(${normSql("text")},'\\s+'),
-         |    x -> length(x) > 0)) AS tok
-         |  FROM documents),
-         |dt AS (SELECT doc_id, tok, count(*) AS m FROM toks GROUP BY 1, 2),
-         |f AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1),
-         |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM f),
-         |per AS (
-         |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_tokens,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list(CAST(m AS DOUBLE) * ln(CAST(c AS DOUBLE)) ORDER BY tok)),
-         |      (x, y) -> x + y) AS s
-         |  FROM dt JOIN f USING (tok) GROUP BY doc_id)
-         |SELECT doc_id, n_tokens,
-         |  round(ln(tot.n) - s / n_tokens, 6) AS surprisal
-         |FROM per, tot ORDER BY doc_id""".stripMargin,
-
-    // bigram-LM replay: same context-count derivation (first token of the
-    // bigram table — the ML conditional that sums to 1), same interpolation
-    // tree 0.7*(c_ab/c_ctx) + (1-0.7)*(c_b/n), ascending-bigram fold.
-    "q_bigram_surprisal" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(
-         |    string_split_regex(${normSql("text")},'\\s+'),
-         |    x -> length(x) > 0) AS tk
-         |  FROM documents),
-         |bgpos AS (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i
-         |          FROM toks),
-         |bg AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS bg FROM bgpos),
-         |dbg AS (SELECT doc_id, bg, count(*) AS m FROM bg GROUP BY 1, 2),
-         |cab AS (SELECT bg, count(*) AS c_ab FROM bg GROUP BY 1),
-         |ctx AS (SELECT split_part(bg, ' ', 1) AS a, sum(c_ab) AS c_ctx
-         |        FROM cab GROUP BY 1),
-         |uni AS (SELECT unnest(tk) AS tok FROM toks),
-         |cb AS (SELECT tok, count(*) AS c_b FROM uni GROUP BY 1),
-         |tot AS (SELECT CAST(sum(c_b) AS DOUBLE) AS n FROM cb),
-         |terms AS (
-         |  SELECT d.doc_id, d.bg, d.m,
-         |    ln(0.7 * (CAST(c.c_ab AS DOUBLE) / CAST(x.c_ctx AS DOUBLE)) +
-         |       (1.0 - 0.7) * (CAST(u.c_b AS DOUBLE) / tot.n)) AS lp
-         |  FROM dbg d JOIN cab c USING (bg)
-         |  JOIN ctx x ON x.a = split_part(d.bg, ' ', 1)
-         |  JOIN cb u ON u.tok = split_part(d.bg, ' ', 2)
-         |  CROSS JOIN tot),
-         |per AS (
-         |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_bigrams,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list(CAST(m AS DOUBLE) * lp ORDER BY bg)),
-         |      (x, y) -> x + y) AS s
-         |  FROM terms GROUP BY doc_id)
-         |SELECT d.doc_id, COALESCE(p.n_bigrams, CAST(0 AS BIGINT)) AS n_bigrams,
-         |  round(-p.s / p.n_bigrams, 6) AS surprisal
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN per p USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_bpe_encode" -> bpeEncodeOracle(3),
-
-    // Surprisal-bucket replay: the q_unigram_surprisal CTEs kept at full
-    // precision, per-language tercile cutoffs via quantile_cont (the
-    // q_length_quantiles-proven interpolation twin of Spark's exact
-    // percentile), and the same <=-cutoff CASE both engines evaluate on
-    // bit-identical doubles.
-    "q_surprisal_buckets" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(
-         |    string_split_regex(${normSql("text")},'\\s+'),
-         |    x -> length(x) > 0)) AS tok
-         |  FROM documents),
-         |dt AS (SELECT doc_id, tok, count(*) AS m FROM toks GROUP BY 1, 2),
-         |f AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1),
-         |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM f),
-         |per AS (
-         |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_tokens,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list(CAST(m AS DOUBLE) * ln(CAST(c AS DOUBLE)) ORDER BY tok)),
-         |      (x, y) -> x + y) AS s
-         |  FROM dt JOIN f USING (tok) GROUP BY doc_id),
-         |sv AS (
-         |  SELECT doc_id, n_tokens, ln(tot.n) - s / n_tokens AS sv
-         |  FROM per, tot),
-         |j AS (
-         |  SELECT d.doc_id, d.lang, sv.n_tokens, sv.sv
-         |  FROM sv JOIN documents d USING (doc_id)),
-         |cuts AS (
-         |  SELECT lang,
-         |    quantile_cont(sv, CAST(1 AS DOUBLE)/3) AS c1,
-         |    quantile_cont(sv, CAST(2 AS DOUBLE)/3) AS c2
-         |  FROM j GROUP BY lang)
-         |SELECT doc_id, lang, n_tokens, round(sv, 6) AS surprisal,
-         |  CASE WHEN sv <= c1 THEN 'head'
-         |       WHEN sv <= c2 THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM j JOIN cuts USING (lang) ORDER BY doc_id""".stripMargin,
-
-    // DSIR replay: same normSql tokens, same uni+bigram features, same
-    // md5-h60 buckets mod 256, same add-one-smoothed ln-ratio arithmetic,
-    // ascending-bucket fold.
-    "q_dsir_weights" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, source = 'src0' AS is_t,
-         |    list_filter(string_split_regex(${normSql("text")},'\\s+'),
-         |      x -> length(x) > 0) AS toks
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id, is_t, unnest(toks) AS g FROM base
-         |  UNION ALL
-         |  SELECT doc_id, is_t, unnest(list_transform(range(1, len(toks)),
-         |    i -> toks[i] || ' ' || toks[i+1])) AS g FROM base),
-         |fb AS (SELECT doc_id, is_t, ${h60Sql("g")} % 256 AS b FROM g),
-         |db AS (SELECT doc_id, b, count(*) AS m FROM fb GROUP BY doc_id, b),
-         |perb AS (
-         |  SELECT b, count(*) AS cr,
-         |    sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct
-         |  FROM fb GROUP BY b),
-         |tot AS (
-         |  SELECT CAST(sum(cr) AS BIGINT) AS nr, CAST(sum(ct) AS BIGINT) AS nt
-         |  FROM perb),
-         |ratio AS (
-         |  SELECT r.b,
-         |    ln((CAST(COALESCE(p.ct, 0) AS DOUBLE) + CAST(1 AS DOUBLE))
-         |        / (CAST(t.nt AS DOUBLE) + CAST(256 AS DOUBLE)))
-         |    - ln((CAST(COALESCE(p.cr, 0) AS DOUBLE) + CAST(1 AS DOUBLE))
-         |        / (CAST(t.nr AS DOUBLE) + CAST(256 AS DOUBLE))) AS lr
-         |  FROM (SELECT unnest(range(256)) AS b) r
-         |  LEFT JOIN perb p ON r.b = p.b, tot t)
-         |SELECT doc_id, CAST(sum(m) AS BIGINT) AS n_feats,
-         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    list(CAST(m AS DOUBLE) * lr ORDER BY b)), (x, y) -> x + y), 6)
-         |    AS log_weight
-         |FROM db JOIN ratio USING (b)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_curation_pipeline" -> {
-      val stops = inListSql(TextAnalysis.defaultStopwords)
-      s"""WITH RECURSIVE q0 AS (
-         |  SELECT doc_id, text,
-         |    len(string_split_regex(trim(text),'\\s+')) AS tc,
-         |    CAST(length(regexp_replace(text,'[^[:punct:]]','','g')) AS DOUBLE)
-         |      / length(text) AS pr,
-         |    CAST(len(list_filter(string_split_regex(lower(trim(text)),'\\s+'),
-         |        t -> list_contains($stops, t))) AS DOUBLE)
-         |      / len(string_split_regex(lower(trim(text)),'\\s+')) AS sr
-         |  FROM documents),
-         |qual AS (
-         |  SELECT doc_id, text FROM q0
-         |  WHERE (least(CAST(tc AS DOUBLE)/20.0, 1.0)
-         |       + greatest(0.0, 1.0 - pr*4.0)
-         |       + least(sr*5.0, 1.0))/3.0 >= 0.3
-         |    AND tc BETWEEN 10 AND 10000),
-         |canon AS (
-         |  SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-         |  FROM (SELECT doc_id, md5(${normSql("text")}) AS k FROM qual)
-         |  GROUP BY k),
-         |cdocs AS (
-         |  SELECT c.doc_id, c.dup_count, q.text
-         |  FROM canon c JOIN qual q USING (doc_id)),
-         |${minhashCteFor("cdocs")},
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, m) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.id, e.dst FROM reach r JOIN edges e ON e.src = r.m),
-         |losers AS (
-         |  SELECT id FROM (
-         |    SELECT id, least(id, min(m)) AS comp FROM reach GROUP BY id)
-         |  WHERE id <> comp)
-         |SELECT doc_id, dup_count FROM cdocs
-         |WHERE doc_id NOT IN (SELECT id FROM losers)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_ngram_jaccard" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, string_split_regex(${normSql("text")},'\\s+') AS toks
-         |  FROM documents WHERE doc_id < 20),
-         |sh AS (SELECT doc_id, ${shinglesSql("toks")} AS sh FROM tok)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-         |FROM sh a, sh b WHERE a.doc_id < b.doc_id
-         |ORDER BY id_a, id_b""".stripMargin,
 
     "q_tfidf_rerank" ->
       s"""WITH tok AS (
@@ -1844,139 +739,6 @@ object TextQueries {
         |dom AS (SELECT DISTINCT ib AS doc_id FROM cos WHERE c > 0.975)
         |SELECT doc_id FROM docs WHERE doc_id NOT IN (SELECT doc_id FROM dom)
         |ORDER BY doc_id""".stripMargin,
-
-    "q_window_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |chunks AS (
-        |  SELECT doc_id,
-        |    UNNEST(range(CAST(ceil(len(tk) / 8.0) AS BIGINT))) AS ci, tk
-        |  FROM toks),
-        |hashed AS (
-        |  SELECT doc_id, CAST(ci AS INT) AS chunk_idx,
-        |    md5(array_to_string(list_slice(tk, ci*8 + 1, ci*8 + 8), ' '))
-        |      AS chunk_hash
-        |  FROM chunks)
-        |SELECT doc_id, chunk_idx, chunk_hash, occurrences FROM (
-        |  SELECT doc_id, chunk_idx, chunk_hash,
-        |    CAST(count(*) OVER (PARTITION BY chunk_hash) AS BIGINT)
-        |      AS occurrences,
-        |    row_number() OVER (PARTITION BY chunk_hash
-        |      ORDER BY doc_id, chunk_idx) AS rn
-        |  FROM hashed) WHERE rn = 1
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_boilerplate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |chunks AS (
-        |  SELECT doc_id,
-        |    UNNEST(range(CAST(ceil(len(tk) / 8.0) AS BIGINT))) AS ci, tk
-        |  FROM toks),
-        |hashed AS (
-        |  SELECT doc_id, CAST(ci AS INT) AS chunk_idx,
-        |    array_to_string(list_slice(tk, ci*8 + 1, ci*8 + 8), ' ') AS chunk,
-        |    md5(array_to_string(list_slice(tk, ci*8 + 1, ci*8 + 8), ' ')) AS h
-        |  FROM chunks),
-        |bad AS (SELECT h FROM hashed GROUP BY h HAVING count(*) > 1),
-        |keep AS (
-        |  SELECT doc_id, chunk_idx, chunk FROM hashed
-        |  WHERE h NOT IN (SELECT h FROM bad))
-        |SELECT doc_id,
-        |  string_agg(chunk, ' ' ORDER BY chunk_idx) AS clean_text,
-        |  CAST(count(*) AS BIGINT) AS kept_chunks
-        |FROM keep GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // brute-force replay: actual 6-gram STRINGS (no hashes) grouped
-    // corpus-wide, cross-doc groups mark positions, lag-gap interval
-    // merge — the from-first-principles twin of the bucketed plan.
-    "q_suffix_dedup" ->
-      """WITH docs2 AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 9 = 0
-        |    THEN 'breaking news the quick brown fox jumps over the lazy dog as markets rally across the eastern exchanges '||text
-        |    ELSE text END AS text
-        |  FROM documents),
-        |base AS (
-        |  SELECT doc_id AS id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-        |  FROM docs2),
-        |wins AS (
-        |  SELECT id, CAST(u.i AS INT) AS pos,
-        |    array_to_string(list_slice(toks, CAST(u.i AS INT)+1, CAST(u.i AS INT)+6), ' ') AS g
-        |  FROM base CROSS JOIN UNNEST(range(greatest(len(toks)-5, 0))) AS u(i)),
-        |dup AS (SELECT g FROM wins GROUP BY g HAVING count(DISTINCT id) >= 2),
-        |marked AS (SELECT id, pos FROM wins WHERE g IN (SELECT g FROM dup)),
-        |runs AS (
-        |  SELECT id, pos, CASE WHEN lag(pos) OVER (PARTITION BY id ORDER BY pos) IS NULL
-        |    OR pos - lag(pos) OVER (PARTITION BY id ORDER BY pos) > 6 THEN 1 ELSE 0 END AS brk
-        |  FROM marked),
-        |grps AS (SELECT id, pos, sum(brk) OVER (PARTITION BY id ORDER BY pos) AS grp FROM runs),
-        |spans AS (
-        |  SELECT id, min(pos) AS start_pos, max(pos) - min(pos) + 6 AS span_tokens
-        |  FROM grps GROUP BY id, grp)
-        |SELECT s.id, s.start_pos, s.span_tokens,
-        |  array_to_string(list_slice(b.toks, s.start_pos + 1, s.start_pos + s.span_tokens), ' ') AS span_text
-        |FROM spans s JOIN base b USING (id)
-        |ORDER BY id, start_pos""".stripMargin,
-
-    "q_span_dedup" ->
-      """WITH docs2 AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
-        |    THEN 'subscribe to our newsletter and follow our channel for updates '||text
-        |    ELSE text END AS text
-        |  FROM documents),
-        |base AS (
-        |  SELECT doc_id AS id,
-        |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-        |  FROM docs2),
-        |spans AS (
-        |  SELECT id, CAST(u.i AS INT) AS pos,
-        |    md5(array_to_string(list_slice(toks, CAST(u.i AS INT)+1, CAST(u.i AS INT)+8), ' ')) AS h
-        |  FROM base CROSS JOIN UNNEST(range(greatest(len(toks)-7, 0))) AS u(i)),
-        |firsts AS (
-        |  SELECT h, id AS keep_id, pos AS keep_pos FROM (
-        |    SELECT h, id, pos, count(*) OVER (PARTITION BY h) AS c,
-        |      row_number() OVER (PARTITION BY h ORDER BY id, pos) AS rn
-        |    FROM spans) WHERE c >= 2 AND rn = 1),
-        |drops AS (
-        |  SELECT DISTINCT s.id, s.pos + CAST(r.x AS INT) AS dp
-        |  FROM spans s JOIN firsts f ON s.h = f.h
-        |  CROSS JOIN UNNEST(range(8)) AS r(x)
-        |  WHERE NOT (s.id = f.keep_id AND s.pos = f.keep_pos)),
-        |dset AS (SELECT id, list_sort(list(dp)) AS drop_pos FROM drops GROUP BY id)
-        |SELECT b.id, CAST(len(b.toks) AS INT) AS n_tokens,
-        |  CAST(coalesce(len(d.drop_pos), 0) AS INT) AS n_removed,
-        |  coalesce(CASE WHEN d.drop_pos IS NULL THEN array_to_string(b.toks, ' ')
-        |    ELSE array_to_string(list_transform(
-        |      list_filter(range(len(b.toks)), p -> NOT list_contains(d.drop_pos, p)),
-        |      p -> b.toks[CAST(p AS INT)+1]), ' ')
-        |  END, '') AS text_clean
-        |FROM base b LEFT JOIN dset d ON b.id = d.id
-        |ORDER BY b.id""".stripMargin,
-
-    // winnowing replay: the same gram h60s, the same full-window explode,
-    // min-per-window + rightmost-tie join, distinct selected pairs.
-    "q_winnow" ->
-      s"""WITH ${winnowSelCtes("documents")}
-         |SELECT DISTINCT id, pos, fp FROM sel
-         |ORDER BY id, pos""".stripMargin,
-
-    // overlap-pairs replay: distinct (id, fp), the df <= 50 stop-word
-    // prune, fp-keyed self-join, shared-count filter.
-    "q_winnow_pairs" ->
-      s"""WITH docs2 AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 13 = 0
-         |    THEN text||' $WinnowPhrase' ELSE text END AS text
-         |  FROM documents),
-         |${winnowSelCtes("docs2")},
-         |docfp AS (SELECT DISTINCT id, fp FROM sel),
-         |kept AS (SELECT fp FROM docfp GROUP BY fp HAVING count(*) <= 50),
-         |pruned AS (SELECT d.id, d.fp FROM docfp d JOIN kept USING (fp))
-         |SELECT l.id AS id_a, r.id AS id_b,
-         |  CAST(count(*) AS BIGINT) AS shared
-         |FROM pruned l JOIN pruned r ON l.fp = r.fp AND l.id < r.id
-         |GROUP BY l.id, r.id HAVING count(*) >= 2
-         |ORDER BY id_a, id_b""".stripMargin,
 
     // NFC replay: DuckDB's nfc_normalize implements the same UAX #15
     // algorithm as java.text.Normalizer — identical lengths and bytes.

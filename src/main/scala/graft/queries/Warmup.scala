@@ -41,7 +41,6 @@ object Warmup {
     Tables.walkLayout(spark, sfDir).count()
     Tables.coPurchaseTriangleLayout(spark, sfDir).count()
     Tables.coPurchaseProjection(spark, sfDir).count()
-    Tables.docShingleHashes(spark, sfDir).count()
     val gc = Tables.lexicalGraphClassified(spark, sfDir)
     Seq(gc.entities, gc.entityRelations, gc.facts).foreach(_.count())
     // ...and the SECOND tenant's classified graph: q_tenant_summary reads

@@ -114,8 +114,8 @@ object Processors {
     // best-score winner per statement: one min_by aggregate with map-side
     // pre-reduce to one row per statement per partition — not a window rank
     // that shuffles and sorts every duplicate. (The struct-typed buffers
-    // make this a SortAggregate, not a hash aggregate — same documented
-    // trade as Dedup.exact: a map-side sort buys a pre-reduced shuffle.)
+    // make this a SortAggregate, not a hash aggregate: a map-side sort
+    // buys a pre-reduced shuffle.)
     // Scores must be NON-NULL (TopKAgg contract): a null would sort first in
     // the ascending struct and silently win where the old desc(score) window
     // ranked it last — coalesce to -Inf so a scoreless row can never beat a

@@ -48,10 +48,10 @@ object StreamingIngest {
       }
       .start()
 
-  /** Streaming exact-dedup twin of `ops.Dedup.exact`: watermark-bounded
-    * dedup on the id ALONE — a re-delivered document inside the watermark
-    * window emits once even when the producer restamps its event time on
-    * retry (dropDuplicates(id, ts) would treat the restamp as a new key and
+  /** Streaming exact dedup: watermark-bounded dedup on the id ALONE — a
+    * re-delivered document inside the watermark window emits once even
+    * when the producer restamps its event time on retry
+    * (dropDuplicates(id, ts) would treat the restamp as a new key and
     * emit twice). `dropDuplicatesWithinWatermark` keeps state only within
     * the watermark window, so state stays bounded by the window's arrival
     * volume (the streaming requirement the batch dedup doesn't have). */

@@ -233,6 +233,18 @@ class ByokgEngineSpec extends SparkSpec {
     assert(drained == plainContext(chain, "zzz", Seq("x"), 3))
   }
 
+  test("retrieveContext: an empty mention links to nothing, with and " +
+    "without an empty-string node, ANSI mode on and off") {
+    val withEmpty = edges.union(
+      Seq(("", "acme", "alias"), ("acme", "", "alias")).toDF("src", "dst", "label"))
+    for (e <- Seq(edges, withEmpty); ansi <- Seq(false, true)) withAnsi(ansi) {
+      val engine = new ByoKGQueryEngine(e, new StubLLM, iterations = 2)
+      assert(context(engine, "who founded acme", Seq("")).isEmpty, s"ansi $ansi")
+      assert(context(engine, "who founded acme", Seq("", "acmee")) ==
+        context(engine, "who founded acme", Seq("acmee")), s"ansi $ansi")
+    }
+  }
+
   test("retrieveContext counts duplicate edges toward the agentic degree") {
     // hub -> n0..n8 once each, hub -> n8 twice: the top-8 frontier by
     // degree is n8 and n0..n6, so n7's out-edge is k-hop-only and ranks

@@ -1,115 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Packing, Sampling, TextAnalysis}
+import graft.ops.{Sampling, TextAnalysis}
 
-/** Specs for the round-2 training-data curation operators: sequence
-  * packing, target-mixture rebalance, repetition metrics, classifier stub. */
+/** Specs for the corpus-statistics operators (profile, quantiles, language
+  * id, Zipf, vocabulary, BM25, rollup) and cluster-balanced sampling. */
 class CurationOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("packSequences assigns contiguous offsets in id order") {
-    // token lengths: 3, 5, 4, 6 → starts 0, 3, 8, 12; budget 8
-    val docs = Seq(
-      (1L, "a b c"),
-      (2L, "d e f g h"),
-      (3L, "i j k l"),
-      (4L, "m n o p q r")).toDF("doc_id", "text")
-    val out = Packing.packSequences(docs, "doc_id", "text", budget = 8)
-      .select("doc_id", "tok_len", "start_tok", "pack_id", "pack_offset")
-      .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq(
-      (1L, 3L, 0L, 0L, 0L),
-      (2L, 5L, 3L, 0L, 3L),
-      (3L, 4L, 8L, 1L, 0L),
-      (4L, 6L, 12L, 1L, 4L)))
-    // invariant on a larger frame: starts are the exclusive prefix sum in
-    // id order regardless of partitioning
-    val big = (1L to 500L).map(i => (i, ("w " * ((i % 7) + 1).toInt).trim)).toDF("doc_id", "text")
-      .repartition(7)
-    val rows = Packing.packSequences(big, "doc_id", "text", 64)
-      .select("doc_id", "tok_len", "start_tok")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    var run = 0L
-    rows.foreach { case (_, len, start) =>
-      assert(start == run); run += len
-    }
-  }
-
-  test("targetMix matches requested proportions without over-drawing") {
-    // 600/300/100 available; targets 1:1:2 → src2 is the binding stratum
-    val docs = ((1 to 600).map(i => (i.toLong, "a")) ++
-      (601 to 900).map(i => (i.toLong, "b")) ++
-      (901 to 1000).map(i => (i.toLong, "c")) ++
-      (1001 to 1010).map(i => (i.toLong, "other"))).toDF("doc_id", "src")
-    val out = Sampling.targetMix(docs, "doc_id", "src",
-      Map("a" -> 0.25, "b" -> 0.25, "c" -> 0.5), salt = "s")
-    val bySrc = out.groupBy("src").count().as[(String, Long)].collect().toMap
-    // feasible total = min(600/.25, 300/.25, 100/.5) = 200
-    // expected kept ≈ 50 / 50 / 100 (hash sampling is exact only in
-    // expectation for a<1 rates; c's rate is exactly 1.0 → exactly 100)
-    assert(bySrc("c") == 100L)
-    assert(!bySrc.contains("other"))
-    assert(math.abs(bySrc("a") - 50L) < 25)
-    assert(math.abs(bySrc("b") - 50L) < 25)
-    // monotone determinism: same salt → identical set
-    val again = Sampling.targetMix(docs, "doc_id", "src",
-      Map("a" -> 0.25, "b" -> 0.25, "c" -> 0.5), salt = "s")
-    assert(out.select("doc_id").except(again.select("doc_id")).count() == 0)
-  }
-
-  test("targetMixWeighted budgets by weight, not rows; zero-weight " +
-    "stratum empties the mix") {
-    // a: 10 rows x weight 10 (Σ100); b: 300 rows x weight 1 (Σ300);
-    // 50/50 targets → feasible total 200 → a kept whole, b at rate 1/3
-    val docs = ((1 to 10).map(i => (i.toLong, "a", 10L)) ++
-      (11 to 310).map(i => (i.toLong, "b", 1L))).toDF("doc_id", "src", "w")
-    val out = Sampling.targetMixWeighted(docs, "doc_id", "src", "w",
-      Map("a" -> 0.5, "b" -> 0.5), salt = "tw")
-    val bySrc = out.groupBy("src").count().as[(String, Long)].collect().toMap
-    assert(bySrc("a") === 10L) // rate exactly 1.0
-    assert(bySrc("b") > 60L && bySrc("b") < 140L) // rate 1/3 of 300
-    // deterministic under repartitioning
-    val again = Sampling.targetMixWeighted(docs.repartition(7), "doc_id",
-      "src", "w", Map("a" -> 0.5, "b" -> 0.5), salt = "tw")
-    assert(out.select("doc_id").except(again.select("doc_id")).count() == 0)
-    // a target stratum with zero total weight → no honest mix → empty
-    val withZero = docs.union(Seq((999L, "c", 0L)).toDF("doc_id", "src", "w"))
-    assert(Sampling.targetMixWeighted(withZero, "doc_id", "src", "w",
-      Map("a" -> 0.4, "b" -> 0.4, "c" -> 0.2), salt = "tw").count() === 0L)
-  }
-
-  test("hashSplit partitions every row, disjointly and deterministically") {
-    val docs = (1L to 2000L).map(i => (i, s"d$i")).toDF("doc_id", "text")
-      .repartition(5)
-    val out = Sampling.hashSplit(docs, "doc_id",
-      Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1), salt = "sp")
-    val counts = out.groupBy("split").count().as[(String, Long)]
-      .collect().toMap
-    // every row labeled exactly once; proportions near the fractions
-    assert(counts.values.sum == 2000L)
-    assert(math.abs(counts("train") - 1600L) < 100)
-    assert(math.abs(counts("valid") - 200L) < 60)
-    assert(math.abs(counts("test") - 200L) < 60)
-    // stable under repartitioning: identical assignment
-    val again = Sampling.hashSplit(docs.repartition(13), "doc_id",
-      Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1), salt = "sp")
-    assert(out.except(again).count() == 0 && again.except(out).count() == 0)
-    // consistent with hashSample at the same salt: the train region IS
-    // the rate-0.8 sample (the cross-table leakage guarantee)
-    val sample = Sampling.hashSample(docs, "doc_id", 0.8, salt = "sp")
-      .select("doc_id")
-    val train = out.filter(col("split") === "train").select("doc_id")
-    assert(train.except(sample).count() == 0 &&
-      sample.except(train).count() == 0)
-    // bad fractions fail loudly
-    intercept[IllegalArgumentException] {
-      Sampling.hashSplit(docs, "doc_id", Seq("a" -> 0.8, "b" -> 0.5))
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.hashSplit(docs, "doc_id", Seq("a" -> 0.8))
-    }
-  }
 
   test("clusterBalanced caps every cell and ranks by content hash") {
     // skewed cells: cell 0 has 50 rows, cell 1 has 3, cell 2 has 1
@@ -131,31 +28,6 @@ class CurationOpsSpec extends SparkSpec {
     val bigger = Sampling.clusterBalanced(asg, "id", "cell", perCell = 8,
       salt = "cb").select("id", "cell")
     assert(out.select("id", "cell").except(bigger).count() == 0)
-  }
-
-  test("repetitionProfile computes duplicate and top bigram fractions") {
-    val docs = Seq(
-      (1L, "a b a b a b"),      // bigrams: ab ba ab ba ab → 5 total, 2 distinct
-      (2L, "u v w x y z"),      // 5 distinct bigrams, no repetition
-      (3L, "q")).toDF("doc_id", "text") // no bigram → absent from output
-    val out = TextAnalysis.repetitionProfile(docs, "text", "doc_id", n = 2)
-      .select("doc_id", "total_grams", "distinct_grams", "dup_gram_frac",
-        "top_gram_frac", "repetitive")
-      .as[(Long, Long, Long, Double, Double, Boolean)].collect().sortBy(_._1)
-    assert(out.map(_._1).toSeq == Seq(1L, 2L))
-    val d1 = out(0)
-    assert(d1._2 == 5L && d1._3 == 2L)
-    assert(math.abs(d1._4 - 0.6) < 1e-9)       // 1 - 2/5
-    assert(math.abs(d1._5 - 0.6) < 1e-9)       // 3/5
-    assert(d1._6)                               // repetitive
-    val d2 = out(1)
-    assert(d2._4 == 0.0 && !d2._6)
-    // integer micro-unit twins: exact floor division, no IEEE rounding
-    val e6 = TextAnalysis.repetitionProfile(docs, "text", "doc_id", n = 2)
-      .select("doc_id", "dup_gram_e6", "top_gram_e6")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(e6(0) == ((1L, 600000L, 600000L)))  // (5-2)/5, 3/5
-    assert(e6(1) == ((2L, 0L, 200000L)))       // 0/5, 1/5
   }
 
   test("compiled WordGrams matches the interpreted HOF gram construction") {
@@ -203,121 +75,6 @@ class CurationOpsSpec extends SparkSpec {
     a.zip(b).foreach { case (x, y) => assert(x == y, s"\n$x\n$y") }
   }
 
-  test("hashClassifierScore is deterministic, bounded, and sign-labelled") {
-    val docs = Seq((1L, "alpha beta gamma"), (2L, ""), (3L, "alpha beta gamma"))
-      .toDF("doc_id", "text")
-    val out = TextAnalysis.hashClassifierScore(docs, "text")
-      .select("doc_id", "clf_score", "clf_keep")
-      .as[(Long, Double, Boolean)].collect().sortBy(_._1)
-    assert(out(0)._2 == out(2)._2 && out(0)._3 == out(2)._3)
-    assert(out.forall(r => r._2 >= -1.0 && r._2 <= 1.0))
-    assert(out(1)._2 == 0.0 && !out(1)._3) // empty text → score 0, dropped
-    assert(out(0)._3 == (out(0)._2 > 0))
-  }
-
-  test("unigramSurprisal: hand-computed mean surprisal; boilerplate scores " +
-    "lower than rare text; empty docs are absent") {
-    // corpus: "common common" ×2 docs + "rare" once → counts: common=4, rare=1, N=5
-    val docs = Seq((1L, "common common"), (2L, "common common rare"),
-      (3L, "")).toDF("doc_id", "text")
-    val out = TextAnalysis.unigramSurprisal(docs, "text", "doc_id")
-      .select("id", "n_tokens", "surprisal")
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    assert(out.map(_._1).toSeq == Seq(1L, 2L)) // doc 3 has no tokens
-    val n = 5.0
-    val d1 = math.log(n) - (2 * math.log(4.0)) / 2           // all common
-    val d2 = math.log(n) - (2 * math.log(4.0) + math.log(1.0)) / 3
-    assert(math.abs(out(0)._3 - d1) < 1e-12 && out(0)._2 == 2L)
-    assert(math.abs(out(1)._3 - d2) < 1e-12 && out(1)._2 == 3L)
-    assert(out(1)._3 > out(0)._3) // the rare token raises mean surprisal
-  }
-
-  test("bigramSurprisal: hand-computed interpolated conditionals; " +
-    "<2-token docs keep a row with NULL surprisal; lambda guard") {
-    // bigrams: "a b" x2 (d1, d2), "b a" x1 (d1). ctx(a)=2, ctx(b)=1.
-    // unigrams: a=3, b=2, x=1, N=6.
-    val docs = Seq((1L, "a b a"), (2L, "a b"), (3L, "x"))
-      .toDF("doc_id", "text")
-    val out = TextAnalysis.bigramSurprisal(docs, "text", "doc_id")
-      .select("id", "n_bigrams", "surprisal")
-      .as[(Long, Long, Option[Double])].collect().sortBy(_._1).toSeq
-    val pAB = 0.7 * (2.0 / 2.0) + (1.0 - 0.7) * (2.0 / 6.0) // = 0.8
-    val pBA = 0.7 * (1.0 / 1.0) + (1.0 - 0.7) * (3.0 / 6.0) // = 0.85
-    assert(out.map(r => (r._1, r._2)) == Seq((1L, 2L), (2L, 1L), (3L, 0L)))
-    assert(math.abs(out(0)._3.get -
-      (-(math.log(pAB) + math.log(pBA)) / 2.0)) < 1e-12)
-    assert(math.abs(out(1)._3.get - (-math.log(pAB))) < 1e-12)
-    assert(out(2)._3.isEmpty) // one token: no conditional evidence
-    // context-aware: with a context that has SEVERAL continuations
-    // ("the" -> cat|dog|sat), the common continuation scores below the
-    // rare scrambled one — the signal unigram frequency cannot carry
-    // (a deterministic-context corpus would score both 0.8 identically)
-    val fluent = (0 until 4).map(i => (i.toLong, "the cat sat")) ++
-      (4 until 8).map(i => (i.toLong, "the dog sat"))
-    val salad = Seq((100L, "the sat cat"))
-    val both = (fluent ++ salad).toDF("doc_id", "text")
-    val s = TextAnalysis.bigramSurprisal(both, "text", "doc_id")
-      .select("id", "surprisal").as[(Long, Double)].collect().toMap
-    assert(s(0L) < s(100L), s.toString)
-    intercept[IllegalArgumentException] {
-      TextAnalysis.bigramSurprisal(docs, "text", "doc_id", lambda = 1.0)
-    }
-  }
-
-  test("windowedChunkDedup: hand-computed winners, ragged tail, " +
-    "partition independence") {
-    import graft.ops.Dedup
-    val docs = Seq(
-      (1L, "a b c d"),   // chunks (W=2): "a b", "c d"
-      (2L, "a b x y"),   // "a b" duplicates doc 1 chunk 0
-      (3L, "c d"),       // duplicates doc 1 chunk 1
-      (4L, "a b c")      // ragged tail: "a b", "c"
-    ).toDF("doc_id", "text")
-    val out = Dedup.windowedChunkDedup(docs, "text", "doc_id", 2)
-      .select("doc_id", "chunk_idx", "occurrences")
-      .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-    // winners: "a b"->(1,0) x3, "c d"->(1,1) x2, "x y"->(2,1), "c"->(4,1)
-    assert(out == Seq((1L, 0, 3L), (1L, 1, 2L), (2L, 1, 1L), (4L, 1, 1L)))
-    // same result set under a different physical layout
-    val re = Dedup.windowedChunkDedup(docs.repartition(7), "text", "doc_id", 2)
-      .select("doc_id", "chunk_idx", "occurrences")
-      .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(re == out)
-    intercept[IllegalArgumentException] {
-      Dedup.windowedChunkDedup(docs, "text", "doc_id", 0)
-    }
-  }
-
-  test("dropBoilerplateSpans: reassembles survivors, drops all-boilerplate " +
-    "docs, caps are loud") {
-    import graft.ops.Dedup
-    val docs = Seq(
-      (1L, "a b c d"),   // "a b" and "c d" both repeat corpus-wide
-      (2L, "a b x y"),   // survives as "x y"
-      (3L, "c d"),       // all boilerplate -> absent
-      (4L, "a b c")      // ragged tail "c" survives
-    ).toDF("doc_id", "text")
-    val out = Dedup.dropBoilerplateSpans(docs, "text", "doc_id",
-        windowTokens = 2, maxOccurrences = 1)
-      .select("doc_id", "clean_text", "kept_chunks")
-      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
-    assert(out == Seq((2L, "x y", 1L), (4L, "c", 1L)))
-    // threshold 2 keeps the twice-occurring spans ("c d" x2) but still
-    // drops "a b" (x3)
-    val loose = Dedup.dropBoilerplateSpans(docs, "text", "doc_id",
-        windowTokens = 2, maxOccurrences = 2)
-      .select("doc_id", "clean_text").as[(Long, String)]
-      .collect().sortBy(_._1).toSeq
-    assert(loose == Seq((1L, "c d"), (2L, "x y"), (3L, "c d"), (4L, "c")))
-    intercept[IllegalArgumentException] {
-      Dedup.dropBoilerplateSpans(docs, "text", "doc_id", 2, maxOccurrences = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.dropBoilerplateSpans(docs, "text", "doc_id", 2, maxOccurrences = 1,
-        maxBoilerplateHashes = 1)
-    }
-  }
-
   test("lengthQuantiles: hand-computed interpolation and guard") {
     val df = ((1 to 5).map(i => ("g1", i.toLong)) :+ ("g2", 10L))
       .toDF("src", "len")
@@ -349,33 +106,6 @@ class CurationOpsSpec extends SparkSpec {
       assert(math.abs(exact(q) - sketch(q)) <= 2.0,
         s"q=$q exact=${exact(q)} approx=${sketch(q)}")
     }
-  }
-
-  test("bpeMerges: hand-computed greedy rounds, deterministic ties, loud " +
-    "exhaustion") {
-    // vocab: "aa"x1, "ab"x2 → round 1 pairs: (a a)=1, (a b)=2 → merge "a b";
-    // round 2: only (a a)=1 left → merge "a a"; round 3: no pairs → loud
-    val docs = Seq("aa ab", "ab!").toDF("text")
-    val out = TextAnalysis.bpeMerges(docs, "text", rounds = 2)
-      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
-    assert(out == Seq((1, "a b", "ab", 2L), (2, "a a", "aa", 1L)))
-    intercept[IllegalArgumentException] {
-      TextAnalysis.bpeMerges(docs, "text", rounds = 3)
-    }
-    // tie on count → lexicographically smallest pair wins
-    val tie = Seq("xy", "xz").toDF("text")
-    val first = TextAnalysis.bpeMerges(tie, "text", rounds = 1)
-      .as[(Int, String, String, Long)].head()
-    assert(first == ((1, "x y", "xy", 1L)))
-    // the documented boundary-skip: in "a b a b" the two (a,b) occurrences
-    // share a padding space, so round 1 merges only the first; round 2
-    // catches the survivor; round 3 then merges the (ab,ab) pair — and no
-    // phantom cross-boundary pair ever forms from a merged atomic symbol
-    val run = Seq("abab").toDF("text")
-    val three = TextAnalysis.bpeMerges(run, "text", rounds = 3)
-      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
-    assert(three == Seq((1, "a b", "ab", 2L), (2, "a b", "ab", 1L),
-      (3, "ab ab", "abab", 1L)))
   }
 
   test("langidConfusion counts prediction-vs-label cells with recall " +
@@ -489,80 +219,6 @@ class CurationOpsSpec extends SparkSpec {
     }
   }
 
-  test("bpeEncode: hand-computed token counts under trained rules") {
-    // rules (a b)->ab then (a a)->aa (the bpeMerges "aa ab" fixture).
-    // "aa"  = " a a "   -> rule2 -> " aa "            → 1 token
-    // "ab"  = " a b "   -> rule1 -> " ab "            → 1 token
-    // "aba" = " a b a " -> rule1 -> " ab a "          → 2 tokens
-    // "aab" = " a a b " -> rule1 (at ' a b ') -> " a ab "  → 2 tokens
-    //         (the documented left-to-right replace semantics — encoding
-    //         scans exactly like training's rewrite)
-    val docs = Seq((1L, "aa ab"), (2L, "aba aab!"), (3L, "ab ab aa"))
-      .toDF("doc_id", "text")
-    val rules = Seq(("a b", "ab"), ("a a", "aa"))
-    val out = TextAnalysis.bpeEncode(docs, "text", "doc_id", rules)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(out == Seq((1L, 2L, 2L), (2L, 2L, 4L), (3L, 3L, 3L)))
-    // empty rule list is loud; docs with no letters are absent
-    intercept[IllegalArgumentException] {
-      TextAnalysis.bpeEncode(docs, "text", "doc_id", Nil)
-    }
-    val none = Seq((9L, "123 456")).toDF("doc_id", "text")
-    assert(TextAnalysis.bpeEncode(none, "text", "doc_id", rules).count() == 0)
-  }
-
-  test("surprisalBuckets: terciles follow the surprisal order per group") {
-    // 6 one-group docs with strictly increasing surprisal (rarer tokens →
-    // higher): terciles must split 2/2/2 in that order
-    val docs = Seq(
-      (1L, "the the the the", "g"),
-      (2L, "the the the cat", "g"),
-      (3L, "the the cat dog", "g"),
-      (4L, "the cat dog bird", "g"),
-      (5L, "cat dog bird fish", "g"),
-      (6L, "dog bird fish wolf lion", "g"))
-      .toDF("doc_id", "text", "lang")
-    val out = TextAnalysis.surprisalBuckets(docs, "text", "doc_id", "lang")
-      .select("id", "bucket").as[(Long, String)].collect().toMap
-    val byS = TextAnalysis.unigramSurprisal(docs, "text", "doc_id")
-      .select("id", "surprisal").as[(Long, Double)].collect()
-      .sortBy(_._2).map(_._1).toSeq
-    assert(byS.take(2).map(out) == Seq("head", "head"))
-    assert(byS.slice(2, 4).map(out) == Seq("middle", "middle"))
-    assert(byS.drop(4).map(out) == Seq("tail", "tail"))
-    // grouping is respected: a second group buckets independently
-    val two = docs.union(Seq((7L, "zzz yyy", "h"), (8L, "zzz zzz", "h"),
-      (9L, "zzz qqq ppp", "h")).toDF("doc_id", "text", "lang"))
-    val g2 = TextAnalysis.surprisalBuckets(two, "text", "doc_id", "lang")
-      .filter(col("grp") === "h").select("bucket")
-      .as[String].collect().sorted.toSeq
-    assert(g2 == Seq("head", "middle", "tail"))
-  }
-
-  test("dsirWeights: zero when target == raw; target-like docs score higher") {
-    val docs = Seq(
-      (1L, "alpha beta alpha", "tgt"),
-      (2L, "alpha beta gamma", "tgt"),
-      (3L, "delta epsilon zeta", "raw"),
-      (4L, "delta zeta zeta eta", "raw"))
-      .toDF("doc_id", "text", "source")
-    // target predicate matches everything → p_T == p_R → every weight 0
-    val allT = TextAnalysis.dsirWeights(docs, "text", "doc_id",
-      lit(true), buckets = 64)
-      .select("log_weight").as[Double].collect()
-    assert(allT.forall(w => math.abs(w) < 1e-12))
-    // target = the tgt slice: a tgt-vocabulary doc must outscore a
-    // raw-vocabulary doc, and n_feats counts uni+bigrams (2n-1 per doc)
-    val w = TextAnalysis.dsirWeights(docs, "text", "doc_id",
-      col("source") === "tgt", buckets = 64)
-      .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(w(1L)._1 == 5L && w(4L)._1 == 7L)
-    assert(w(1L)._2 > w(3L)._2 && w(2L)._2 > w(4L)._2)
-    intercept[IllegalArgumentException] {
-      TextAnalysis.dsirWeights(docs, "text", "doc_id", lit(true), buckets = 1)
-    }
-  }
-
   test("corpusRollup: levels are consistent and match the per-doc profile") {
     val docs = Seq(
       ("s1", "the cat sat on the mat with a hat"),
@@ -595,51 +251,5 @@ class CurationOpsSpec extends SparkSpec {
       val q = profiled.find(p => p._1 == src.get && p._2 == lang.get).get._3
       assert(math.abs(mq - math.floor(q * 1e6 + 0.5) / 1e6) < 1e-9)
     }
-  }
-
-  test("temperatureMix: rarest stratum kept whole, kept counts track " +
-    "n^alpha shares, alpha=1 is a no-op, deterministic under repartition") {
-    // 6400 / 400 / 100: sqrt rates 1/8, sqrt(1/4)=1/2, 1
-    val docs = ((1 to 6400).map(i => (i.toLong, "en")) ++
-      (6401 to 6800).map(i => (i.toLong, "de")) ++
-      (6801 to 6900).map(i => (i.toLong, "fr"))).toDF("doc_id", "lang")
-    val out = Sampling.temperatureMix(docs, "doc_id", "lang", alpha = 0.5,
-      salt = "t")
-    val byLang = out.groupBy("lang").count().as[(String, Long)]
-      .collect().toMap
-    assert(byLang("fr") == 100L) // rate exactly 1.0
-    // expected: en 6400/8 = 800, de 400/2 = 200 (hash gate: expectation)
-    assert(math.abs(byLang("en") - 800L) < 120)
-    assert(math.abs(byLang("de") - 200L) < 60)
-    // alpha = 1 → every rate 1.0 → identity
-    assert(Sampling.temperatureMix(docs, "doc_id", "lang", alpha = 1.0)
-      .count() == 6900L)
-    // partition-order independence (content-hash gate)
-    val again = Sampling.temperatureMix(docs.repartition(13), "doc_id",
-      "lang", alpha = 0.5, salt = "t")
-    assert(out.select("doc_id").except(again.select("doc_id")).count() == 0)
-    assert(again.count() == out.count())
-    // bad alpha refuses loudly
-    intercept[IllegalArgumentException] {
-      Sampling.temperatureMix(docs, "doc_id", "lang", alpha = 0.0) }
-  }
-
-  test("temperatureMix: NULL strata form their own stratum instead of " +
-    "silently vanishing (the equi-join would never match null keys)") {
-    val docs = (Seq((1L, Option("en")), (2L, Option("en")),
-      (3L, Option("en")), (4L, Option("en"))) ++
-      (5L to 6L).map(i => (i, None: Option[String])))
-      .toDF("doc_id", "lang")
-    // alpha = 1: every rate is 1.0 → the output must be the whole input,
-    // INCLUDING both null-stratum rows (the round-7 code dropped them)
-    val all = Sampling.temperatureMix(docs, "doc_id", "lang", alpha = 1.0)
-    assert(all.count() == 6L)
-    assert(all.filter(col("lang").isNull).count() == 2L)
-    // at alpha < 1 the null stratum is the rarest → kept whole
-    val mixed = Sampling.temperatureMix(docs, "doc_id", "lang", alpha = 0.5)
-    assert(mixed.filter(col("lang").isNull).count() == 2L)
-    // output schema unchanged (no sentinel column leaks)
-    assert(mixed.columns.toSeq == Seq("lang", "doc_id") ||
-      mixed.columns.toSeq == Seq("doc_id", "lang"))
   }
 }

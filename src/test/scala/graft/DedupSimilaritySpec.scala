@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Sampling
 import graft.ops.{Dedup, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -13,26 +12,6 @@ class DedupSimilaritySpec extends SparkSpec {
     (3L, "a completely different document about spark sql engines"),
     (4L, "the quick brown fox jumps over the lazy cat")) // near-dup of 1
     .toDF("doc_id", "text")
-
-  test("exact dedup keeps lowest id and counts the group") {
-    val out = Dedup.exact(docs, "text", "doc_id")
-      .select("doc_id", "dup_count").as[(Long, Long)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq((1L, 2L), (3L, 1L), (4L, 1L)))
-  }
-
-  test("yieldReport counts canonical survivors in their OWN group") {
-    // "a" appears in s1 twice and s2 once; the min-id winner (1) sits in
-    // s1, so s2's copy is a duplicate even though s2 has no internal dup
-    val d = Seq((1L, "a", "s1"), (2L, "a", "s1"), (3L, "b", "s1"),
-      (4L, "a", "s2"), (5L, "c", "s2")).toDF("doc_id", "text", "source")
-    val out = Dedup.yieldReport(d, "text", "doc_id", "source")
-      .orderBy("source").as[(String, Long, Long, Long)].collect().toSeq
-    assert(out === Seq(
-      ("s1", 3L, 2L, math.round(1000000.0 / 3)),
-      ("s2", 2L, 1L, 500000L)))
-    // global invariant: Σ n_canonical == distinct normalized texts
-    assert(out.map(_._3).sum === 3L)
-  }
 
   test("minhash LSH finds the normalized duplicate with jaccard 1.0") {
     val pairs = Dedup.minhashLsh(docs, "text", "doc_id", 16, 8, 3)
@@ -174,52 +153,12 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!kept.contains("b") && kept.contains("ba")) // ba dominates b
   }
 
-  test("suffixSpanDedup: overlapping duplicated windows merge into ONE " +
-    "maximal span; within-doc-only repeats don't mark; gaps > L split") {
-    // docs A and B share a 7-token run ("one two three four five six
-    // seven") with L=4 → window starts 0..3 in A merge to one 7-token
-    // span; doc C repeats a 4-gram INTERNALLY only → no cross-doc dup;
-    // doc D shares a second, disjoint 4-gram with A far from A's first
-    // span → two separate spans in A
-    val docs = Seq(
-      (1L, "one two three four five six seven xx yy zz qq ww ee rr " +
-        "alpha beta gamma delta"),
-      (2L, "pre one two three four five six seven post"),
-      (3L, "rep rep rep rep mid rep rep rep rep"),
-      (4L, "tail alpha beta gamma delta")).toDF("doc_id", "text")
-    val out = Dedup.suffixSpanDedup(docs, "text", "doc_id", minTokens = 4)
-      .orderBy("id", "start_pos")
-      .as[(Long, Int, Int, String)].collect().toSeq
-    assert(out == Seq(
-      (1L, 0, 7, "one two three four five six seven"),
-      (1L, 14, 4, "alpha beta gamma delta"),
-      (2L, 1, 7, "one two three four five six seven"),
-      (4L, 1, 4, "alpha beta gamma delta")), out.toString)
-    // doc 3's internal repeat never surfaces (cross-doc contract)
-    assert(!out.exists(_._1 == 3L))
-    // coverage-contiguity edge: starts exactly L apart still merge
-    // (coverage [p, p+L-1] and [p+L, p+2L-1] touch with no gap)
-    val edge = Seq(
-      (1L, "a b c d e f g h"),   // windows at 0 and 4, L=4: starts 4 apart
-      (2L, "a b c d zz"), (3L, "e f g h zz")).toDF("doc_id", "text")
-    val merged = Dedup.suffixSpanDedup(edge, "text", "doc_id", minTokens = 4)
-      .filter(col("id") === 1L)
-      .as[(Long, Int, Int, String)].collect().toSeq
-    assert(merged == Seq((1L, 0, 8, "a b c d e f g h")), merged.toString)
-  }
-
   test("ngram jaccard: identical=1.0, near-dup in (0,1)") {
     val pairs = Seq((1L, 2L), (1L, 4L)).toDF("id_a", "id_b")
     val out = Dedup.ngramJaccard(docs, pairs, "text", "doc_id", 3)
       .as[(Long, Long, Double)].collect().sortBy(_._2)
     assert(out(0)._3 == 1.0)
     assert(out(1)._3 > 0.3 && out(1)._3 < 1.0)
-  }
-
-  test("simhash pairs: normalized duplicate at hamming 0") {
-    val out = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 3)
-      .as[(Long, Long, Int)].collect()
-    assert(out.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
   }
 
   private lazy val vecs = Seq(
@@ -257,23 +196,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(partial.toSet.subsetOf(vecs.select("vec_id").as[Long].collect().toSet))
   }
 
-  test("crossCorpusNearDup flags corpus docs colliding with the benchmark") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "completely different text about spark dataframes and joins here"),
-      (3L, "THE QUICK BROWN FOX jumps over the lazy dog again and again"))
-      .toDF("doc_id", "text")
-    val bench = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog again and again"))
-      .toDF("bench_id", "text")
-    val hits = Dedup.crossCorpusNearDup(corpus, "text", "doc_id",
-      bench, "text", "bench_id")
-      .as[(Long, Long, Double)].collect()
-    // doc 1 exact and doc 3 case-variant both collide at jaccard 1.0
-    assert(hits.map(h => (h._1, h._2)).toSet == Set((1L, 100L), (3L, 100L)))
-    assert(hits.forall(_._3 == 1.0))
-  }
-
   test("ngramFrequencies counts every occurrence, ranks deterministically") {
     import graft.ops.TextAnalysis
     val docs = Seq("a b a b c", "a b x", "z").toDF("text")
@@ -287,76 +209,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(bi.map(_._1).toSet.contains("b a"))
     // single-token doc contributes no bigrams; short docs don't blow up
     assert(!bi.map(_._1).exists(_.contains("z")))
-  }
-
-  test("hash sampling is deterministic, monotone in rate, and stratified") {
-    import graft.ops.Sampling
-    val df = spark.range(1000).toDF("id")
-      .withColumn("grp", (col("id") % 2 === 0).cast("string"))
-    val s10 = Sampling.hashSample(df, "id", 0.1).select("id").as[Long].collect().toSet
-    val s10b = Sampling.hashSample(df, "id", 0.1).select("id").as[Long].collect().toSet
-    val s20 = Sampling.hashSample(df, "id", 0.2).select("id").as[Long].collect().toSet
-    assert(s10 == s10b)                  // deterministic
-    assert(s10.subsetOf(s20))            // monotone in rate
-    assert(s10.size > 50 && s10.size < 150) // roughly the rate
-    // different salt -> a different (independent) sample
-    val salted = Sampling.hashSample(df, "id", 0.1, salt = "x")
-      .select("id").as[Long].collect().toSet
-    assert(salted != s10)
-    // stratified: listed stratum at high rate, default near zero
-    val strat = Sampling.stratified(df, "id", "grp",
-      rates = Map("true" -> 0.5), defaultRate = 0.0)
-    assert(strat.filter(col("grp") === "false").count() == 0)
-    val kept = strat.count()
-    assert(kept > 150 && kept < 350)
-    intercept[IllegalArgumentException](
-      Sampling.hashSample(df, "id", 1.5))
-  }
-
-  test("connectedComponents: min reachable id, chains and singleton pairs") {
-    // two clusters: a chain 1-2-3-4 (transitive closure through the chain)
-    // and a lone pair 10-11; node 4 only reaches 1 via two hops
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L))
-    // a long path converges too (diameter > 2 needs several rounds)
-    val path = (1L to 9L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("id_a", "id_b")
-    val pc = Dedup.connectedComponents(path).as[(Long, Long)].collect().toMap
-    assert(pc.values.toSet == Set(1L) && pc.size == 9)
-  }
-
-  test("connectedComponents: O(log n) rounds on an adversarial chain") {
-    // a 128-node path has diameter 127: min-label propagation would need
-    // ~127 rounds; large-star/small-star must stay logarithmic
-    val path = (1L to 128L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("id_a", "id_b")
-    // localEdgeCap = 0 forces the pure distributed loop — the default cap
-    // would absorb this cap-sized fixture into the driver-local finisher
-    val (labels, rounds) =
-      Dedup.connectedComponentsWithRounds(path, localEdgeCap = 0L)
-    val m = labels.as[(Long, Long)].collect().toMap
-    assert(m.size == 128 && m.values.toSet == Set(1L))
-    assert(rounds <= 10, s"expected O(log n) convergence, took $rounds rounds")
-  }
-
-  test("connectedComponents: local finisher handoff matches the distributed loop") {
-    // a shape with a long chain + side branches, on STRING ids (exercises
-    // the UTF-8-byte driver ordering): all three execution modes — pure
-    // local (cap ≥ edges), hybrid (a few distributed rounds, then local
-    // finish on the contracted core), pure distributed (cap 0) — must
-    // produce identical labels
-    val pairs = ((1 to 40).map(i => (f"n$i%03d", f"n${i + 1}%03d")) ++
-      Seq(("n005", "zzz"), ("aaa", "n020"), ("x1", "x2"))).toDF("id_a", "id_b")
-    def run(cap: Long) = Dedup.connectedComponents(pairs, localEdgeCap = cap)
-      .as[(String, String)].collect().toMap
-    val distributed = run(0L)
-    assert(run(Long.MaxValue) == distributed)
-    assert(run(8L) == distributed)
-    assert(distributed("n041") == "aaa" && distributed("x2") == "x1")
   }
 
   test("embeddingNearDup with sign-plane buckets keeps true near-dups") {
@@ -428,21 +280,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(kept.toSeq == Seq(1L, 3L, 4L))
   }
 
-  test("ngramContamination counts distinct shared grams, exact and " +
-    "normalization-aware") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the dog"),
-      (2L, "THE QUICK  BROWN fox!! something else entirely here"), // norm overlap
-      (3L, "totally unrelated content with no overlap at all"))
-      .toDF("doc_id", "text")
-    val bench = Seq(Tuple1("the quick brown fox runs")).toDF("text")
-    val out = Dedup.ngramContamination(corpus, "text", "doc_id", bench,
-      "text", n = 4)
-      .as[(Long, Long)].collect().toMap
-    // bench 4-grams: {the quick brown fox, quick brown fox runs}
-    assert(out == Map(1L -> 1L, 2L -> 1L)) // doc 3 absent = clean
-  }
-
   test("semanticDedup at threshold 1.0+ keeps everything") {
     val assigned = Seq(
       (1L, Array(1.0, 0.0), 0), (2L, Array(1.0, 0.0), 0))
@@ -452,35 +289,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(Dedup.semanticDedup(assigned, 1.5).count() == 2)
     assert(Dedup.semanticDedup(assigned, 1.0).select("id").as[Long]
       .collect().toSeq == Seq(1L))
-  }
-
-  test("weightedSample: matches independent A-Res arithmetic, " +
-    "partition-independent, excludes non-positive weights") {
-    val rows = (1L to 40L).map(i => (i, (i % 7).toInt)) // weights 0..6
-    val df = rows.toDF("id", "w")
-    // independent replay: u from the md5 h60 slice, priority ln(u)/w
-    def h60(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
-    val want = rows.filter(_._2 > 0).map { case (id, w) =>
-      val u = h60(s"s1#$id").toDouble / 1.152921504606847e18
-      (id, math.log(u) / w)
-    }.sortBy { case (id, p) => (-p, id) }.take(5).map(_._1).toSet
-    val got = Sampling.weightedSample(df, "id", "w", k = 5, salt = "s1")
-      .select("id").as[Long].collect().toSet
-    assert(got == want)
-    val got7 = Sampling.weightedSample(df.repartition(7), "id", "w", 5, "s1")
-      .select("id").as[Long].collect().toSet
-    assert(got7 == got)
-    // zero-weight rows can never be drawn even with k > candidates
-    val all = Sampling.weightedSample(df, "id", "w", k = 40, salt = "s1")
-      .select("id").as[Long].collect()
-    assert(all.length == rows.count(_._2 > 0))
-    intercept[IllegalArgumentException] {
-      Sampling.weightedSample(df, "id", "w", k = 0)
-    }
   }
 
   test("JL sign projection preserves pairwise cosine within the " +
@@ -510,96 +318,5 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("id") < 40)
       .as[(Long, Seq[Double])].collect().toMap
     assert(again == pv)
-  }
-
-  test("duplicateSpanRemoval deletes every occurrence after the corpus " +
-    "first, at any offset, within and across documents") {
-    import org.apache.spark.sql.functions.col
-    val boiler = "one two three four" // the 4-token duplicated span
-    val docs = Seq(
-      (1L, s"$boiler alpha beta gamma delta"),      // first occurrence
-      (2L, s"prefix words here $boiler epsilon"),   // mid-doc occurrence
-      (3L, s"$boiler $boiler zeta"),                // intra-doc repeat
-      (4L, "totally unrelated text stays put"),
-      (5L, "shorty")).toDF("doc_id", "text")        // shorter than span
-    val out = graft.ops.Dedup
-      .duplicateSpanRemoval(docs, "text", "doc_id", spanTokens = 4)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Int]("n_tokens"), r.getAs[Int]("n_removed"),
-          r.getAs[String]("text_clean"))).toMap
-    // doc 1 holds the first (1, pos 0) occurrence — untouched
-    assert(out(1L) == ((8, 0, s"$boiler alpha beta gamma delta")))
-    // doc 2's mid-doc occurrence removed, surroundings intact
-    assert(out(2L) == ((8, 4, "prefix words here epsilon")))
-    // doc 3: both copies are non-first; the crossing spans ("three four
-    // one two" etc.) are also duplicated INSIDE doc 3 relative to their
-    // own first in-doc position — by the rule, the union of non-first
-    // occurrences covers both boiler copies
-    assert(out(3L)._2 == 8 && out(3L)._3 == "zeta")
-    assert(out(4L) == ((5, 0, "totally unrelated text stays put")))
-    assert(out(5L) == ((1, 0, "shorty")))
-  }
-
-  test("winnowingFingerprints: guarantee (shared >= k+w-1-token substring " +
-    "=> common fingerprint), density, short-doc degenerate window") {
-    import org.apache.spark.sql.functions.col
-    val shared = "the quick brown fox jumps over the lazy dog tonight"
-    val docs = Seq(
-      (1L, s"alpha beta $shared gamma delta epsilon"),
-      (2L, s"zeta eta theta iota $shared kappa"),
-      (3L, "completely different words live here now today friends"),
-      (4L, "tiny doc"),          // < k tokens: no grams at all
-      (5L, "just three words"))  // exactly one gram, one truncated window
-      .toDF("doc_id", "text")
-    val fps = graft.ops.Dedup
-      .winnowingFingerprints(docs, "text", "doc_id", k = 3, w = 4)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"),
-        r.getAs[Long]("fp")))
-    val byDoc = fps.groupBy(_._1).view.mapValues(_.map(_._3).toSet).toMap
-    // guarantee: docs 1 and 2 share a 10-token run >= k+w-1 = 6 tokens
-    assert((byDoc(1L) & byDoc(2L)).nonEmpty)
-    // doc 3 shares nothing with 1 or 2
-    assert((byDoc(3L) & (byDoc(1L) | byDoc(2L))).isEmpty)
-    // density: at least one fingerprint per w consecutive windows, and
-    // far fewer fingerprints than grams
-    val d1Pos = fps.filter(_._1 == 1L).map(_._2).sorted
-    assert(d1Pos.sliding(2).forall(p => p.length < 2 || p(1) - p(0) <= 4))
-    // no-gram doc emits nothing; one-gram doc emits its single hash
-    assert(!byDoc.contains(4L))
-    assert(byDoc(5L).size == 1)
-    // determinism under repartition
-    val again = graft.ops.Dedup.winnowingFingerprints(
-        docs.repartition(7), "text", "doc_id", k = 3, w = 4)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("pos"),
-        r.getAs[Long]("fp"))).toSet
-    assert(again == fps.toSet)
-  }
-
-  test("winnowOverlapPairs: contaminated docs pair on shared fingerprints; " +
-    "over-df boilerplate hashes are pruned before the self-join") {
-    import org.apache.spark.sql.functions.col
-    val boiler = "all rights reserved contact us for more information today ok"
-    val docs = (1L to 8L).map { i =>
-      val body = s"unique body $i with words w${i}a w${i}b w${i}c w${i}d"
-      // docs 1,2: shared 11-token tail; ALL docs share `boiler`
-      if (i <= 2) (i, s"$body $boiler shared tail one two three four five six seven eight")
-      else (i, s"$body $boiler")
-    }.toDF("doc_id", "text")
-    val fps = graft.ops.Dedup
-      .winnowingFingerprints(docs, "text", "doc_id", k = 3, w = 4)
-    // maxDf = 4 < 8 docs: the ubiquitous boiler fingerprints are pruned,
-    // so ONLY the 1-2 pair (private shared tail) survives
-    val pairs = graft.ops.Dedup.winnowOverlapPairs(fps, minShared = 1,
-        maxDf = 4)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
-    assert(pairs.contains((1L, 2L)))
-    assert(pairs.forall { case (a, b) => (a, b) == ((1L, 2L)) },
-      s"boilerplate pair leaked: ${pairs.mkString(",")}")
-    // with the cap lifted, the boiler hashes pair everyone: 8*7/2 pairs
-    val all = graft.ops.Dedup.winnowOverlapPairs(fps, minShared = 1,
-      maxDf = 100).count()
-    assert(all == 28L)
-    intercept[IllegalArgumentException] {
-      graft.ops.Dedup.winnowOverlapPairs(fps, minShared = 0) }
   }
 }

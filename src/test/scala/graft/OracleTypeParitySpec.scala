@@ -5,7 +5,6 @@ import scala.sys.process.{Process, ProcessLogger}
 /** Oracle TYPE-parity gate. The driver's correctness hasher is type-aware
   * (arrow encodings), so an oracle whose SQL yields HUGEINT or DECIMAL
   * where the Spark query emits int64 hash-fails even with identical values
-  * — the exact failure mode that kept q_pack_sequences red for two rounds
   * (DuckDB `SUM(BIGINT)` returns HUGEINT). tools/compare.py compares
   * stringified values and cannot see this class of bug; this spec can: it
   * DESCRIBEs every oracle in DuckDB (LIMIT 0, no execution) and diffs

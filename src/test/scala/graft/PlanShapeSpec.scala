@@ -27,42 +27,37 @@ class PlanShapeSpec extends SparkSpec {
   private val declarative = Seq(
     "q_agg_sums", "q_join_chain", "q_central_materialization",
     "q_nested_collect", "q_window_topn", "q_window_lag_chain",
-    "q_dedup_window", "q_dedup_exact", "q_minhash_lsh", "q_simhash",
+    "q_dedup_window",
     "q_union_distinct", "q_anti_join", "q_semi_join", "q_metadata_filter",
     "q_scd2_intervals", "q_version_merge", "q_version_latest",
     "q_asof_snapshot", "q_delete_cascade", "q_checkpoint_filter",
     "q_chunk_split", "q_search_normalize", "q_multitenant_scope",
     "q_processor_chain", "q_full_chain", "q_lexical_statements",
     "q_lexical_entities", "q_lexical_relations", "q_text_profile",
-    "q_stratified_sample", "q_redact_pii", "q_decontaminate",
-    "q_ngram_freq", "q_dedup_components", "q_curation_pipeline",
+    "q_redact_pii", "q_ngram_freq",
     "q_embedding_neardup_lsh", "q_cumsum_budget", "q_orderpreserve_dedup",
     // round 4: the det-KMeans probe (training runs in the warmed Tables
     // layer; the query plan itself is a flat filter + top-k) and the real
     // image-decode pipeline
     "q_ivf_kmeans", "q_multimodal_decode",
-    // round 5: centrality, semantic dedup, unigram surprisal, bloom anti —
+    // round 5: centrality, semantic dedup, bloom anti —
     // all must stay cell/key-joined, never cross-product
-    "q_pagerank", "q_semantic_dedup", "q_unigram_surprisal",
+    "q_pagerank", "q_semantic_dedup",
     "q_bloom_anti_join",
     // round 5: temporal joins — the as-of is a window (no join node at
     // all), the range join must stay a (key, bin) equi-join
-    "q_asof_join", "q_range_join", "q_ngram_decontaminate",
-    // round 5: window-span dedup (explode + one hash aggregate), exact
-    // quantile profile, and the cluster balance profile — plain aggregate
-    // plans, no join node at all
-    "q_window_dedup", "q_length_quantiles", "q_cluster_profile",
+    "q_asof_join", "q_range_join",
+    // round 5: exact quantile profile and the cluster balance profile —
+    // plain aggregate plans, no join node at all
+    "q_length_quantiles", "q_cluster_profile",
     // round 5 (late): PQ ADC scan, audio decode pipeline, vocab stats,
     // grouping-sets rollup, triangle counting, k-core, communities, PPR —
-    // all key-joined or join-free (q_bpe_merges excluded: its per-round
-    // winner collect makes it a driver-loop query)
+    // all key-joined or join-free
     "q_pq_topk", "q_audio_decode", "q_vocab_stats", "q_corpus_rollup",
     "q_triangle_counts", "q_kcore", "q_label_prop", "q_ppr",
-    // round 6: surprisal terciles + DSIR weights — aggregate/broadcast-join
-    // plans (q_bpe_encode excluded like q_bpe_merges: training collects a
-    // winner per round, a driver loop by design) — and the cell-keyed kNN
-    // graph, which must never plan the corpus cross product
-    "q_surprisal_buckets", "q_dsir_weights", "q_knn_graph", "q_ivf_pq_topk",
+    // round 6: the cell-keyed kNN graph, which must never plan the corpus
+    // cross product
+    "q_knn_graph", "q_ivf_pq_topk",
     "q_hits",
     // round 6 (late): snapshot diff + column profile are join-free
     // aggregates; heavy hitters is two aggregate passes (candidate list
@@ -84,19 +79,17 @@ class PlanShapeSpec extends SparkSpec {
     "q_filtered_topk",
     // round 7: event analytics (user-keyed join chains), the projection /
     // link-prediction / modularity family (capped self-joins + the 1-row
-    // broadcast total), the prefix-filtered set-similarity and containment
-    // joins (postings equi-joins — a lost prefix filter would surface as a
-    // cross product), incremental IVF assign (join-free argmin select),
+    // broadcast total), incremental IVF assign (join-free argmin select),
     // co-occurrence (broadcast vocab + per-doc pair join), version GC
     // (pure predicate), weighted PageRank, grouped Cypher count
     "q_funnel", "q_retention", "q_copurchase_project", "q_adamic_adar",
-    "q_modularity", "q_setsim_join", "q_containment", "q_ivf_assign",
+    "q_modularity", "q_ivf_assign",
     "q_cooccurrence", "q_version_gc", "q_weighted_pagerank",
     "q_cypher_groupcount",
-    // round 7 (cont.): hash split is a join-free projection; Jaccard links
-    // is the capped wedge self-join + degree equi-joins; occupancy is one
+    // round 7 (cont.): Jaccard links is the capped wedge self-join +
+    // degree equi-joins; occupancy is one
     // explode + one aggregate, no join node at all
-    "q_hash_split", "q_jaccard_link", "q_concurrency",
+    "q_jaccard_link", "q_concurrency",
     // round 7 (cont.): cluster-balanced sample (heap aggregate over the
     // literal-centroid assignment — join-free) and rate anomalies (window
     // over the per-type bucket COUNTS frame, join-free)
@@ -113,26 +106,18 @@ class PlanShapeSpec extends SparkSpec {
     // round 7 (cont.): corpus-health stats (token-count aggregate + heap
     // rank + two per-group aggregates, grp-keyed join)
     "q_zipf_entropy",
-    // round 7 (cont.): dedup yield (hash-keyed aggregates + join),
-    // windowed funnel (user-keyed join chain), Tukey outliers
+    // round 7 (cont.): windowed funnel (user-keyed join chain), Tukey outliers
     // (|types|-row broadcast bounds join)
-    "q_dedup_yield", "q_funnel_windowed", "q_value_outliers",
+    "q_funnel_windowed", "q_value_outliers",
     // round 7 (cont.): LOCF forward fill (one user-keyed running window)
-    // and the token-budget mix (stratum-sum broadcast rates + hash gate)
-    "q_forward_fill", "q_target_mix_tokens",
+    "q_forward_fill",
     // round 7 (final): degree histogram and the langid confusion matrix —
     // both join-free aggregates (the confusion window runs over the
     // |langs|² counts frame)
     "q_degree_hist", "q_langid_confusion",
     // round 7 (cont. session): property-anchored / prefix Cypher (typed
-    // equi-joins like the other MATCH gates), the C4 page clean (one
-    // groupBy page build + in-row line filters), and the Gopher rule
-    // battery (pure per-row column program)
-    "q_cypher_propmap", "q_cypher_startswith", "q_c4_clean",
-    "q_gopher_rules", "q_rerank_crossenc",
-    // round 7 (cont. session): duplicate-span removal — hash-keyed span
-    // postings joins; a lost hash key would plan the corpus cross product
-    "q_span_dedup",
+    // equi-joins like the other MATCH gates)
+    "q_cypher_propmap", "q_cypher_startswith", "q_rerank_crossenc",
     // round 7 (cont. session): the OR / alternation / top-count Cypher
     // forms — still typed equi-joins (the OR is a residual filter, the
     // alternation a label-IN scan filter, the top count an agg+TakeOrdered)
@@ -144,14 +129,9 @@ class PlanShapeSpec extends SparkSpec {
     // round 7 (cont. session): NFC normalization — a pure per-row column
     // program (the expression must stay inside codegen, no join/exchange)
     "q_nfc_normalize",
-    // round 7 (cont. session): temperature mix — counts + closed-form
-    // rates broadcast back (the same gate family as q_target_mix) — and
-    // URL canonicalization (per-row regex program + one canon-keyed window)
-    "q_temperature_mix", "q_url_canonical",
-    // round 7 (cont. session): winnowing — window-keyed hash aggregates +
-    // one (id, window) equi-join, the same lost-key gate as q_span_dedup —
-    // and the fp-keyed overlap self-join (df-capped against pair blowup)
-    "q_winnow", "q_winnow_pairs",
+    // round 7 (cont. session): URL canonicalization (per-row regex
+    // program + one canon-keyed window)
+    "q_url_canonical",
     // round 7 (cont. session): count(v) Cypher — left-join + hash agg —
     // and the relationship-variable scan (one projected edge scan)
     "q_cypher_countvar", "q_cypher_reltype",
@@ -166,9 +146,8 @@ class PlanShapeSpec extends SparkSpec {
     // equi-joins + props join + hash agg + TakeOrdered, like the others —
     // and the WITH pipeline (stage-1 plan + residual filter + projection)
     "q_cypher_numeric", "q_cypher_agg", "q_cypher_with",
-    // round 8 (cont. session): collect() — grouped sort_array aggregate —
-    // and the bigram LM — vocabulary-keyed joins + per-doc ordered folds
-    "q_cypher_collect", "q_bigram_surprisal",
+    // round 8 (cont. session): collect() — grouped sort_array aggregate
+    "q_cypher_collect",
     // round 8 (cont. session): WITH ... MATCH — stage-1 grouped plan
     // joined into the tail pattern's equi-join chain on the piped key —
     // and grouped count(DISTINCT): 2-hop equi-joins + distinct hash agg
@@ -184,26 +163,17 @@ class PlanShapeSpec extends SparkSpec {
   /** Bounded-by-construction BNLJ sites: scalar-aggregate thresholds
     * (prune), single-row tf-idf corpus stats, literal query vectors. */
   private val boundedBnlj = Set(
-    "q_processor_chain", "q_full_chain", "q_curation_pipeline",
+    "q_processor_chain", "q_full_chain",
     "q_prune_threshold", "q_tfidf_rerank", "q_vector_topk",
     "q_vector_diverse_topk", "q_ivf_topk_full_probe", "q_filtered_topk",
     "q_statement_diversity",
-    // single-row corpus-total frame joined onto every per-doc row
-    "q_unigram_surprisal", "q_surprisal_buckets", "q_dsir_weights",
     // round 7: 1-row broadcast totals (2m scalar / corpus doc count /
-    // drift totals / negative-sampling weight total / the weighted mix's
-    // feasibility scalar)
+    // drift totals / negative-sampling weight total)
     "q_modularity", "q_cooccurrence", "q_cluster_drift",
-    "q_negative_weights", "q_target_mix_tokens",
-    // round 7 (cont. session): the temperature mix's 1-row min(n/pa)
-    // scalar broadcast onto the |strata|-row rates frame
-    "q_temperature_mix",
+    "q_negative_weights",
     // round 8: the exact tfidf diversity's 1-row N-docs frame (the idf
     // numerator) crossed onto the per-term weight rows
-    "q_statement_diversity_tfidf",
-    // round 8 (cont. session): the bigram LM's 1-row corpus-total frame
-    // (the unigram back-off denominator) crossed onto the bigram terms
-    "q_bigram_surprisal")
+    "q_statement_diversity_tfidf")
     // (q_hits no longer appears here: the end-normalization rewrite
     // collects both maxima as driver literals, so its plan must be
     // BNLJ-free like the rest — keeping the stale allowance would mask a
@@ -237,19 +207,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(scanLine.isDefined, s"no PushedFilters in plan:\n$plan")
     assert(scanLine.get.contains("label"),
       s"label predicate not pushed to the scan: ${scanLine.get}")
-  }
-
-  test("windowedChunkDedup plans as hash aggregates — no window rank, " +
-    "no sort aggregate") {
-    // span dedup must pre-reduce map-side WITHOUT sorting: a Window rank or
-    // a SortAggregate (the min(struct) fallback — struct buffers aren't
-    // hash-aggregable) would sort every exploded chunk row at 100 TB
-    val plan = graft.ops.Dedup.windowedChunkDedup(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id", 8)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"window rank in span-dedup plan:\n$plan")
-    assert(!plan.contains("SortAggregate"), s"sort aggregate:\n$plan")
-    assert(plan.contains("HashAggregate"), s"no hash aggregate:\n$plan")
   }
 
   test("Misra-Gries sketch pass plans as ObjectHashAggregate, the exact " +
@@ -316,36 +273,6 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
-  test("duplicateSpanRemoval never sort-aggregates: the first-occurrence " +
-    "winners are atomic-min hash aggregates") {
-    val plan = graft.ops.Dedup.duplicateSpanRemoval(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id", 8)
-      .queryExecution.executedPlan.toString
-    // a struct-min formulation would plan SortAggregate + corpus-scale
-    // sorts around the span shuffle — the exact regression this pins
-    assert(!plan.contains("SortAggregate"), s"sort aggregate:\n$plan")
-    assert(!plan.contains("CartesianProduct"), s"cross product:\n$plan")
-  }
-
-  test("winnowingFingerprints is in-row: no join, no keyed exchange — the " +
-    "whole selection runs as array expressions on the document's row " +
-    "(only the conditional Spread round-robin may repartition an " +
-    "under-parallel scan)") {
-    val plan = graft.ops.Dedup.winnowingFingerprints(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id")
-      .queryExecution.executedPlan.toString
-    // Spread.perRowHeavy may add ONE round-robin repartition when the scan
-    // has fewer partitions than cores (r11 optimization: the single-file
-    // test corpus scans as one task); any KEYED exchange — the join/window
-    // machinery this test pins against — still fails.
-    val keyedExchanges = plan.linesIterator
-      .filter(_.contains("Exchange"))
-      .filterNot(_.contains("RoundRobinPartitioning")).toSeq
-    assert(keyedExchanges.isEmpty,
-      s"keyed shuffle in in-row op: ${keyedExchanges.mkString("; ")}\n$plan")
-    assert(!plan.contains("Join"), s"join in in-row op:\n$plan")
-  }
-
   test("unicode_normalize stays inside whole-stage codegen (no UDF " +
     "boundary, no fallback project)") {
     graft.GraftExtensions.registerAll(spark)
@@ -371,15 +298,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("Join"), s"join in prefix dedup:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cross product:\n$plan")
     assert(plan.contains("Window"), s"expected window plan:\n$plan")
-  }
-
-  test("gopherRules is a pure map: no exchange, no join, no aggregate") {
-    val plan = graft.ops.CorpusCleaning.gopherRules(
-        spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"shuffle in map-only op:\n$plan")
-    assert(!plan.contains("Join"), s"join in map-only op:\n$plan")
-    assert(!plan.contains("Aggregate"), s"aggregate in map-only op:\n$plan")
   }
 
   test("embedding-interaction rerank is one narrow pass + bounded top-k") {

@@ -140,67 +140,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("connectedComponents matches driver-side union-find on random graphs") {
-    val edgeGen = Gen.listOfN(12,
-      Gen.zip(Gen.choose(0L, 14L), Gen.choose(0L, 14L)))
-    (1 to 8).foreach { _ =>
-      val edges = edgeGen.sample.get.filter { case (a, b) => a != b }
-        .map { case (a, b) => if (a < b) (a, b) else (b, a) }.distinct
-      if (edges.nonEmpty) {
-        // driver-side union-find oracle
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val expect = nodes.map(n => n -> find(n)).toMap
-        // all three execution modes against the oracle: pure driver-local
-        // finisher (default cap), pure distributed star loop (cap 0), and
-        // the mid-loop handoff (cap 2: a couple of distributed rounds
-        // contract the core, then the local finisher takes over)
-        for (cap <- Seq(graft.ops.Dedup.CcLocalEdgeCap, 0L, 2L)) {
-          val got = graft.ops.Dedup
-            .connectedComponents(edges.toDF("id_a", "id_b"), localEdgeCap = cap)
-            .as[(Long, Long)].collect().toMap
-          assert(got == expect, s"cap=$cap edges=$edges")
-        }
-      }
-    }
-  }
-
-  test("setSimilarityJoin == driver-side brute force on random corpora " +
-    "at random thresholds (prefix-filter completeness property)") {
-    val wordGen = Gen.oneOf((0 until 12).map(i => s"w$i"))
-    val docGen = Gen.listOfN(8, wordGen).map(_.mkString(" "))
-    val tauGen = Gen.oneOf(0.2, 0.4, 0.6, 0.9)
-    (1 to 6).foreach { _ =>
-      val texts = Gen.listOfN(18, docGen).sample.get
-      val tau = tauGen.sample.get
-      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      // driver-side oracle on the SAME normalize+shingle sets
-      val sets = docs.map { case (id, t) =>
-        id -> graft.functions.WordShingles
-          .compute(org.apache.spark.unsafe.types.UTF8String.fromString(t), 3)
-          .toSet
-      }
-      val expect = (for {
-        (ia, sa) <- sets; (ib, sb) <- sets if ia < ib
-        inter = (sa & sb).size; uni = (sa | sb).size
-        if inter.toDouble >= tau * uni.toDouble
-      } yield (ia, ib, inter, uni)).toSet
-      val got = graft.ops.Dedup
-        .setSimilarityJoin(docs.toDF("doc_id", "text"), "text", "doc_id", tau)
-        .select("id_a", "id_b", "inter", "uni")
-        .as[(Long, Long, Int, Int)].collect().toSet
-      assert(got == expect, s"tau=$tau docs=$texts")
-    }
-  }
-
   test("GraphQuerySafety never passes a query containing a blocked keyword") {
     val kwGen = Gen.oneOf(graft.byokg.GraphQuerySafety.ModificationKeywords)
     val padGen = Gen.oneOf("", " ", "\n", "\t", "/* c */ ", "(", ")")
@@ -454,33 +393,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("yieldReport invariants on random corpora: canonical sums to " +
-    "global distinct, ratios exact") {
-    val docGen = Gen.listOfN(40,
-      Gen.zip(Gen.oneOf("g1", "g2", "g3"), Gen.choose(1, 8)))
-    (1 to 6).foreach { _ =>
-      val docs = docGen.sample.get.zipWithIndex.map { case ((g, t), i) =>
-        (i.toLong, s"text $t", g)
-      }
-      val out = graft.ops.Dedup.yieldReport(
-          docs.toDF("doc_id", "text", "source"), "text", "doc_id", "source")
-        .as[(String, Long, Long, Long)].collect()
-      assert(out.map(_._2).sum === docs.size.toLong)
-      assert(out.map(_._3).sum === docs.map(_._2).distinct.size.toLong)
-      out.foreach { case (g, n, c, dup) =>
-        assert(c >= 0 && c <= n)
-        assert(dup === math.round(1000000.0 * (n - c) / n), s"group $g")
-      }
-      // group-level canonical counts match the min-id owner's group
-      val owners = docs.groupBy(_._2).map { case (_, ds) =>
-        ds.minBy(_._1)._3
-      }.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      out.foreach { case (g, _, c, _) =>
-        assert(c === owners.getOrElse(g, 0L), s"group $g")
-      }
-    }
-  }
-
   test("rateAnomalies == driver-side trailing-stats model on random streams") {
     val evGen = Gen.listOfN(60,
       Gen.zip(Gen.oneOf("A", "B"), Gen.choose(0L, 499L)))
@@ -545,32 +457,5 @@ class PropertySpec extends SparkSpec {
       .toDF("u").select(T.canonicalUrl(col("u"))).as[String]
       .collect().toSet
     assert(variants == Set("https://example.com/x?a=1&b=2"))
-  }
-
-  test("winnowing guarantee on random corpora: any shared run of " +
-    ">= k+w-1 tokens yields a common fingerprint; density bound holds") {
-    val rnd = new scala.util.Random(7)
-    val vocab = (0 until 40).map(i => s"t$i")
-    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
-    (1 to 5).foreach { trial =>
-      val shared = words(6 + rnd.nextInt(6)).mkString(" ") // >= k+w-1 = 6
-      val docs = Seq(
-        (1L, (words(rnd.nextInt(8)) :+ shared).++(words(rnd.nextInt(8)))
-          .mkString(" ")),
-        (2L, (words(rnd.nextInt(8)) :+ shared).++(words(rnd.nextInt(8)))
-          .mkString(" "))).toDF("doc_id", "text")
-      val fps = graft.ops.Dedup
-        .winnowingFingerprints(docs, "text", "doc_id", k = 3, w = 4)
-        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("fp")))
-      val a = fps.filter(_._1 == 1L).map(_._2).toSet
-      val b = fps.filter(_._1 == 2L).map(_._2).toSet
-      assert((a & b).nonEmpty, s"trial $trial: no shared fingerprint")
-      // density: consecutive selected positions within a doc are < w apart
-      val pos = graft.ops.Dedup
-        .winnowingFingerprints(docs, "text", "doc_id", k = 3, w = 4)
-        .filter(col("id") === 1L).select(col("pos"))
-        .as[Int].collect().sorted
-      assert(pos.sliding(2).forall(p => p.length < 2 || p(1) - p(0) <= 4))
-    }
   }
 }

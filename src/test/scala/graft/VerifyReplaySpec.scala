@@ -2,9 +2,9 @@ package graft
 
 import scala.sys.process.{Process, ProcessLogger}
 
-/** In-test replay of the driver's DuckDB-oracle compare for the two queries
-  * whose round-2 driver artifact recorded hash_match=false while full local
-  * replays passed (q_pack_sequences, q_repetition_profile). Writes the same
+/** In-test replay of the DuckDB-oracle compare for the loop-unrolling
+  * oracles whose engine parity leans hardest on ordered-fold arithmetic
+  * (deterministic-KMeans IVF, agentic stub loop). Writes the same
   * parquet + oracle_sql.json shape as `graft.Verify` and shells out to
   * `tools/compare.py`, so any environment sensitivity (float rendering,
   * partitioning nondeterminism) surfaces in `sbt test` instead of only in
@@ -13,11 +13,7 @@ import scala.sys.process.{Process, ProcessLogger}
   */
 class VerifyReplaySpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.01"
-  // the two once-disputed hasher queries, plus the two loop-unrolling
-  // oracles (deterministic-KMeans IVF, agentic stub loop) whose engine
-  // parity leans hardest on ordered-fold arithmetic
-  private val names = Set("q_pack_sequences", "q_repetition_profile",
-    "q_ivf_kmeans", "q_agentic")
+  private val names = Set("q_ivf_kmeans", "q_agentic")
 
   test("driver-shaped DuckDB replay passes for the disputed queries") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists(),

@@ -5,7 +5,8 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 
 For each query parquet in <verifyOutDir>, runs the matching SQL from
 oracle_sql.json in DuckDB (tables = bare names over <sfDir> parquet) and
-compares schema-sorted values row by row.
+compares schema-sorted values row by row. Exits 1 when any query is not a
+pass (a FAIL line: missing parquet, error, schema/row-count/value mismatch).
 """
 import sys, json, glob, os
 import duckdb
@@ -54,6 +55,7 @@ def main(sf_dir, out_dir):
     for k, v in sorted(results.items()):
         print(f"{'PASS' if v.startswith('OK') else 'FAIL':4} {k:30} {v}")
     print(f"\n{ok}/{len(results)} pass")
+    return ok == len(results)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(0 if main(sys.argv[1], sys.argv[2]) else 1)

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Oracle type-parity gate: the driver's hasher is type-aware (arrow
 encodings), so a DuckDB oracle emitting HUGEINT/DECIMAL where Spark emits
-int64 hash-fails even when every value is identical (the q_pack_sequences
-class of bug). This script DESCRIBEs each oracle in DuckDB and compares
+int64 hash-fails even when every value is identical (DuckDB's SUM(BIGINT)
+returns HUGEINT). This script DESCRIBEs each oracle in DuckDB and compares
 canonicalized column types against the Spark DataFrame schema.
 
 Usage: python3 tools/typecheck.py <inputJson>
