@@ -1,138 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.CorpusCleaning
 
 class CorpusCleaningSpec extends SparkSpec {
   import spark.implicits._
-
-  test("c4LineClean keeps only terminal-punctuated >=5-word unblocked " +
-    "lines and kills blocked/short pages") {
-    val good = Seq(
-      "This line has enough words to survive.",
-      "no terminal punctuation so it drops",
-      "short line.",
-      "Please enable JavaScript to view this content.",
-      "Another perfectly fine sentence stays in here!",
-      "A third keeper sentence makes the page count?").mkString("\n")
-    val lorem = "Lorem Ipsum dolor sit amet consectetur.\n" + good
-    val code = good + "\nfunction f() { return 1; }."
-    val thin = "Only one good line survives the cleaning here.\nnope\nshort."
-    val out = CorpusCleaning.c4LineClean(
-        Seq(("g", good), ("l", lorem), ("c", code), ("t", thin))
-          .toDF("id", "text"), "text", "id")
-      .collect().map(r => r.getAs[String]("id") ->
-        (r.getAs[Int]("n_lines"), r.getAs[Int]("n_lines_kept"),
-          r.getAs[Boolean]("kept"), r.getAs[String]("text_clean"))).toMap
-    val (n, k, kept, clean) = out("g")
-    assert((n, k, kept) == (6, 3, true))
-    assert(clean == Seq(
-      "This line has enough words to survive.",
-      "Another perfectly fine sentence stays in here!",
-      "A third keeper sentence makes the page count?").mkString("\n"))
-    // the javascript line dropped even though terminal + long
-    assert(!clean.toLowerCase.contains("javascript"))
-    // page blocklists kill the page regardless of surviving lines
-    assert(!out("l")._3 && !out("c")._3)
-    // fewer than minKeptLines kept → page dropped, drops still audited
-    assert(out("t") == ((3, 1, false,
-      "Only one good line survives the cleaning here.")))
-  }
-
-  test("gopherRules: each rule trips on its targeted fixture") {
-    def doc(s: String) = Seq(("d", s)).toDF("id", "text")
-    def rules(s: String): Map[String, Any] = {
-      val r = CorpusCleaning.gopherRules(doc(s), "text", "id",
-        minWords = 5).collect().head
-      r.schema.fieldNames.zipWithIndex.map { case (f, i) => f -> r.get(i) }.toMap
-    }
-    val base = "the cat and the dog have fun with that red ball of wool " +
-      "they chase it around the garden every single day without fail"
-    val b = rules(base)
-    assert(b("pass") == true, b.toString)
-    assert(b("r_stopwords") == true && b("r_alpha_words") == true)
-    // word count below the floor
-    assert(rules("the of and")("r_word_count") == false)
-    // mean word length out of [3,10] (all 1-char words)
-    val short = rules(("a " * 30).trim)
-    assert(short("r_mean_word_len") == false)
-    // symbol ratio: many hashes vs few words
-    assert(rules("## ## ## the of")("r_symbol_ratio") == false)
-    // bullet lines > 10%
-    val bullets = (Seq("- item one here now", "- item two here now") ++
-      Seq.fill(3)("plain text line here")).mkString("\n")
-    assert(rules(bullets)("r_bullet_lines") == false)
-    // ellipsis-ending lines >= 30%
-    val ell = Seq("to be continued...", "more soon...",
-      "a normal closing line", "another normal line").mkString("\n")
-    assert(rules(ell)("r_ellipsis_lines") == false)
-    // alphabetic-word fraction < 80%
-    assert(rules("123 456 789 000 111 the of")("r_alpha_words") == false)
-    // fewer than 2 stopwords
-    assert(rules("cats dogs birds fish mice")("r_stopwords") == false)
-    // duplicate lines beyond 30%
-    val dup = (Seq.fill(4)("the same line again and again") :+
-      "one unique line of text here").mkString("\n")
-    val d = rules(dup)
-    assert(d("r_dup_lines") == false && d("r_dup_line_chars") == false)
-    assert(d("dup_line_e6") == 600000L)
-  }
-
-  test("gopherRules micro-unit stats are exact integers") {
-    val r = CorpusCleaning.gopherRules(
-        Seq(("x", "alpha beta gamma")).toDF("id", "text"), "text", "id",
-        minWords = 1).collect().head
-    assert(r.getAs[Long]("word_count") == 3L)
-    // mean word len = 14/3 chars → 4666666 micro-units (floor)
-    assert(r.getAs[Long]("mean_word_len_e6") == 4666666L)
-    assert(r.getAs[Long]("alpha_word_e6") == 1000000L)
-    assert(r.getAs[Long]("symbol_ratio_e6") == 0L)
-  }
-
-  test("both cleaners run UNCHANGED on a stream (stateless map ops): " +
-    "streamed output equals the batch run") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = Seq(
-      (1L, "This stream line carries enough words to survive.\nshort."),
-      (2L, "the cat and dog have fun with that ball of wool all day"),
-      (3L, "Lorem ipsum dolor sit amet consectetur.\n" +
-        "A fine surviving sentence would have lived here today."))
-    val input = MemoryStream[(Long, String)]
-    val cleaned = CorpusCleaning.c4LineClean(
-      input.toDS().toDF("doc_id", "text"), "text", "doc_id",
-      minKeptLines = 1)
-    val scored = CorpusCleaning.gopherRules(
-      input.toDS().toDF("doc_id", "text"), "text", "doc_id", minWords = 5)
-    val q1 = cleaned.writeStream.format("memory").queryName("c4_out")
-      .outputMode(OutputMode.Append()).start()
-    val q2 = scored.writeStream.format("memory").queryName("gopher_out")
-      .outputMode(OutputMode.Append()).start()
-    input.addData(rows.take(2): _*); q1.processAllAvailable(); q2.processAllAvailable()
-    input.addData(rows.drop(2): _*); q1.processAllAvailable(); q2.processAllAvailable()
-    q1.stop(); q2.stop()
-    val batchDf = rows.toDF("doc_id", "text")
-    assert(spark.table("c4_out").collect().map(_.toSeq).toSet ==
-      CorpusCleaning.c4LineClean(batchDf, "text", "doc_id",
-        minKeptLines = 1).collect().map(_.toSeq).toSet)
-    assert(spark.table("gopher_out").collect().map(_.toSeq).toSet ==
-      CorpusCleaning.gopherRules(batchDf, "text", "doc_id",
-        minWords = 5).collect().map(_.toSeq).toSet)
-  }
-
-  test("degenerate inputs: empty text and empty lines don't divide by zero") {
-    val out = CorpusCleaning.gopherRules(
-      Seq(("e", ""), ("n", "\n\n")).toDF("id", "text"), "text", "id")
-      .collect().map(r => r.getAs[String]("id") -> r).toMap
-    assert(out("e").getAs[Long]("word_count") == 0L)
-    assert(out("e").isNullAt(out("e").fieldIndex("mean_word_len_e6")))
-    assert(out("e").getAs[Boolean]("pass") == false) // word count floor
-    val c4 = CorpusCleaning.c4LineClean(
-      Seq(("e", "")).toDF("id", "text"), "text", "id").collect().head
-    assert(c4.getAs[Int]("n_lines_kept") == 0 &&
-      !c4.getAs[Boolean]("kept") && c4.getAs[String]("text_clean") == "")
-  }
 
   test("canonicalUrl and unicode_normalize run UNCHANGED on a stream " +
     "(stateless column exprs): streamed output equals the batch run") {
